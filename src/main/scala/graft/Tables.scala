@@ -17,20 +17,27 @@ object Tables {
     * parquet schema INFERENCE at plan time — a directory listing plus a
     * footer read — and the engine loads each table hundreds of times per
     * bench sweep (`registerViews` alone is 7 loads × 24 SQL queries × 2
-    * sweeps). A corpus dir is an immutable input within a session (the
-    * same contract [[Bench.scaledShufflePartitions]]'s dirBytes memo
-    * states), so one inference per path is the truth; `.schema(st)`
+    * sweeps). One inference per table content is the truth; `.schema(st)`
     * then skips inference entirely. Result-identical by construction:
     * the supplied schema IS the inferred one, so analysis, pruning and
-    * pushdown see byte-identical types. Keyed on the path only — tests
-    * and probes that point at different sfDirs each get their own entry.
+    * pushdown see byte-identical types.
+    *
+    * Keyed on content, not on the path alone: each entry keeps the
+    * [[graft.sources.Listing]] signature (path, length, mtime of every
+    * data file) it was inferred under, and a `load` whose fresh listing
+    * differs infers again and replaces the entry. A table rewritten in
+    * place within one JVM is therefore read under its new schema. The
+    * check is one `listStatus` of the table directory.
     */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+    String, (graft.sources.Listing.Signature, org.apache.spark.sql.types.StructType)]()
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val p = s"$sfDir/$name.parquet"
-    val st = schemaCache.computeIfAbsent(p, _ => spark.read.parquet(p).schema)
+    val sig = graft.sources.Listing.signature(p, spark.sparkContext.hadoopConfiguration)
+    val st = schemaCache.compute(p, (_, hit) =>
+      if (hit != null && hit._1 == sig) hit
+      else (sig, spark.read.parquet(p).schema))._2
     spark.read.schema(st).parquet(p)
   }
 

@@ -520,7 +520,10 @@ object SqlQueries {
   private def runSharedSpreadLineitem(name: String)(s: SparkSession, d: String): DataFrame = {
     registerViews(s, d)
     Tables.spread(s, d, "lineitem").createOrReplaceTempView("lineitem_spread")
-    s.sql(shared(name).replace("FROM lineitem\n", "FROM lineitem_spread\n"))
+    val rewritten = shared(name).replace("FROM lineitem\n", "FROM lineitem_spread\n")
+    // a text edit that stops matching would silently read the plain view
+    require(rewritten != shared(name), s"$name: no 'FROM lineitem' line to point at the spread view")
+    s.sql(rewritten)
   }
 
   /** Q21 ENGINE plan — the classic aggregate rewrite. The textbook

@@ -1,47 +1,77 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-/** The reference's ingest pipeline (SURVEY.md §2 Part A rows A2-A5, A15,
-  * A18) re-expressed as one Spark batch job.
+/** The reference's ingest pipeline and chunk catalog (SURVEY.md §2 Part A
+  * rows A2-A5, A7, A8, A15, A18) over a parquet catalog partitioned by
+  * `dataset_id`.
   *
-  * Reference flow (/root/reference/src/data_manager.rs:188-276): download
-  * chunk → decode → dedup-on-id (`Entry::Vacant` gate, :223-256) → quota
-  * admission (`MAX_SIZE_ON_DISK`, :19, :229-239) → transactional persist
-  * (/root/reference/src/rocksdb_storage_engine.rs:105-136) with rollback
-  * on error (:258-275).
+  * Reference flow (`data_manager.rs:188-276`): download chunk → decode →
+  * dedup-on-id (`Entry::Vacant` gate, :223-256) → quota admission
+  * (`MAX_SIZE_ON_DISK`, :19, :229-239) → transactional persist
+  * (`rocksdb_storage_engine.rs:105-136`) with rollback on error
+  * (:258-275). The live catalog sits in memory (`data_manager.rs:21-22`)
+  * and find-and-lock probes a range index over it
+  * (`rocksdb_storage_engine.rs:34-50`).
   *
-  * Spark restatement: source read → `left_anti` dedup against the catalog
-  * → cumulative-size quota gate → atomic `append` write (Spark's job
-  * commit protocol plays the optimistic transaction, SURVEY.md §3.1).
-  * Immutable files make the reference's semaphore pinning/rollback
-  * machinery unnecessary (SURVEY.md §1.4).
+  * Spark restatement: the catalog's rows live on disk as parquet, and on
+  * the driver as one [[CatalogIndex]] per catalog path — the reference's
+  * in-memory map. Every call first checks the index against a fresh
+  * `listStatus` walk of the catalog ([[Listing]]): when any parquet file
+  * was added, removed or rewritten, by this session or another process,
+  * the index is reloaded from exactly the listed files before use. Then:
   *
-  * Scale: the anti-join ships only 32-byte ids; the quota check is one
-  * aggregate over the (small) catalog, mirroring the reference's "fast
-  * (a bit inaccurate)" pre-check comment (:229-231) — admission is
-  * evaluated against the catalog total at job start, not re-checked
-  * per-row.
+  *  - [[ingest]] dedups against the index's id set and admits against its
+  *    size total, and appends the fresh rows in one write job (Spark's job
+  *    commit plays the optimistic transaction, SURVEY.md §3.1);
+  *  - [[findChunk]] filters the index's rows for one dataset without a
+  *    Spark job;
+  *  - [[deleteChunk]] and [[compact]] rewrite the catalog from the index
+  *    and promote the rewrite atomically.
+  *
+  * Each write stores its post-write rows under the listing it left, so
+  * the next call pays no reload. Immutable files make the reference's
+  * semaphore pinning/rollback machinery unnecessary (SURVEY.md §1.4).
+  * Writers are expected one at a time per catalog, as before: the listing
+  * check keeps readers current, it does not serialise writers.
+  *
+  * Scale: the index holds catalog rows (chunk metadata, tens of bytes
+  * each), never chunk data; admission is evaluated against the catalog
+  * total at call time, like the reference's "fast (a bit inaccurate)"
+  * pre-check (:229-231), not re-checked per row.
   */
 object Ingest {
 
-  /** Engine error ADT — models `Error` (/root/reference/src/lib.rs:47-59). */
+  /** Engine error ADT — models `Error` (`lib.rs:47-59`). */
   sealed trait IngestError
-  /** `Error::MaxSizeAllocated` (/root/reference/src/lib.rs:51-52). */
+  /** `Error::MaxSizeAllocated` (`lib.rs:51-52`). */
   final case class MaxSizeAllocated(wouldBe: Long, cap: Long) extends IngestError
 
   final case class IngestResult(
       ingested: Long, deduped: Long, rejected: Option[IngestError])
 
-  /** Hadoop FileSystem for `path` — resolves by URI scheme, so the same
-    * code serves `file://` (local, tested) and `s3a://`/`hdfs://` (cluster)
-    * without change; raw `java.io.File` would pin the catalog to local
-    * disk, which has no 100 TB analog. */
+  /** Schema of a catalog with no parquet files yet. */
+  private val EmptySchema = StructType.fromDDL(
+    "chunk_id STRING, dataset_id STRING, block_start BIGINT, " +
+      "block_end BIGINT, size_bytes BIGINT")
+
+  /** Hadoop FileSystem for `path` and the path qualified on it — resolves
+    * by URI scheme, so the same code serves `file://` (local, tested) and
+    * `s3a://`/`hdfs://` (cluster) without change; raw `java.io.File`
+    * would pin the catalog to local disk, which has no 100 TB analog. */
   private def fsFor(spark: SparkSession, path: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+      : (org.apache.hadoop.fs.FileSystem, Path) = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (fs, fs.makeQualified(p))
   }
 
   /** Atomically promote a rewritten catalog at `tmp` over `dst` by
@@ -56,9 +86,8 @@ object Ingest {
     * IngestSpec can drive the failure branches through a FileSystem
     * wrapper that vetoes the target rename. */
   private[graft] def promote(fs: org.apache.hadoop.fs.FileSystem,
-      tmp: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path,
-      what: String): Unit = {
-    val aside = new org.apache.hadoop.fs.Path(dst.toString + "_old")
+      tmp: Path, dst: Path, what: String): Unit = {
+    val aside = new Path(dst.toString + "_old")
     if (fs.exists(aside) && !fs.delete(aside, true))
       throw new IllegalStateException(
         s"$what: could not clear stale aside $aside; rewrite left at $tmp")
@@ -75,79 +104,219 @@ object Ingest {
     if (fs.exists(aside)) fs.delete(aside, true)
   }
 
-  /** Expected catalog schema: chunk_id, dataset_id, block_start,
-    * block_end, size_bytes (+ free columns). */
-  def readCatalog(spark: SparkSession, catalogPath: String): DataFrame = {
-    // partitionBy nests files under dataset_id=<v>/ dirs — probe with a
-    // recursive listing (on object stores this is one LIST call, not a
-    // directory walk)
-    val (fs, p) = fsFor(spark, catalogPath)
-    def hasParquet: Boolean = {
-      val it = fs.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext) found = it.next().getPath.getName.endsWith(".parquet")
-      found
+  // ------------------------------------------------------ catalog index
+
+  /** Driver-side copy of one catalog: its rows exactly as [[readCatalog]]
+    * returns them (schema, column order, partition-column type), and the
+    * [[Listing]] signature of the files they were read from. */
+  private final case class CatalogIndex(listing: Listing.Signature,
+      schema: StructType, rows: Vector[Row]) {
+    private def values(name: String): Iterator[Any] = {
+      val i = schema.fieldIndex(name)
+      rows.iterator.map(_.get(i))
     }
-    if (fs.exists(p) && hasParquet)
-      spark.read.parquet(catalogPath)
-    else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "chunk_id STRING, dataset_id STRING, block_start BIGINT, " +
-            "block_end BIGINT, size_bytes BIGINT"))
+    lazy val byDataset: Map[Any, Vector[Row]] =
+      rows.groupBy(_.get(schema.fieldIndex("dataset_id")))
+    lazy val ids: Set[Any] = values("chunk_id").filter(_ != null).toSet
+    lazy val totalBytes: Long =
+      values("size_bytes").collect { case n: Number => n.longValue }.sum
+    /** Data columns: every column but the partition column, in order. */
+    def data: Seq[StructField] = schema.filterNot(_.name == "dataset_id")
+    def frame(spark: SparkSession, rs: Seq[Row] = rows): DataFrame =
+      spark.createDataFrame(rs.asJava, schema)
+  }
+
+  /** One entry per qualified catalog path; a change replaces the entry. */
+  private val indexes = new java.util.concurrent.ConcurrentHashMap[String, CatalogIndex]()
+
+  /** Number of catalog paths indexed in this JVM (tests pin one entry
+    * per path). */
+  private[graft] def indexedPaths: Int = indexes.size
+
+  /** The index of `catalogPath`, reloaded when the files on disk no
+    * longer match the listing it was loaded from. */
+  private def index(spark: SparkSession, catalogPath: String): CatalogIndex = {
+    val (fs, root) = fsFor(spark, catalogPath)
+    val files = Listing.parquetFiles(fs, root)
+    val sig = Listing.signature(files)
+    indexes.compute(root.toString, (_, cur) =>
+      if (cur != null && cur.listing == sig) cur else load(spark, root, files, sig))
+  }
+
+  /** Read the listed files themselves (not a fresh listing of the
+    * directory), so the signature and the contents cannot disagree. */
+  private def load(spark: SparkSession, root: Path, files: Vector[FileStatus],
+      sig: Listing.Signature): CatalogIndex =
+    if (files.isEmpty) CatalogIndex(sig, EmptySchema, Vector.empty)
+    else {
+      val df = spark.read.option("basePath", root.toString)
+        .parquet(files.map(_.getPath.toString): _*)
+      CatalogIndex(sig, df.schema, df.collect().toVector)
+    }
+
+  /** Store what a write left at `catalogPath`: `rows` (the `data`
+    * columns, then the dataset_id value each row was written under),
+    * typed the way a scan of the listing now on disk types them — Spark's
+    * own partition inference over that listing, run on the driver. When
+    * the rows cannot be matched to the partition directories exactly,
+    * the entry is dropped instead and the next call reloads it. */
+  private def settle(spark: SparkSession, catalogPath: String,
+      data: Seq[StructField], rows: Seq[Row]): Unit = {
+    val (fs, root) = fsFor(spark, catalogPath)
+    val files = Listing.parquetFiles(fs, root)
+    val sig = Listing.signature(files)
+    val settled =
+      if (files.isEmpty) Option.when(rows.isEmpty)(CatalogIndex(sig, EmptySchema, Vector.empty))
+      else {
+        val spec = partitionSpec(spark, root, files)
+        val part = spec.partitionColumns
+        // partition value as written (the directory name) → value as read
+        val typed = spec.partitions.map { pp =>
+          ExternalCatalogUtils.unescapePathName(
+            pp.path.getName.stripPrefix("dataset_id=")) ->
+            CatalystTypeConverters.convertToScala(pp.values.get(0, part.head.dataType),
+              part.head.dataType)
+        }.toMap
+        val keys = rows.map(r => written(r.get(data.size)).flatMap(typed.get))
+        Option.when(part.fieldNames.sameElements(Array("dataset_id")) && keys.forall(_.isDefined))(
+          CatalogIndex(sig, StructType(data.map(_.copy(nullable = true)) :+ part.head),
+            rows.lazyZip(keys).map((r, k) => Row.fromSeq(r.toSeq.init :+ k.get)).toVector))
+      }
+    settled match {
+      case Some(ix) => indexes.put(root.toString, ix)
+      case None => indexes.remove(root.toString)
+    }
+  }
+
+  /** The directory value Spark's partitioned writer gives `v`; None for
+    * types whose string form is not worth reproducing here. */
+  private def written(v: Any): Option[String] = v match {
+    case null | "" => Some(ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
+    case s: String => Some(s)
+    case n @ (_: Int | _: Long) => Some(n.toString)
+    case _ => None
+  }
+
+  /** Spark's partition discovery over an already-listed catalog: the
+    * file index is handed the listing, so it lists nothing itself. */
+  private def partitionSpec(spark: SparkSession, root: Path, files: Vector[FileStatus]) = {
+    val listed = new FileStatusCache {
+      override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
+        Option.when(p == root)(files.toArray)
+      override def putLeafFiles(p: Path, leaves: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    new InMemoryFileIndex(spark, Seq(root), Map.empty, None, listed).partitionSpec()
+  }
+
+  /** `rows` (in `from`'s column order) as `data` columns then dataset_id. */
+  private def layout(from: StructType, data: Seq[StructField], rows: Seq[Row]): Seq[Row] = {
+    val ix = (data.map(_.name) :+ "dataset_id").map(from.fieldIndex)
+    rows.map(r => Row.fromSeq(ix.map(r.get)))
+  }
+
+  /** Write catalog rows in one task, sorted by (dataset_id, block_start):
+    * one file per dataset partition, with tight parquet min/max row-group
+    * stats — the columnar replacement for the reference's
+    * order-preserving big-endian key clustering
+    * (`rocksdb_storage_engine.rs:180-192`). */
+  private def writeRows(spark: SparkSession, rows: Seq[Row], schema: StructType,
+      mode: SaveMode, path: String): Unit =
+    spark.createDataFrame(rows.asJava, schema).coalesce(1)
+      .sortWithinPartitions("dataset_id", "block_start")
+      .write.mode(mode).partitionBy("dataset_id").parquet(path)
+
+  // ------------------------------------------------------ public surface
+
+  /** The catalog as a parquet scan: chunk_id, block_start, block_end,
+    * size_bytes (+ free columns), then the partition column dataset_id,
+    * typed by Spark's partition inference (numeric-looking ids read back
+    * as INT). A catalog with no parquet files reads as an empty frame. */
+  def readCatalog(spark: SparkSession, catalogPath: String): DataFrame = {
+    val (fs, p) = fsFor(spark, catalogPath)
+    if (Listing.parquetFiles(fs, p).nonEmpty) spark.read.parquet(catalogPath)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], EmptySchema)
   }
 
   /** Ingest a batch of chunk rows into the catalog at `catalogPath`.
     *
     * 1. dedup within the batch (first occurrence per chunk_id wins) and
-    *    against already-persisted ids (idempotent replay, A4);
-    * 2. quota: if existing + incoming total exceeds `maxSizeOnDisk`,
+    *    against the index's ids (idempotent replay, A4);
+    * 2. quota: if the index's total + incoming exceeds `maxSizeOnDisk`,
     *    reject the whole batch with [[MaxSizeAllocated]] (the reference
     *    rejects per-chunk; batch-level is the job-granularity analog);
-    * 3. atomic append, partitioned by dataset_id so lookups prune.
-    */
+    * 3. atomic append, partitioned by dataset_id.
+    *
+    * Spark jobs: one to dedup the batch within itself, one to write. */
   def ingest(spark: SparkSession, catalogPath: String, batch: DataFrame,
       maxSizeOnDisk: Long = 1000000000000L): IngestResult = {
-    val catalog = readCatalog(spark, catalogPath)
-    val fresh = batch
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("chunk_id")
-          // order by every column so the kept row is deterministic even
-          // when a batch re-sends a chunk_id with corrected fields
-          .orderBy("dataset_id", "block_start", "block_end", "size_bytes")))
-      .filter(col("rn") === 1).drop("rn")
-      .join(catalog.select("chunk_id"), Seq("chunk_id"), "left_anti")
-      .cache()
-    try {
-      val freshCount = fresh.count()
-      val deduped = batch.count() - freshCount
-      val existing = catalog.agg(coalesce(sum("size_bytes"), lit(0L))).head.getLong(0)
-      val incoming = fresh.agg(coalesce(sum("size_bytes"), lit(0L))).head.getLong(0)
-      if (existing + incoming > maxSizeOnDisk) {
-        IngestResult(0, deduped, Some(MaxSizeAllocated(existing + incoming, maxSizeOnDisk)))
-      } else {
-        if (freshCount > 0)
-          // sortWithinPartitions(block_start) at write time: tight parquet
-          // min/max row-group stats per file — the columnar replacement for
-          // the reference's order-preserving big-endian key clustering
-          // (/root/reference/src/rocksdb_storage_engine.rs:180-192)
-          fresh.sortWithinPartitions("dataset_id", "block_start")
-            .write.mode(SaveMode.Append)
-            .partitionBy("dataset_id").parquet(catalogPath)
-        IngestResult(freshCount, deduped, None)
+    val idx = index(spark, catalogPath)
+    val byId = Window.partitionBy("chunk_id")
+    val n = batch.schema.size
+    // the kept row per id carries the id's row count, so the same job
+    // yields the batch size
+    val kept = batch
+      .withColumn("_ingest_n", count(lit(1)).over(byId))
+      .withColumn("_ingest_rn", row_number().over(byId
+        // order by every column so the kept row is deterministic even
+        // when a batch re-sends a chunk_id with corrected fields
+        .orderBy("dataset_id", "block_start", "block_end", "size_bytes")))
+      .filter(col("_ingest_rn") === 1)
+      .collect()
+    val id = batch.schema.fieldIndex("chunk_id")
+    val size = batch.schema.fieldIndex("size_bytes")
+    val fresh = kept.toVector.map(r => Row.fromSeq(r.toSeq.take(n)))
+      .filter(r => r.isNullAt(id) || !idx.ids(r.get(id)))
+    val deduped = kept.map(_.getLong(n)).sum - fresh.size
+    val wouldBe = idx.totalBytes +
+      fresh.map(_.get(size)).collect { case v: Number => v.longValue }.sum
+    if (wouldBe > maxSizeOnDisk)
+      IngestResult(0, deduped, Some(MaxSizeAllocated(wouldBe, maxSizeOnDisk)))
+    else {
+      if (fresh.nonEmpty) {
+        writeRows(spark, fresh, batch.schema, SaveMode.Append, catalogPath)
+        val data = batch.schema.filterNot(_.name == "dataset_id")
+        def shape(fs: Seq[StructField]) = fs.map(f => (f.name, f.dataType))
+        // a batch whose columns differ from the catalog's leaves the scan
+        // schema to whichever footer Spark reads first: reload instead
+        if (idx.listing.isEmpty || shape(data) == shape(idx.data))
+          settle(spark, catalogPath, if (idx.listing.isEmpty) data else idx.data,
+            layout(idx.schema, idx.data, idx.rows) ++ layout(batch.schema, data, fresh))
+        else indexes.remove(fsFor(spark, catalogPath)._2.toString)
       }
-    } finally fresh.unpersist()
+      IngestResult(fresh.size, deduped, None)
+    }
   }
 
-  /** A7 read path over the persisted catalog: interval-containment lookup
-    * with dataset partition pruning (replaces the RocksDB range-index
-    * probe, /root/reference/src/rocksdb_storage_engine.rs:34-50). */
+  /** A7 find: the chunks of `datasetId` whose block range contains
+    * `blockNumber` (`block_start <= blockNumber < block_end`; every one
+    * of them when ranges overlap), answered from the catalog index — the
+    * reference's range-index probe (`rocksdb_storage_engine.rs:34-50`)
+    * without a Spark job per call.
+    *
+    * The result is a local DataFrame with [[readCatalog]]'s schema and
+    * column order, holding a snapshot taken at call time, like
+    * [[SnapshotTable]]'s "resolve HEAD once": a later write to the
+    * catalog does not change a frame already returned. Collecting it
+    * launches no job. */
+  def findChunk(spark: SparkSession, catalogPath: String,
+      datasetId: String, blockNumber: Long): DataFrame = {
+    val idx = index(spark, catalogPath)
+    // a non-string dataset_id (numeric-looking ids) compares under
+    // Spark's coercion rules: hand the predicate every row
+    val candidates =
+      if (idx.schema("dataset_id").dataType == StringType)
+        idx.byDataset.getOrElse(datasetId, Vector.empty)
+      else idx.rows
+    idx.frame(spark, candidates)
+      .filter(col("dataset_id") === datasetId &&
+        col("block_start") <= blockNumber && lit(blockNumber) < col("block_end"))
+  }
+
   /** Dead-letter decode lane: split a raw text batch into typed good
     * rows and quarantined rows WITH a reason, in ONE cached scan — the
     * production answer to the reference ingest's per-chunk decode
-    * `Result` (/root/reference/src/data_manager.rs): at 100 TB a single
+    * `Result` (`data_manager.rs`): at 100 TB a single
     * malformed row must neither kill the job (ANSI throw) nor vanish
     * silently (permissive-null), it must land in a quarantine table a
     * human can replay. All parse lanes are `try_cast` (NULL, never
@@ -194,39 +363,37 @@ object Ingest {
     def release(): Unit = { parsed.unpersist(blocking = false); () }
   }
 
-  def findChunk(spark: SparkSession, catalogPath: String,
-      datasetId: String, blockNumber: Long): DataFrame =
-    readCatalog(spark, catalogPath)
-      .filter(col("dataset_id") === datasetId &&
-        col("block_start") <= blockNumber && lit(blockNumber) < col("block_end"))
-
   /** Catalog compaction: rewrite each dataset partition's accumulated
     * small append files into one sorted file (the small-files problem —
     * every append job adds files; scans degrade as file count grows).
-    * Atomic directory swap like [[deleteChunk]]; readers on the old
-    * snapshot are unaffected. Returns the row count. */
+    * The rewrite is written from the index and promoted atomically like
+    * [[deleteChunk]]; readers on the old snapshot are unaffected.
+    * Returns the row count. */
   def compact(spark: SparkSession, catalogPath: String): Long = {
-    val cat = readCatalog(spark, catalogPath)
-    val n = cat.count()
-    val tmp = catalogPath + "_compact"
-    cat.repartition(col("dataset_id"))
-      .sortWithinPartitions("dataset_id", "block_start")
-      .write.mode(SaveMode.Overwrite).partitionBy("dataset_id").parquet(tmp)
-    val (fs, dst) = fsFor(spark, catalogPath)
-    promote(fs, new org.apache.hadoop.fs.Path(tmp), dst, "compact")
-    n
+    val idx = index(spark, catalogPath)
+    rewrite(spark, catalogPath, idx, idx.rows, "_compact", "compact")
   }
 
   /** A8/A14 delete path: rewrite the catalog without the chunk id —
     * atomic overwrite; concurrent readers keep their snapshot (the
-    * drain-readers semantics for free, SURVEY.md §3.3). */
+    * drain-readers semantics for free, SURVEY.md §3.3). Returns the
+    * number of rows that remain. */
   def deleteChunk(spark: SparkSession, catalogPath: String, chunkId: String): Long = {
-    val remaining = readCatalog(spark, catalogPath).filter(col("chunk_id") =!= chunkId)
-    val n = remaining.count()
-    val tmp = catalogPath + "_rewrite"
-    remaining.write.mode(SaveMode.Overwrite).partitionBy("dataset_id").parquet(tmp)
+    val idx = index(spark, catalogPath)
+    // a filter over the local frame: no job, and `=!=`'s null semantics
+    val remaining = idx.frame(spark).filter(col("chunk_id") =!= chunkId).collect().toVector
+    rewrite(spark, catalogPath, idx, remaining, "_rewrite", "deleteChunk")
+  }
+
+  /** Write `rows` beside the catalog, promote them over it, and store
+    * them as the new index state. Returns the row count. */
+  private def rewrite(spark: SparkSession, catalogPath: String, idx: CatalogIndex,
+      rows: Vector[Row], suffix: String, what: String): Long = {
+    val tmp = catalogPath + suffix
+    writeRows(spark, rows, idx.schema, SaveMode.Overwrite, tmp)
     val (fs, dst) = fsFor(spark, catalogPath)
-    promote(fs, new org.apache.hadoop.fs.Path(tmp), dst, "deleteChunk")
-    n
+    promote(fs, new Path(tmp), dst, what)
+    settle(spark, catalogPath, idx.data, layout(idx.schema, idx.data, rows))
+    rows.size
   }
 }

@@ -361,10 +361,7 @@ object SnapshotTable {
           case (mn, mx) => mx >= kLo && mn <= kHi
         })
       }
-      def readFiles(fs: Seq[FileEntry]): DataFrame = schema match {
-        case Some(st) => spark.read.schema(st).parquet(fs.map(_.path): _*)
-        case None => spark.read.parquet(fs.map(_.path): _*)
-      }
+      def readFiles(fs: Seq[FileEntry]): DataFrame = readUnder(spark, schema, fs.map(_.path))
       // stage 2: one candidate scan → file paths holding a matched key.
       // The collect is FILE-count bounded (manifest scale, not data).
       val touchedPaths: Set[String] =
@@ -464,10 +461,7 @@ object SnapshotTable {
     }
     if (touched.isEmpty) return v
     val schema = schemaOf(table, v)
-    val base = schema match {
-      case Some(st) => spark.read.schema(st).parquet(touched.map(_.path): _*)
-      case None => spark.read.parquet(touched.map(_.path): _*)
-    }
+    val base = readUnder(spark, schema, touched.map(_.path))
     val kept = base.filter(!(col(column) >= lo && col(column) <= hi))
     commitRewrite(spark, table, kept, untouched,
       schema.getOrElse(base.schema), meta = Seq.empty)
@@ -491,10 +485,7 @@ object SnapshotTable {
     val (small, large) = all.partition(e => e.rows >= 0 && e.rows < targetRows)
     if (small.size < 2) return v
     val schema = schemaOf(table, v)
-    val df = schema match {
-      case Some(st) => spark.read.schema(st).parquet(small.map(_.path): _*)
-      case None => spark.read.parquet(small.map(_.path): _*)
-    }
+    val df = readUnder(spark, schema, small.map(_.path))
     val nOut = math.max(1L,
       math.ceil(small.map(_.rows).sum.toDouble / targetRows).toLong).toInt
     commitRewrite(spark, table, df.coalesce(nOut), large,
@@ -547,10 +538,7 @@ object SnapshotTable {
     val (multi, single) = plan.partition(_.size > 1)
     if (multi.isEmpty) return v // every group already one file: no-op
     val schema = schemaOf(table, v)
-    def readFiles(fs: Seq[FileEntry]): DataFrame = schema match {
-      case Some(st) => spark.read.schema(st).parquet(fs.map(_.path): _*)
-      case None => spark.read.parquet(fs.map(_.path): _*)
-    }
+    def readFiles(fs: Seq[FileEntry]): DataFrame = readUnder(spark, schema, fs.map(_.path))
     val dataDir = Paths.get(table, "data", UUID.randomUUID().toString)
     // one staged single-file write per group — NOT a union of
     // coalesce(1) frames, which the planner is free to collapse back
@@ -582,10 +570,7 @@ object SnapshotTable {
     require(v > 0, s"no committed snapshot in $table")
     val all = entries(table, v)
     val schema = schemaOf(table, v)
-    val df0 = schema match {
-      case Some(st) => spark.read.schema(st).parquet(all.map(_.path): _*)
-      case None => spark.read.parquet(all.map(_.path): _*)
-    }
+    val df0 = readUnder(spark, schema, all.map(_.path))
     val mm = df0.agg(
       min(col(colA).cast("long")).as("a_lo"), max(col(colA).cast("long")).as("a_hi"),
       min(col(colB).cast("long")).as("b_lo"), max(col(colB).cast("long")).as("b_hi"))
@@ -638,12 +623,18 @@ object SnapshotTable {
     * shows it (schema time travel rides along with data time travel). */
   def readVersion(spark: SparkSession, table: String, version: Long): DataFrame = {
     require(version > 0, s"no committed snapshot in $table")
-    val paths = entries(table, version).map(_.path)
-    schemaOf(table, version) match {
+    readUnder(spark, schemaOf(table, version), entries(table, version).map(_.path))
+  }
+
+  /** Read data files under a version's pinned schema when it has one
+    * (versions committed before schemas were pinned infer it from the
+    * files). */
+  private def readUnder(spark: SparkSession,
+      pinned: Option[org.apache.spark.sql.types.StructType], paths: Seq[String]): DataFrame =
+    pinned match {
       case Some(st) => spark.read.schema(st).parquet(paths: _*)
       case None => spark.read.parquet(paths: _*)
     }
-  }
 
   // ------------------------------------------------------- change feed
 
@@ -681,12 +672,9 @@ object SnapshotTable {
       if (added.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           readVersion(spark, table, to).schema)
-      else schemaOf(table, to) match {
-        // read under `to`'s pinned schema so a feed spanning a schema
-        // change is uniformly shaped
-        case Some(st) => spark.read.schema(st).parquet(added: _*)
-        case None => spark.read.parquet(added: _*)
-      }
+      // read under `to`'s pinned schema so a feed spanning a schema
+      // change is uniformly shaped
+      else readUnder(spark, schemaOf(table, to), added)
     base.withColumn("_change_type", lit("insert"))
   }
 
@@ -715,10 +703,7 @@ object SnapshotTable {
       if (fs.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           readVersion(spark, table, to).schema)
-      else schemaOf(table, to) match {
-        case Some(st) => spark.read.schema(st).parquet(fs: _*)
-        case None => spark.read.parquet(fs: _*)
-      }
+      else readUnder(spark, schemaOf(table, to), fs)
     val before = readFiles(removedFiles(table, from, to))
     val after = readFiles(addedFiles(table, from, to))
     val changedAfter = after.exceptAll(before)   // new or modified rows
@@ -751,7 +736,9 @@ object SnapshotTable {
     * at 100 TB this is the difference between opening every snapshot
     * file's footer and opening only the overlapping ones (same move as
     * partition pruning, one level earlier than parquet row-group skip).
-    * The residual predicate still applies row-exactly on what remains. */
+    * The residual predicate still applies row-exactly on what remains.
+    * Read under the version's pinned schema, like [[readVersion]]: the
+    * kept files may all predate a later-added column. */
   def readRange(spark: SparkSession, table: String, version: Long,
       column: String, lo: Long, hi: Long): DataFrame = {
     import org.apache.spark.sql.functions.col
@@ -761,7 +748,7 @@ object SnapshotTable {
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     } else
-      spark.read.parquet(files: _*)
+      readUnder(spark, schemaOf(table, version), files)
         .filter(col(column) >= lo && col(column) <= hi)
   }
 }

@@ -79,6 +79,84 @@ class IngestSpec extends SparkSpec {
     assert(Ingest.findChunk(spark, path, "D1", 50).count() == 1)
   }
 
+  // ------------------------------------------------- catalog index
+
+  import IngestSpec.{assertFindMatchesScan, ids}
+
+  test("find and ingest see a catalog appended outside Ingest") {
+    val path = tmpCatalog()
+    Ingest.ingest(spark, path, batch(("c1", "D1", 0, 100, 1), ("c2", "D1", 100, 200, 1)))
+    assert(ids(Ingest.findChunk(spark, path, "D1", 250)).isEmpty) // index warm
+    // another writer appends with a plain partitioned parquet write
+    batch(("c3", "D1", 200, 300, 1)).write.mode("append")
+      .partitionBy("dataset_id").parquet(path)
+    assert(ids(Ingest.findChunk(spark, path, "D1", 250)) == Set("c3"))
+    assertFindMatchesScan(spark, path, "D1", 250)
+    // the reloaded index feeds dedup: c3 is a replay, c4 is new
+    val r = Ingest.ingest(spark, path, batch(("c3", "D1", 200, 300, 1), ("c4", "D2", 0, 10, 1)))
+    assert(r.ingested == 1 && r.deduped == 1)
+    assertFindMatchesScan(spark, path, "D2", 5)
+  }
+
+  test("numeric-looking dataset ids read back as INT, in the index as in a scan") {
+    val path = tmpCatalog()
+    Ingest.ingest(spark, path, batch(("c1", "1", 0, 100, 1), ("c2", "10", 0, 100, 1)))
+    assert(Ingest.readCatalog(spark, path).schema("dataset_id").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    assertFindMatchesScan(spark, path, "1", 50)
+    assertFindMatchesScan(spark, path, "10", 50)
+    // a new numeric dataset keeps the type; a non-numeric one turns the
+    // column to STRING for every row
+    Ingest.ingest(spark, path, batch(("c3", "2", 0, 100, 1)))
+    assertFindMatchesScan(spark, path, "2", 50)
+    Ingest.ingest(spark, path, batch(("c4", "x", 0, 100, 1)))
+    assert(Ingest.readCatalog(spark, path).schema("dataset_id").dataType ==
+      org.apache.spark.sql.types.StringType)
+    Seq("1", "2", "10", "x").foreach(d => assertFindMatchesScan(spark, path, d, 50))
+    // and deleting the only non-numeric chunk turns it back to INT
+    Ingest.deleteChunk(spark, path, "c4")
+    Seq("1", "2", "10").foreach(d => assertFindMatchesScan(spark, path, d, 50))
+  }
+
+  test("overlapping ranges: find returns every chunk whose range holds the block") {
+    val path = tmpCatalog()
+    Ingest.ingest(spark, path, batch(
+      ("c1", "D1", 0, 100, 1), ("c2", "D1", 50, 150, 1), ("c3", "D1", 100, 200, 1)))
+    assert(ids(Ingest.findChunk(spark, path, "D1", 75)) == Set("c1", "c2"))
+    assert(ids(Ingest.findChunk(spark, path, "D1", 100)) == Set("c2", "c3"))
+    Seq(0L, 49L, 50L, 99L, 100L, 149L, 150L, 199L, 200L)
+      .foreach(b => assertFindMatchesScan(spark, path, "D1", b))
+  }
+
+  test("free columns a batch carries survive in the index") {
+    val path = tmpCatalog()
+    def tagged(rows: (String, String, Long, Long, Long, String)*) =
+      rows.toDF("chunk_id", "dataset_id", "block_start", "block_end", "size_bytes", "source")
+    Ingest.ingest(spark, path, tagged(("c1", "D1", 0, 100, 1, "s3")))
+    assertFindMatchesScan(spark, path, "D1", 50)
+    Ingest.ingest(spark, path, tagged(("c2", "D1", 100, 200, 1, "gcs")))
+    assertFindMatchesScan(spark, path, "D1", 150)
+    assert(Ingest.findChunk(spark, path, "D1", 150).select("source").as[String]
+      .collect().toSeq == Seq("gcs"))
+    Ingest.compact(spark, path)
+    assertFindMatchesScan(spark, path, "D1", 50)
+    // a batch without the free column: the index reloads from the files
+    Ingest.ingest(spark, path, batch(("c3", "D1", 200, 300, 1)))
+    assertFindMatchesScan(spark, path, "D1", 250)
+  }
+
+  test("the index holds one entry per catalog path after 50 ingests") {
+    val path = tmpCatalog()
+    val before = Ingest.indexedPaths
+    (0 until 50).foreach { i =>
+      Ingest.ingest(spark, path, batch((s"c$i", s"D${i % 3}", i * 10L, i * 10L + 10L, 1L)))
+    }
+    assert(Ingest.indexedPaths == before + 1)
+    assert(Ingest.readCatalog(spark, path).count() == 50)
+    Seq(("D0", 5L), ("D1", 495L), ("D2", 55L))
+      .foreach { case (d, b) => assertFindMatchesScan(spark, path, d, b) }
+  }
+
   // ------------------------------------------------- promote crash paths
 
   import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path => HPath}
@@ -195,5 +273,25 @@ class IngestSpec extends SparkSpec {
     assert(reasons("c9,x,y,z") == "wrong_arity")
     assert(reasons("c10,1,0,100,512,extra") == "wrong_arity")
     batch.release() // cache ownership: caller frees after both lanes read
+  }
+}
+
+object IngestSpec {
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import org.apache.spark.sql.functions.{col, lit}
+  import org.scalatest.Assertions._
+
+  def ids(df: DataFrame): Set[String] =
+    df.select("chunk_id").collect().map(_.getString(0)).toSet
+
+  /** findChunk's answer equals a filtered scan of the catalog: same
+    * schema, column order and rows. */
+  def assertFindMatchesScan(spark: SparkSession, path: String, ds: String, block: Long): Unit = {
+    val found = Ingest.findChunk(spark, path, ds, block)
+    val scanned = Ingest.readCatalog(spark, path).filter(col("dataset_id") === ds &&
+      col("block_start") <= block && lit(block) < col("block_end"))
+    assert(found.schema == scanned.schema)
+    assert(found.collect().toSeq.sortBy(_.toString) == scanned.collect().toSeq.sortBy(_.toString),
+      s"dataset $ds block $block")
   }
 }

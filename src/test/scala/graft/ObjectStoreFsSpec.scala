@@ -83,4 +83,20 @@ class ObjectStoreFsSpec extends SparkSpec {
     assert(Ingest.findChunk(spark, path, "D1", 50).count() == 1)
     assert(Ingest.readCatalog(spark, path).count() == 1)
   }
+
+  test("the catalog index follows outside appends, numeric ids and overlaps over the object store") {
+    import IngestSpec.{assertFindMatchesScan, ids}
+    val path = mockPath()
+    Ingest.ingest(spark, path, batch(("c1", "7", 0, 100, 1), ("c2", "7", 50, 150, 1)))
+    assert(ids(Ingest.findChunk(spark, path, "7", 75)) == Set("c1", "c2"))
+    assertFindMatchesScan(spark, path, "7", 75)
+    batch(("c3", "8", 0, 100, 1)).write.mode("append").partitionBy("dataset_id").parquet(path)
+    assertFindMatchesScan(spark, path, "8", 50)
+    val r = Ingest.ingest(spark, path, batch(("c3", "8", 0, 100, 1), ("c4", "8", 100, 200, 1)))
+    assert(r.ingested == 1 && r.deduped == 1)
+    assert(Ingest.deleteChunk(spark, path, "c1") == 3)
+    Seq(("7", 75L), ("8", 50L), ("8", 150L)).foreach { case (d, b) =>
+      assertFindMatchesScan(spark, path, d, b)
+    }
+  }
 }

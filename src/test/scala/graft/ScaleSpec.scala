@@ -226,11 +226,16 @@ class ScaleSpec extends SparkSpec {
       ("c3", "D3", 0L, 100L, 1L))
       .toDF("chunk_id", "dataset_id", "block_start", "block_end", "size_bytes")
     graft.sources.Ingest.ingest(spark, path, batch)
-    val q = graft.sources.Ingest.findChunk(spark, path, "D2", 50L)
+    val q = graft.sources.Ingest.readCatalog(spark, path).filter(col("dataset_id") === "D2")
     val scan = q.queryExecution.executedPlan.collectLeaves()
       .map(_.toString).find(_.contains("FileScan")).getOrElse(fail("no scan"))
     assert(scan.contains("PartitionFilters") && scan.contains("dataset_id"),
       scan.takeRight(800))
     assert(q.count() == 1)
+    // findChunk answers the same row from the driver-side catalog index,
+    // and once that index is warm, without a Spark job
+    assert(graft.sources.Ingest.findChunk(spark, path, "D2", 50L).collect().toSeq ==
+      q.collect().toSeq)
+    assert(jobsDuring(graft.sources.Ingest.findChunk(spark, path, "D2", 50L).collect()) == 0)
   }
 }

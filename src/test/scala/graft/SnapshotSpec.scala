@@ -308,6 +308,21 @@ class SnapshotSpec extends SparkSpec {
     assert(SnapshotTable.readVersion(spark, t, 1).columns.toSeq == Seq("id", "v"))
   }
 
+  test("schema evolution: readRange reads under the version's pinned schema") {
+    val t = tmp()
+    SnapshotTable.commit(spark, t, (1 to 10).map(n => (n, s"a$n")).toDF("n", "a"))
+    SnapshotTable.commit(spark, t,
+      (100 to 110).map(n => (n, s"a$n", n * 2)).toDF("n", "a", "c"))
+    val pinned = SnapshotTable.readVersion(spark, t, 2).schema
+    assert(pinned.fieldNames.toSeq == Seq("n", "a", "c"))
+    // every kept file predates `c`: the read must still show it, as null
+    val range = SnapshotTable.readRange(spark, t, 2, "n", 1, 5)
+    assert(range.schema == pinned)
+    assert(range.select("n", "c").as[(Int, Option[Int])].collect().sorted.toSeq ==
+      (1 to 5).map(n => (n, None)))
+    assert(SnapshotTable.readRange(spark, t, 2, "n", 1000, 2000).schema == pinned)
+  }
+
   test("schema evolution: append omitting a column union-widens, not narrows") {
     val t = tmp()
     SnapshotTable.commit(spark, t, Seq((1, "a"), (2, "b")).toDF("id", "v"))

@@ -8,6 +8,34 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Spark jobs that `body` launched from this thread. A sentinel job
+    * run afterwards is awaited, so every event of `body` has reached the
+    * listener before the count is read. */
+  def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${java.util.UUID.randomUUID()}"
+    val counted = new java.util.concurrent.atomic.AtomicInteger(0)
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => counted.incrementAndGet()
+          case Some(g) if g == s"$group-sentinel" => flushed.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-sentinel", "flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener never flushed")
+      counted.get
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {

@@ -49,4 +49,16 @@ class TablesSpec extends SparkSpec {
     assert(Tables.splitEstimate(f) == files.toLong,
       s"expected $files row groups (1/file), got ${Tables.splitEstimate(f)}")
   }
+
+  test("load re-infers the schema of a table rewritten in place") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_tbl").toString
+    val out = s"$dir/t.parquet"
+    spark.range(3).selectExpr("id AS a").write.parquet(out)
+    assert(Tables.load(spark, dir, "t").columns.toSeq == Seq("a"))
+    spark.range(3).selectExpr("id AS a", "CAST(id AS STRING) AS b")
+      .write.mode("overwrite").parquet(out)
+    val t = Tables.load(spark, dir, "t")
+    assert(t.columns.toSeq == Seq("a", "b"))
+    assert(t.collect().length == 3)
+  }
 }
