@@ -3,12 +3,9 @@ package graft.sources
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** The reference's ingest pipeline and chunk catalog (SURVEY.md §2 Part A
   * rows A2-A5, A7, A8, A15, A18) over a parquet catalog partitioned by
@@ -37,9 +34,12 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *  - [[deleteChunk]] and [[compact]] rewrite the catalog from the index
   *    and promote the rewrite atomically.
   *
-  * Each write stores its post-write rows under the listing it left, so
-  * the next call pays no reload. Immutable files make the reference's
-  * semaphore pinning/rollback machinery unnecessary (SURVEY.md §1.4).
+  * Each write reloads the index from the listing it left, reading
+  * exactly the listed files: the next call pays no reload, and an append
+  * another writer made while this one ran is in the index too, since
+  * rows and signature come from the same listing. Immutable files make
+  * the reference's semaphore pinning/rollback machinery unnecessary
+  * (SURVEY.md §1.4).
   * Writers are expected one at a time per catalog, as before: the listing
   * check keeps readers current, it does not serialise writers.
   *
@@ -120,8 +120,6 @@ object Ingest {
     lazy val ids: Set[Any] = values("chunk_id").filter(_ != null).toSet
     lazy val totalBytes: Long =
       values("size_bytes").collect { case n: Number => n.longValue }.sum
-    /** Data columns: every column but the partition column, in order. */
-    def data: Seq[StructField] = schema.filterNot(_.name == "dataset_id")
     def frame(spark: SparkSession, rs: Seq[Row] = rows): DataFrame =
       spark.createDataFrame(rs.asJava, schema)
   }
@@ -134,7 +132,8 @@ object Ingest {
   private[graft] def indexedPaths: Int = indexes.size
 
   /** The index of `catalogPath`, reloaded when the files on disk no
-    * longer match the listing it was loaded from. */
+    * longer match the listing it was loaded from. Writes call it once
+    * more after they land, so the next call finds the index current. */
   private def index(spark: SparkSession, catalogPath: String): CatalogIndex = {
     val (fs, root) = fsFor(spark, catalogPath)
     val files = Listing.parquetFiles(fs, root)
@@ -153,67 +152,6 @@ object Ingest {
         .parquet(files.map(_.getPath.toString): _*)
       CatalogIndex(sig, df.schema, df.collect().toVector)
     }
-
-  /** Store what a write left at `catalogPath`: `rows` (the `data`
-    * columns, then the dataset_id value each row was written under),
-    * typed the way a scan of the listing now on disk types them — Spark's
-    * own partition inference over that listing, run on the driver. When
-    * the rows cannot be matched to the partition directories exactly,
-    * the entry is dropped instead and the next call reloads it. */
-  private def settle(spark: SparkSession, catalogPath: String,
-      data: Seq[StructField], rows: Seq[Row]): Unit = {
-    val (fs, root) = fsFor(spark, catalogPath)
-    val files = Listing.parquetFiles(fs, root)
-    val sig = Listing.signature(files)
-    val settled =
-      if (files.isEmpty) Option.when(rows.isEmpty)(CatalogIndex(sig, EmptySchema, Vector.empty))
-      else {
-        val spec = partitionSpec(spark, root, files)
-        val part = spec.partitionColumns
-        // partition value as written (the directory name) → value as read
-        val typed = spec.partitions.map { pp =>
-          ExternalCatalogUtils.unescapePathName(
-            pp.path.getName.stripPrefix("dataset_id=")) ->
-            CatalystTypeConverters.convertToScala(pp.values.get(0, part.head.dataType),
-              part.head.dataType)
-        }.toMap
-        val keys = rows.map(r => written(r.get(data.size)).flatMap(typed.get))
-        Option.when(part.fieldNames.sameElements(Array("dataset_id")) && keys.forall(_.isDefined))(
-          CatalogIndex(sig, StructType(data.map(_.copy(nullable = true)) :+ part.head),
-            rows.lazyZip(keys).map((r, k) => Row.fromSeq(r.toSeq.init :+ k.get)).toVector))
-      }
-    settled match {
-      case Some(ix) => indexes.put(root.toString, ix)
-      case None => indexes.remove(root.toString)
-    }
-  }
-
-  /** The directory value Spark's partitioned writer gives `v`; None for
-    * types whose string form is not worth reproducing here. */
-  private def written(v: Any): Option[String] = v match {
-    case null | "" => Some(ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
-    case s: String => Some(s)
-    case n @ (_: Int | _: Long) => Some(n.toString)
-    case _ => None
-  }
-
-  /** Spark's partition discovery over an already-listed catalog: the
-    * file index is handed the listing, so it lists nothing itself. */
-  private def partitionSpec(spark: SparkSession, root: Path, files: Vector[FileStatus]) = {
-    val listed = new FileStatusCache {
-      override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
-        Option.when(p == root)(files.toArray)
-      override def putLeafFiles(p: Path, leaves: Array[FileStatus]): Unit = ()
-      override def invalidateAll(): Unit = ()
-    }
-    new InMemoryFileIndex(spark, Seq(root), Map.empty, None, listed).partitionSpec()
-  }
-
-  /** `rows` (in `from`'s column order) as `data` columns then dataset_id. */
-  private def layout(from: StructType, data: Seq[StructField], rows: Seq[Row]): Seq[Row] = {
-    val ix = (data.map(_.name) :+ "dataset_id").map(from.fieldIndex)
-    rows.map(r => Row.fromSeq(ix.map(r.get)))
-  }
 
   /** Write catalog rows in one task, sorted by (dataset_id, block_start):
     * one file per dataset partition, with tight parquet min/max row-group
@@ -247,7 +185,8 @@ object Ingest {
     *    rejects per-chunk; batch-level is the job-granularity analog);
     * 3. atomic append, partitioned by dataset_id.
     *
-    * Spark jobs: one to dedup the batch within itself, one to write. */
+    * Spark jobs: one to dedup the batch within itself, one to write, and
+    * the index reload from the files the write left. */
   def ingest(spark: SparkSession, catalogPath: String, batch: DataFrame,
       maxSizeOnDisk: Long = 1000000000000L): IngestResult = {
     val idx = index(spark, catalogPath)
@@ -275,14 +214,7 @@ object Ingest {
     else {
       if (fresh.nonEmpty) {
         writeRows(spark, fresh, batch.schema, SaveMode.Append, catalogPath)
-        val data = batch.schema.filterNot(_.name == "dataset_id")
-        def shape(fs: Seq[StructField]) = fs.map(f => (f.name, f.dataType))
-        // a batch whose columns differ from the catalog's leaves the scan
-        // schema to whichever footer Spark reads first: reload instead
-        if (idx.listing.isEmpty || shape(data) == shape(idx.data))
-          settle(spark, catalogPath, if (idx.listing.isEmpty) data else idx.data,
-            layout(idx.schema, idx.data, idx.rows) ++ layout(batch.schema, data, fresh))
-        else indexes.remove(fsFor(spark, catalogPath)._2.toString)
+        index(spark, catalogPath)
       }
       IngestResult(fresh.size, deduped, None)
     }
@@ -302,12 +234,18 @@ object Ingest {
   def findChunk(spark: SparkSession, catalogPath: String,
       datasetId: String, blockNumber: Long): DataFrame = {
     val idx = index(spark, catalogPath)
-    // a non-string dataset_id (numeric-looking ids) compares under
-    // Spark's coercion rules: hand the predicate every row
+    val part = idx.schema("dataset_id")
     val candidates =
-      if (idx.schema("dataset_id").dataType == StringType)
-        idx.byDataset.getOrElse(datasetId, Vector.empty)
-      else idx.rows
+      if (part.dataType == StringType) idx.byDataset.getOrElse(datasetId, Vector.empty)
+      else {
+        // a non-string dataset_id (numeric-looking ids) compares under
+        // Spark's coercion rules: run the predicate over the distinct ids,
+        // one row per dataset, then take the matching datasets' rows
+        val keys = idx.byDataset.keys.toSeq.map(Row(_))
+        spark.createDataFrame(keys.asJava, StructType(Seq(part)))
+          .filter(col("dataset_id") === datasetId).collect().toVector
+          .flatMap(k => idx.byDataset(k.get(0)))
+      }
     idx.frame(spark, candidates)
       .filter(col("dataset_id") === datasetId &&
         col("block_start") <= blockNumber && lit(blockNumber) < col("block_end"))
@@ -385,15 +323,15 @@ object Ingest {
     rewrite(spark, catalogPath, idx, remaining, "_rewrite", "deleteChunk")
   }
 
-  /** Write `rows` beside the catalog, promote them over it, and store
-    * them as the new index state. Returns the row count. */
+  /** Write `rows` beside the catalog, promote them over it, and reload
+    * the index from the result. Returns the row count. */
   private def rewrite(spark: SparkSession, catalogPath: String, idx: CatalogIndex,
       rows: Vector[Row], suffix: String, what: String): Long = {
     val tmp = catalogPath + suffix
     writeRows(spark, rows, idx.schema, SaveMode.Overwrite, tmp)
     val (fs, dst) = fsFor(spark, catalogPath)
     promote(fs, new Path(tmp), dst, what)
-    settle(spark, catalogPath, idx.data, layout(idx.schema, idx.data, rows))
+    index(spark, catalogPath)
     rows.size
   }
 }

@@ -105,6 +105,9 @@ class IngestSpec extends SparkSpec {
       org.apache.spark.sql.types.IntegerType)
     assertFindMatchesScan(spark, path, "1", 50)
     assertFindMatchesScan(spark, path, "10", 50)
+    // ids compare under Spark's coercion rules, still without a job
+    assertFindMatchesScan(spark, path, "010", 50)
+    assert(jobsDuring(Ingest.findChunk(spark, path, "10", 50).collect()) == 0)
     // a new numeric dataset keeps the type; a non-numeric one turns the
     // column to STRING for every row
     Ingest.ingest(spark, path, batch(("c3", "2", 0, 100, 1)))
@@ -143,6 +146,38 @@ class IngestSpec extends SparkSpec {
     // a batch without the free column: the index reloads from the files
     Ingest.ingest(spark, path, batch(("c3", "D1", 200, 300, 1)))
     assertFindMatchesScan(spark, path, "D1", 250)
+  }
+
+  test("an append that lands while ingest or delete commits is in the index") {
+    val dir = Files.createTempDirectory("graft_race")
+    val root = dir.resolve("catalog")
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.racy.impl", classOf[RacyObjectStoreFs].getName)
+    conf.set("fs.racy.impl.disable.cache", "true")
+    val path = "racy://" + root
+    Ingest.ingest(spark, path, batch(("c1", "D1", 0, 100, 1)))
+    // another writer's file for D1, copied in while the catalog commits
+    def outside(id: String, start: Long): () => Unit = {
+      val stage = dir.resolve(s"stage_$id")
+      batch((id, "D1", start, start + 100, 1)).coalesce(1)
+        .write.partitionBy("dataset_id").parquet(stage.toString)
+      val file = Files.list(stage.resolve("dataset_id=D1")).toArray
+        .map(_.asInstanceOf[java.nio.file.Path]).find(_.toString.endsWith(".parquet")).get
+      () => { Files.copy(file, root.resolve(s"dataset_id=D1/part-outside-$id.parquet")); () }
+    }
+    RacyObjectStoreFs.arm(root.toString, outside("o1", 500))
+    Ingest.ingest(spark, path, batch(("c2", "D2", 0, 100, 1)))
+    assert(RacyObjectStoreFs.armed.get.isEmpty, "the outside append never ran")
+    assert(ids(Ingest.findChunk(spark, path, "D1", 550)) == Set("o1"))
+    assertFindMatchesScan(spark, path, "D1", 550)
+    assert(Ingest.ingest(spark, path, batch(("o1", "D1", 500, 600, 1))).deduped == 1)
+    // the same while a delete promotes its rewrite
+    RacyObjectStoreFs.arm(root.toString, outside("o2", 700))
+    assert(Ingest.deleteChunk(spark, path, "c2") == 2) // c1 and o1 rewritten
+    assert(RacyObjectStoreFs.armed.get.isEmpty, "the outside append never ran")
+    assert(ids(Ingest.findChunk(spark, path, "D1", 750)) == Set("o2"))
+    assertFindMatchesScan(spark, path, "D1", 750)
+    assert(Ingest.ingest(spark, path, batch(("o2", "D1", 700, 800, 1))).deduped == 1)
   }
 
   test("the index holds one entry per catalog path after 50 ingests") {
@@ -274,6 +309,30 @@ class IngestSpec extends SparkSpec {
     assert(reasons("c10,1,0,100,512,extra") == "wrong_arity")
     batch.release() // cache ownership: caller frees after both lanes read
   }
+}
+
+/** The `mock://` object store under the `racy://` scheme, with a hook
+  * that runs once, right after the first rename that lands a file or
+  * directory inside (or onto) a catalog: a second writer's append
+  * arriving while a catalog write commits. */
+class RacyObjectStoreFs extends MockObjectStoreFs {
+  override def getScheme: String = "racy"
+  override def getUri: java.net.URI = java.net.URI.create("racy:///")
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean = {
+    val renamed = super.rename(src, dst)
+    val to = dst.toUri.getPath
+    val cur = RacyObjectStoreFs.armed.get
+    cur.foreach { case (root, hook) =>
+      if (renamed && !to.contains("_temporary") && (to == root || to.startsWith(root + "/")) &&
+          RacyObjectStoreFs.armed.compareAndSet(cur, None)) hook()
+    }
+    renamed
+  }
+}
+
+object RacyObjectStoreFs {
+  val armed = new java.util.concurrent.atomic.AtomicReference[Option[(String, () => Unit)]](None)
+  def arm(root: String, hook: () => Unit): Unit = armed.set(Some((root, hook)))
 }
 
 object IngestSpec {
