@@ -1,7 +1,7 @@
 package graft
 
 /** Shared artifact-provenance helper for the measurement mains (Bench,
-  * Probe, LayoutBuildProbe, SnapshotDepthProbe, IncDedupProbe). The
+  * Probe, LayoutBuildProbe, IncDedupProbe). The
   * `_meta` block — git sha, tracked-tree dirtiness with the dirty
   * paths, UTC stamp — was copy-pasted per main and had already drifted
   * (r18 advisor: misindented block in Probe; the "ASELINE.md" offset

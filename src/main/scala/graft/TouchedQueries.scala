@@ -49,8 +49,7 @@ object TouchedQueries {
   private[graft] val inert = Seq(
     "src/test/", "tools/", ".md",
     "graft/Bench.scala", "graft/Verify.scala", "graft/ScaleGen.scala",
-    "graft/Probe.scala", "graft/SnapshotScaleProbe.scala",
-    "graft/SnapshotDepthProbe.scala", "graft/LayoutBuildProbe.scala",
+    "graft/Probe.scala", "graft/LayoutBuildProbe.scala",
     "graft/IncDedupProbe.scala", "graft/Meta.scala",
     "graft/Plans.scala", "graft/TouchedQueries.scala")
 

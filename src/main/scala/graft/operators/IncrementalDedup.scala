@@ -100,22 +100,16 @@ object IncrementalDedup {
     * O(batches) file-listing term on top of the O(index rows) join.
     * Planned compaction ([[SnapshotTable.compactPlanned]], keyed on
     * `doc_id` so file ranges stay contiguous) resets that accretion.
-    *
-    * Goes through THIS wrapper, not compactPlanned directly: the
-    * [[IndexFormat]] stamp lives in the NEWEST manifest, and a plain
-    * compaction commit would drop it — the next [[processBatch]] then
-    * fails its own format guard, i.e. maintenance would strand the
-    * index (r19, found when the growth probe priced the compaction
-    * pass). The wrapper re-checks the format first (compacting an
-    * alien-format index must fail as loudly as joining it) and carries
-    * the stamp onto the compaction commit. */
+    * The [[IndexFormat]] stamp survives it because every snapshot
+    * commit carries its base's metadata lines; this wrapper re-checks
+    * the format first, so compacting an alien-format index fails as
+    * loudly as joining it. */
   def compactIndex(spark: SparkSession, indexTable: String,
       groups: Int = 8): Long = {
     val v = SnapshotTable.currentVersion(indexTable)
     require(v > 0, s"no committed band index at $indexTable")
     requireFormat(indexTable, v)
-    SnapshotTable.compactPlanned(spark, indexTable, "doc_id",
-      groups = groups, extraMeta = Seq(FormatMeta))
+    SnapshotTable.compactPlanned(spark, indexTable, "doc_id", groups = groups)
   }
 
   /** One-shot greedy baseline over a full corpus: drop every doc that

@@ -1832,6 +1832,30 @@ object Relational {
     "set_ops"        -> (setOps(_, _))
   )
 
+  /** 4-hour bucket start of `ts` in DuckDB, matching Spark's `window()`
+    * and `unix_timestamp(..) div 14400`: both FLOOR the epoch seconds,
+    * while a plain `CAST(epoch(ts) AS BIGINT)` rounds them and moves an
+    * event in a bucket's last half second into the next bucket. */
+  private def bucket4h(ts: String): String =
+    s"CAST(to_timestamp((CAST(floor(epoch($ts)) AS BIGINT) // 14400) * 14400) AS TIMESTAMP)"
+
+  /** Shared prefix of the ts_resample / ts_gapfill / ts_interpolate
+    * oracles: the event sample `ev`, its bucket range `b` and the
+    * user × bucket `grid`. */
+  private val tsGridSql: String =
+    s"""WITH ev AS (
+      |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value
+      |  FROM events WHERE user_id < 10),
+      |b AS (
+      |  SELECT ${bucket4h("min(ts)")} AS lo,
+      |         ${bucket4h("max(ts)")} AS hi
+      |  FROM ev),
+      |grid AS (
+      |  SELECT u.user_id, g.bucket
+      |  FROM (SELECT DISTINCT user_id FROM ev) u,
+      |       (SELECT unnest(generate_series((SELECT lo FROM b), (SELECT hi FROM b),
+      |                                      INTERVAL 4 HOUR)) AS bucket) g)""".stripMargin
+
   def oracles: Map[String, String] = Map(
     "agg_pivot" ->
       """SELECT l_returnflag,
@@ -2285,21 +2309,9 @@ object Relational {
         |GROUP BY o_custkey
         |ORDER BY op, o_custkey""".stripMargin,
     "ts_resample" ->
-      """WITH ev AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value
-        |  FROM events WHERE user_id < 10),
-        |b AS (
-        |  SELECT CAST(to_timestamp((CAST(epoch(min(ts)) AS BIGINT) // 14400) * 14400) AS TIMESTAMP) AS lo,
-        |         CAST(to_timestamp((CAST(epoch(max(ts)) AS BIGINT) // 14400) * 14400) AS TIMESTAMP) AS hi
-        |  FROM ev),
-        |grid AS (
-        |  SELECT u.user_id, g.bucket
-        |  FROM (SELECT DISTINCT user_id FROM ev) u,
-        |       (SELECT unnest(generate_series((SELECT lo FROM b), (SELECT hi FROM b),
-        |                                      INTERVAL 4 HOUR)) AS bucket) g),
+      s"""$tsGridSql,
         |actual AS (
-        |  SELECT user_id,
-        |    CAST(to_timestamp((CAST(epoch(ts) AS BIGINT) // 14400) * 14400) AS TIMESTAMP) AS bucket,
+        |  SELECT user_id, ${bucket4h("ts")} AS bucket,
         |    CAST(COUNT(*) AS BIGINT) AS n,
         |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
         |  FROM ev GROUP BY 1, 2)
@@ -2309,21 +2321,9 @@ object Relational {
         |  ON grid.user_id = actual.user_id AND grid.bucket = actual.bucket
         |ORDER BY grid.user_id, grid.bucket""".stripMargin,
     "ts_gapfill" ->
-      """WITH ev AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value
-        |  FROM events WHERE user_id < 10),
-        |b AS (
-        |  SELECT CAST(to_timestamp((CAST(epoch(min(ts)) AS BIGINT) // 14400) * 14400) AS TIMESTAMP) AS lo,
-        |         CAST(to_timestamp((CAST(epoch(max(ts)) AS BIGINT) // 14400) * 14400) AS TIMESTAMP) AS hi
-        |  FROM ev),
-        |grid AS (
-        |  SELECT u.user_id, g.bucket
-        |  FROM (SELECT DISTINCT user_id FROM ev) u,
-        |       (SELECT unnest(generate_series((SELECT lo FROM b), (SELECT hi FROM b),
-        |                                      INTERVAL 4 HOUR)) AS bucket) g),
+      s"""$tsGridSql,
         |actual AS (
-        |  SELECT user_id,
-        |    CAST(to_timestamp((CAST(epoch(ts) AS BIGINT) // 14400) * 14400) AS TIMESTAMP) AS bucket,
+        |  SELECT user_id, ${bucket4h("ts")} AS bucket,
         |    CAST(COUNT(*) AS BIGINT) AS n,
         |    CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
         |  FROM ev GROUP BY 1, 2),
@@ -2337,21 +2337,9 @@ object Relational {
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0.0) AS filled_value
         |FROM j ORDER BY user_id, bucket""".stripMargin,
     "ts_interpolate" ->
-      """WITH ev AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value
-        |  FROM events WHERE user_id < 10),
-        |b AS (
-        |  SELECT CAST(to_timestamp((CAST(epoch(min(ts)) AS BIGINT) // 14400) * 14400) AS TIMESTAMP) AS lo,
-        |         CAST(to_timestamp((CAST(epoch(max(ts)) AS BIGINT) // 14400) * 14400) AS TIMESTAMP) AS hi
-        |  FROM ev),
-        |grid AS (
-        |  SELECT u.user_id, g.bucket
-        |  FROM (SELECT DISTINCT user_id FROM ev) u,
-        |       (SELECT unnest(generate_series((SELECT lo FROM b), (SELECT hi FROM b),
-        |                                      INTERVAL 4 HOUR)) AS bucket) g),
+      s"""$tsGridSql,
         |actual AS (
-        |  SELECT user_id,
-        |    CAST(to_timestamp((CAST(epoch(ts) AS BIGINT) // 14400) * 14400) AS TIMESTAMP) AS bucket,
+        |  SELECT user_id, ${bucket4h("ts")} AS bucket,
         |    CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_cents
         |  FROM ev GROUP BY 1, 2),
         |j AS (

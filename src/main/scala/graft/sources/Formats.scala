@@ -418,17 +418,9 @@ object Formats {
       .unionByName(orders.filter(col("o_orderkey") % 1009 === 0)
         .withColumn("o_orderkey", col("o_orderkey") + lit(20000000L)))
     val v2 = SnapshotTable.merge(s, t, updates, "o_orderkey")
-    // manifest-diff read under v2's pinned schema (rowChanges' shape);
-    // empty-safe although a non-empty update set always touches ≥1 file
-    def readDiff(fs: Seq[String]): DataFrame =
-      if (fs.isEmpty)
-        s.createDataFrame(
-          s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          SnapshotTable.readVersion(s, t, v2).schema)
-      else SnapshotTable.schemaOf(t, v2) match {
-        case Some(st) => s.read.schema(st).parquet(fs: _*)
-        case None => s.read.parquet(fs: _*)
-      }
+    // manifest-diff read under v2's pinned schema (rowChanges' shape)
+    val pinned = SnapshotTable.schemaOf(t, v2)
+    def readDiff(fs: Seq[String]): DataFrame = s.read.schema(pinned).parquet(fs: _*)
     val before = readDiff(SnapshotTable.removedFiles(t, v2 - 1, v2))
     val after = readDiff(SnapshotTable.addedFiles(t, v2 - 1, v2))
     val out = after.exceptAll(before).withColumn("change", lit("added"))

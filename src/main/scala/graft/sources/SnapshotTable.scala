@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.UUID
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Manifest/snapshot table commits — the lake-scale transaction the
   * directory-swap in [[Ingest.compact]]/[[Ingest.deleteChunk]] stands in
@@ -21,6 +22,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    that is `Files.move(ATOMIC_MOVE)`; on S3/GCS it becomes a
   *    conditional PUT (If-Match) or a metastore CAS — the single line
   *    that changes per deployment.
+  *
+  * The commit rule — every write (append, overwrite, merge, delete,
+  * compaction, z-order) goes through one primitive, [[publish]]:
+  *
+  *  - an operation that read version `base` publishes exactly
+  *    `base + 1`. A rewrite's base is the version it read; a blind
+  *    append or overwrite takes HEAD after its data write;
+  *  - manifest `base + 1` is created with CREATE_NEW and only then is
+  *    HEAD swapped, so of two writers from the same base exactly one
+  *    wins and the other gets a `ConcurrentModificationException`
+  *    before HEAD moves — an acknowledged commit is never overwritten,
+  *    and the loser leaves only a data dir [[vacuumOrphans]] reclaims;
+  *  - the new manifest carries the base's `#` metadata lines (batch
+  *    markers, consumer stamps, bookmarks) after its own, except the
+  *    base's `#schema=` line, which the commit's own schema replaces.
   *
   * Readers resolve HEAD once and then read only immutable paths: they
   * see a consistent snapshot regardless of concurrent commits, and old
@@ -48,27 +64,24 @@ object SnapshotTable {
 
   private def parseEntry(line: String): FileEntry = {
     val parts = line.split('|')
-    // pre-stats manifests carried bare paths — keep them readable
-    if (parts.length == 1) FileEntry(parts(0), -1L, Map.empty)
-    else {
-      val rows = parts(1).stripPrefix("rows=").toLong
-      val stats = parts.lift(2).filter(_.nonEmpty).map { s =>
-        s.split(';').map { kv =>
-          val Array(c, range) = kv.split('=')
-          val Array(lo, hi) = range.split(':')
-          c -> (lo.toLong, hi.toLong)
-        }.toMap
-      }.getOrElse(Map.empty)
-      FileEntry(parts(0), rows, stats)
-    }
+    val stats = parts.lift(2).filter(_.nonEmpty).map { s =>
+      s.split(';').map { kv =>
+        val Array(c, range) = kv.split('=')
+        val Array(lo, hi) = range.split(':')
+        c -> (lo.toLong, hi.toLong)
+      }.toMap
+    }.getOrElse(Map.empty)
+    FileEntry(parts(0), parts(1).stripPrefix("rows=").toLong, stats)
   }
 
   private def manifestDir(table: String): Path = Paths.get(table, "manifests")
+  private def manifestPath(table: String, version: Long): Path =
+    manifestDir(table).resolve(f"manifest-$version%05d")
   private def headPath(table: String): Path = Paths.get(table, "HEAD")
 
   private def writeManifest(table: String, version: Long, lines: Seq[String],
-      rows: Long): Path = {
-    val p = manifestDir(table).resolve(f"manifest-$version%05d")
+      rows: Long): Unit = {
+    val p = manifestPath(table, version)
     val body = (s"version=$version" +: s"rows=$rows" +: lines).mkString("\n")
     Files.createDirectories(p.getParent)
     // CREATE_NEW is the optimistic-concurrency gate: two writers racing
@@ -86,20 +99,16 @@ object SnapshotTable {
           f"manifest-$version%05d already committed by a concurrent " +
             "writer — re-read HEAD and retry the commit")
     }
-    p
   }
 
-  private def readManifest(p: Path): (Long, Long, Seq[String]) = {
-    val lines = Files.readAllLines(p).asScala.toSeq
-    val version = lines.head.stripPrefix("version=").toLong
-    val rows = lines(1).stripPrefix("rows=").toLong
-    (version, rows, lines.drop(2))
-  }
+  /** Body of `version`'s manifest: metadata and entry lines, without the
+    * `version=`/`rows=` header. */
+  private def manifestLines(table: String, version: Long): Seq[String] =
+    Files.readAllLines(manifestPath(table, version)).asScala.toSeq.drop(2)
 
   /** Committed [[FileEntry]]s of `version` (metadata lines excluded). */
   def entries(table: String, version: Long): Seq[FileEntry] =
-    readManifest(manifestDir(table).resolve(f"manifest-$version%05d"))._3
-      .filterNot(_.startsWith("#")).map(parseEntry)
+    manifestLines(table, version).filterNot(_.startsWith("#")).map(parseEntry)
 
   /** Footer scrape: row count + integral-column min/max per just-written
     * file. Reads METADATA ONLY (the parquet writer already computed the
@@ -160,6 +169,59 @@ object SnapshotTable {
       .toSeq.sorted
   }
 
+  /** A fresh, unique data directory for one commit's files. */
+  private def newDataDir(table: String): Path =
+    Paths.get(table, "data", UUID.randomUUID().toString)
+
+  /** The one commit path (the rule in the header): list `kept` by
+    * reference plus every non-empty parquet file written under
+    * `dataDir` (row counts and stats from the footers, zero data
+    * re-scan — SnapshotSpec pins the action count per commit), write
+    * manifest `base + 1` under `schema` with `meta` followed by the
+    * base's carried `#` lines (a line repeated per commit, such as a
+    * format stamp, is kept once), then swap HEAD. Zero-row files are left
+    * out: a delete that empties a file shrinks the manifest instead of
+    * padding it. */
+  private def publish(spark: SparkSession, table: String, base: Long,
+      schema: StructType, kept: Seq[FileEntry], dataDir: Path,
+      meta: Seq[String]): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    val written = Files.list(dataDir).iterator().asScala
+      .map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted
+      .map(f => scrapeFooter(conf, f)).filter(_.rows > 0)
+    val listed = kept ++ written
+    val carried =
+      if (base > 0) manifestMeta(table, base).filterNot(_.startsWith("#schema="))
+      else Seq.empty
+    val version = base + 1
+    writeManifest(table, version,
+      (s"#schema=${schema.json}" +: (meta ++ carried).distinct) ++ listed.map(_.render),
+      listed.map(_.rows).sum)
+    val tmp = headPath(table).resolveSibling(s"HEAD.tmp-${UUID.randomUUID()}")
+    Files.write(tmp, f"manifest-$version%05d".getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, headPath(table), StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+    version
+  }
+
+  /** `pinned` union-widened by `incoming`: new columns
+    * append (files committed before them read them as null — a
+    * metadata-only change, no rewrite, no mergeSchema footer sweep) and
+    * shared columns must keep their type. Silent narrowing/retyping is
+    * how a lake table rots: the pinned schema could no longer read the
+    * new files back (parquet physical-type mismatch). */
+  private def widen(pinned: StructType, incoming: StructType): StructType = {
+    incoming.foreach { f =>
+      pinned.find(_.name == f.name).foreach { old =>
+        require(old.dataType == f.dataType,
+          s"schema conflict on '${f.name}': table has ${old.dataType}, " +
+            s"commit has ${f.dataType}")
+      }
+    }
+    StructType(pinned.fields ++
+      incoming.fields.filterNot(f => pinned.fieldNames.contains(f.name)))
+  }
+
   /** Commit `df` as the next snapshot. `append = true` carries the
     * previous snapshot's files forward; `false` replaces the listing
     * (the data files it replaced remain on disk for time travel).
@@ -172,90 +234,45 @@ object SnapshotTable {
     * `batchId` is recorded in the manifest; a replayed batch (restart
     * after a crash between sink write and checkpoint advance — the gap
     * exactly-once sinks must close) is detected and skipped, so the
-    * sink commits each batch ONCE no matter how often it is retried. */
+    * sink commits each batch ONCE no matter how often it is retried.
+    * The markers ride every later commit, rewrites included. */
   def commitBatch(spark: SparkSession, table: String, df: DataFrame,
       batchId: Long): Long = {
     val prev = currentVersion(table)
-    if (prev > 0) {
-      val (_, _, lines) = readManifest(
-        manifestDir(table).resolve(f"manifest-$prev%05d"))
-      // committed batch ids ride in the manifest as comment lines
-      if (lines.exists(_ == s"#batch=$batchId")) return prev
-    }
-    commitWithMeta(spark, table, df, append = true, meta = Seq(s"#batch=$batchId"))
+    if (prev > 0 && manifestMeta(table, prev).contains(s"#batch=$batchId")) prev
+    else commitWithMeta(spark, table, df, append = true, meta = Seq(s"#batch=$batchId"))
   }
 
+  /** Blind append or overwrite: `df` is written first and the base is
+    * HEAD after the write. An append pins the table's schema widened by
+    * `df`'s ([[widen]]); an overwrite pins `df`'s own. */
   private[graft] def commitWithMeta(spark: SparkSession, table: String,
       df: DataFrame, append: Boolean, meta: Seq[String]): Long = {
-    val dataDir = Paths.get(table, "data", UUID.randomUUID().toString)
+    val dataDir = newDataDir(table)
     df.write.parquet(dataDir.toString)
-    val conf = spark.sessionState.newHadoopConf()
-    // row counts + pruning stats come from the parquet FOOTERS the write
-    // just produced — one metadata read per file, zero data re-scan
-    // (SnapshotSpec pins the action count per commit)
-    val newEntries = Files.list(dataDir).iterator().asScala
-      .map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted
-      .map(f => scrapeFooter(conf, f))
-    val newFiles = newEntries.map(_.render)
-    val newRows = newEntries.map(_.rows).sum
-    val prev = currentVersion(table)
-    val (prevRows, prevLines) =
-      if (append && prev > 0) {
-        val (_, r, f) = readManifest(manifestDir(table).resolve(f"manifest-$prev%05d"))
-        (r, f)
-      } else (0L, Seq.empty[String])
-    val version = prev + 1
-    // the manifest records the COMMIT's schema — readers apply it
-    // explicitly instead of inferring from data files, so adding a
-    // column is a metadata change: files committed before it simply
-    // read the new column as null, no rewrite, no mergeSchema
-    // footer-sweep over every file (the Iceberg/Delta shape). Only the
-    // newest schema line survives; each version's manifest pins the
-    // schema its readers should see. Appends UNION-widen (prior columns
-    // survive even if this batch omits them) and shared columns must
-    // keep their type — silent narrowing/retyping is how a lake table
-    // rots.
-    val pinned = (if (append && prev > 0) schemaOf(table, prev) else None) match {
-      case Some(ps) =>
-        df.schema.foreach { f =>
-          ps.find(_.name == f.name).foreach { old =>
-            require(old.dataType == f.dataType,
-              s"schema conflict on '${f.name}': table has ${old.dataType}, " +
-                s"commit has ${f.dataType}") }
-        }
-        org.apache.spark.sql.types.StructType(
-          ps.fields ++ df.schema.fields.filterNot(f => ps.fieldNames.contains(f.name)))
-      case None => df.schema
-    }
-    val schemaLine = s"#schema=${pinned.json}"
-    val carried = prevLines.filterNot(_.startsWith("#schema="))
-    // carry prior batch markers forward so replay detection sees history
-    writeManifest(table, version,
-      (schemaLine +: meta) ++ carried ++ newFiles, prevRows + newRows)
-    val tmp = headPath(table).resolveSibling(s"HEAD.tmp-${UUID.randomUUID()}")
-    Files.write(tmp, f"manifest-$version%05d".getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, headPath(table), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    version
+    val base = currentVersion(table)
+    if (append && base > 0)
+      publish(spark, table, base, widen(schemaOf(table, base), df.schema),
+        entries(table, base), dataDir, meta)
+    else publish(spark, table, base, df.schema, Seq.empty, dataDir, meta)
   }
 
   /** Drop all manifests older than the `keepLast` most recent and delete
     * data files no surviving manifest references — the GC pass that
-    * bounds time-travel history (Iceberg's expire_snapshots). Safe by
-    * construction: a file is deleted only when NO kept manifest lists
-    * it, and readers pinned to kept versions only hold kept files. */
+    * bounds time-travel history (Iceberg's expire_snapshots). A file
+    * is deleted only when NO kept manifest lists it, so readers pinned
+    * to kept versions only hold kept files. A reader pinned to an
+    * EXPIRED version is not protected: the files only it lists are
+    * deleted under it, and its next scan fails on a missing file
+    * (nothing here tracks open readers). */
   def expireSnapshots(table: String, keepLast: Int): Seq[String] = {
     val all = versions(table)
     if (all.size <= keepLast) return Seq.empty
     val (drop, keep) = all.splitAt(all.size - keepLast)
-    val kept = keep.flatMap { v =>
-      readManifest(manifestDir(table).resolve(f"manifest-$v%05d"))._3
-    }.filterNot(_.startsWith("#")).map(parseEntry(_).path).toSet
+    val kept = keep.flatMap(v => entries(table, v)).map(_.path).toSet
     val dropped = drop.flatMap { v =>
-      val p = manifestDir(table).resolve(f"manifest-$v%05d")
-      val files = readManifest(p)._3.filterNot(_.startsWith("#"))
-        .map(parseEntry(_).path)
-      Files.delete(p)
+      val files = entries(table, v).map(_.path)
+      Files.delete(manifestPath(table, v))
       files
     }.distinct.filterNot(kept)
     dropped.foreach(f => Files.deleteIfExists(Paths.get(f)))
@@ -308,21 +325,10 @@ object SnapshotTable {
     val v = currentVersion(table)
     require(v > 0, s"no committed snapshot in $table")
     val all = entries(table, v)
-    val schema = schemaOf(table, v)
+    // same no-silent-retyping contract as append commits
+    val schema = widen(schemaOf(table, v), updates.schema)
     // updates feed the range agg, the semi probe, and the final union —
     // pin them once rather than recompute the (arbitrary) source plan
-    // same no-silent-retyping contract as append commits: a widened or
-    // narrowed update column would write files the pinned schema can no
-    // longer read back (parquet physical-type mismatch)
-    schema.foreach { st =>
-      updates.schema.foreach { f =>
-        st.find(_.name == f.name).foreach { old =>
-          require(old.dataType == f.dataType,
-            s"schema conflict on '${f.name}': table has ${old.dataType}, " +
-              s"updates have ${f.dataType}")
-        }
-      }
-    }
     val upd = updates.localCheckpoint()
     try {
       if (upd.isEmpty) return v // empty update set: metadata no-op
@@ -392,52 +398,11 @@ object SnapshotTable {
         if (touched.isEmpty) upd
         else readFiles(touched).join(upd.select(key), Seq(key), "left_anti")
           .unionByName(upd)
-      commitRewrite(spark, table, out, carried,
-        schema.getOrElse(upd.schema),
+      val dataDir = newDataDir(table)
+      out.write.parquet(dataDir.toString)
+      publish(spark, table, v, schema, carried, dataDir,
         meta = Seq(s"#merge=$key;touched=${touched.size};carried=${carried.size}"))
     } finally upd.unpersist(blocking = false)
-  }
-
-  /** Commit a REWRITE: `carried` files enter the new manifest by
-    * reference (same path, same stats — zero bytes moved) while `df`
-    * is written out as the replacement for whatever the caller chose to
-    * rewrite. This is the primitive under [[deleteWhere]] and
-    * [[compact]]: both are "touch few files, re-list the rest", which
-    * is the only shape that survives 100 TB — an operation whose cost
-    * scales with the AFFECTED data, not the table. Zero-row output
-    * files are dropped from the listing (a delete that empties a file
-    * should shrink the manifest, not pad it). */
-  private def commitRewrite(spark: SparkSession, table: String,
-      df: DataFrame, carried: Seq[FileEntry],
-      schema: org.apache.spark.sql.types.StructType,
-      meta: Seq[String]): Long = {
-    val dataDir = Paths.get(table, "data", UUID.randomUUID().toString)
-    df.write.parquet(dataDir.toString)
-    finishRewrite(spark, table, dataDir, carried, schema, meta)
-  }
-
-  /** Manifest half of a rewrite commit: scrape footers of whatever the
-    * caller wrote under `dataDir`, list `carried` by reference, swap
-    * HEAD. Split out so [[compactPlanned]] can stage SEVERAL writes
-    * (one per plan group) into one dataDir and still commit once. */
-  private def finishRewrite(spark: SparkSession, table: String,
-      dataDir: Path, carried: Seq[FileEntry],
-      schema: org.apache.spark.sql.types.StructType,
-      meta: Seq[String]): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    val newEntries = Files.list(dataDir).iterator().asScala
-      .map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted
-      .map(f => scrapeFooter(conf, f)).filter(_.rows > 0)
-    val lines = (carried ++ newEntries).map(_.render)
-    val rows = (carried ++ newEntries).map(_.rows).sum
-    val version = currentVersion(table) + 1
-    writeManifest(table, version,
-      (s"#schema=${schema.json}" +: meta) ++ lines, rows)
-    val tmp = headPath(table).resolveSibling(s"HEAD.tmp-${UUID.randomUUID()}")
-    Files.write(tmp, f"manifest-$version%05d".getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, headPath(table), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    version
   }
 
   /** Copy-on-write DELETE with manifest-stat pruning: only files whose
@@ -461,35 +426,11 @@ object SnapshotTable {
     }
     if (touched.isEmpty) return v
     val schema = schemaOf(table, v)
-    val base = readUnder(spark, schema, touched.map(_.path))
-    val kept = base.filter(!(col(column) >= lo && col(column) <= hi))
-    commitRewrite(spark, table, kept, untouched,
-      schema.getOrElse(base.schema), meta = Seq.empty)
-  }
-
-  /** OPTIMIZE / bin-pack: coalesce files smaller than `targetRows` into
-    * ~`targetRows`-sized ones, carrying already-right-sized files by
-    * reference. Small files are the classic lake failure mode — every
-    * streaming micro-batch commit adds a few, and a year later a scan
-    * opens a million footers. Compaction is a normal snapshot commit:
-    * readers pinned to old versions still see the small files until
-    * [[expireSnapshots]] reclaims them, and the data is bit-for-bit the
-    * same (the spec asserts set-equality). `coalesce`, not
-    * `repartition`: bin-packing needs no shuffle, just fewer, fuller
-    * writers. */
-  def compact(spark: SparkSession, table: String,
-      targetRows: Long): Long = {
-    val v = currentVersion(table)
-    require(v > 0, s"no committed snapshot in $table")
-    val all = entries(table, v)
-    val (small, large) = all.partition(e => e.rows >= 0 && e.rows < targetRows)
-    if (small.size < 2) return v
-    val schema = schemaOf(table, v)
-    val df = readUnder(spark, schema, small.map(_.path))
-    val nOut = math.max(1L,
-      math.ceil(small.map(_.rows).sum.toDouble / targetRows).toLong).toInt
-    commitRewrite(spark, table, df.coalesce(nOut), large,
-      schema.getOrElse(df.schema), meta = Seq.empty)
+    val dataDir = newDataDir(table)
+    readUnder(spark, schema, touched.map(_.path))
+      .filter(!(col(column) >= lo && col(column) <= hi))
+      .write.parquet(dataDir.toString)
+    publish(spark, table, v, schema, untouched, dataDir, meta = Seq.empty)
   }
 
   /** Execute a greedy compaction PLAN — the EXECUTION half of
@@ -510,45 +451,38 @@ object SnapshotTable {
     * job, the embarrassingly-parallel shape the planner's Scaladoc
     * promises. Old versions keep the fragmented layout (time travel
     * intact); SnapshotSpec proves file count = group count with
-    * set-equal rows.
-    *
-    * `extraMeta` lines ride the compaction commit: a consumer-owned
-    * stamp (e.g. [[graft.operators.IncrementalDedup]]'s
-    * `#band_index_format`) lives in the NEWEST manifest, and a
-    * maintenance rewrite that dropped it would fail the consumer's own
-    * format guard on the next batch — maintenance must never strand
-    * the table it maintains (r19, found by the inc-dedup growth probe). */
+    * set-equal rows. Like every commit it carries the base's `#` lines,
+    * so consumer stamps and batch markers survive maintenance. */
   def compactPlanned(spark: SparkSession, table: String, column: String,
-      groups: Int = 8, extraMeta: Seq[String] = Seq.empty): Long = {
+      groups: Int = 8): Long = {
     val v = currentVersion(table)
     require(v > 0, s"no committed snapshot in $table")
     val all = entries(table, v)
     if (all.size < 2) return v
     val ordered = all.sortBy(e =>
       (e.stats.get(column).map(_._1).getOrElse(Long.MaxValue), e.path))
-    val total = math.max(ordered.map(e => math.max(e.rows, 0L)).sum, 1L)
+    val total = math.max(ordered.map(_.rows).sum, 1L)
     val target = math.max(total / groups, 1L)
     var cum = 0L
     val tagged = ordered.map { e =>
       val start = cum
-      cum += math.max(e.rows, 0L)
+      cum += e.rows
       (start / target) -> e
     }
     val plan = tagged.groupBy(_._1).toSeq.sortBy(_._1).map(_._2.map(_._2))
     val (multi, single) = plan.partition(_.size > 1)
     if (multi.isEmpty) return v // every group already one file: no-op
     val schema = schemaOf(table, v)
-    def readFiles(fs: Seq[FileEntry]): DataFrame = readUnder(spark, schema, fs.map(_.path))
-    val dataDir = Paths.get(table, "data", UUID.randomUUID().toString)
+    val dataDir = newDataDir(table)
     // one staged single-file write per group — NOT a union of
     // coalesce(1) frames, which the planner is free to collapse back
     // into one partition (observed: one output file for the whole plan)
     multi.foreach { g =>
-      readFiles(g).coalesce(1).write.mode("append").parquet(dataDir.toString)
+      readUnder(spark, schema, g.map(_.path)).coalesce(1)
+        .write.mode("append").parquet(dataDir.toString)
     }
-    finishRewrite(spark, table, dataDir, single.flatten,
-      schema.getOrElse(readFiles(all).schema),
-      meta = s"#compacted=planned($column,groups=${plan.size})" +: extraMeta)
+    publish(spark, table, v, schema, single.flatten, dataDir,
+      meta = Seq(s"#compacted=planned($column,groups=${plan.size})"))
   }
 
   /** OPTIMIZE ZORDER: rewrite the current snapshot's data files
@@ -588,12 +522,13 @@ object SnapshotTable {
       bucket(colA, aLo, aHi), bucket(colB, bLo, bHi), bits)
     val rows = all.map(_.rows).sum
     val nOut = math.max(1L, math.ceil(rows.toDouble / targetRows).toLong).toInt
-    val clustered = df0.withColumn("__z", z)
+    val dataDir = newDataDir(table)
+    df0.withColumn("__z", z)
       .repartitionByRange(nOut, col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z")
-    commitRewrite(spark, table, clustered, Seq.empty,
-      schema.getOrElse(df0.schema),
+      .write.parquet(dataDir.toString)
+    publish(spark, table, v, schema, Seq.empty, dataDir,
       meta = Seq(s"#optimized=zorder($colA,$colB,bits=$bits)"))
   }
 
@@ -601,21 +536,20 @@ object SnapshotTable {
     * markers, pinned schema, consumer bookmarks like
     * [[MaterializedView]]'s `#basedon`. */
   def manifestMeta(table: String, version: Long): Seq[String] =
-    readManifest(manifestDir(table).resolve(f"manifest-$version%05d"))._3
-      .filter(_.startsWith("#"))
+    manifestLines(table, version).filter(_.startsWith("#"))
 
   /** Read the current snapshot (resolves HEAD exactly once). */
   def read(spark: SparkSession, table: String): DataFrame =
     readVersion(spark, table, currentVersion(table))
 
-  /** The schema `version`'s manifest pins, if it was committed with one
-    * (pre-schema manifests fall back to file inference). */
-  def schemaOf(table: String, version: Long): Option[org.apache.spark.sql.types.StructType] =
-    readManifest(manifestDir(table).resolve(f"manifest-$version%05d"))._3
-      .find(_.startsWith("#schema="))
-      .map(l => org.apache.spark.sql.types.DataType
-        .fromJson(l.stripPrefix("#schema="))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+  /** The schema `version`'s manifest pins. Every commit writes one; a
+    * manifest without it is not this table's and fails here, loudly. */
+  def schemaOf(table: String, version: Long): StructType =
+    manifestMeta(table, version).collectFirst {
+      case l if l.startsWith("#schema=") =>
+        DataType.fromJson(l.stripPrefix("#schema=")).asInstanceOf[StructType]
+    }.getOrElse(throw new IllegalStateException(
+      f"manifest-$version%05d of $table pins no #schema= line"))
 
   /** Time travel: read snapshot `version` as of its commit, under the
     * schema that version pinned — files older than a column read it as
@@ -626,15 +560,11 @@ object SnapshotTable {
     readUnder(spark, schemaOf(table, version), entries(table, version).map(_.path))
   }
 
-  /** Read data files under a version's pinned schema when it has one
-    * (versions committed before schemas were pinned infer it from the
-    * files). */
-  private def readUnder(spark: SparkSession,
-      pinned: Option[org.apache.spark.sql.types.StructType], paths: Seq[String]): DataFrame =
-    pinned match {
-      case Some(st) => spark.read.schema(st).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
+  /** Read data files under a pinned schema. No paths reads as an empty
+    * frame of exactly that schema. */
+  private def readUnder(spark: SparkSession, schema: StructType,
+      paths: Seq[String]): DataFrame =
+    spark.read.schema(schema).parquet(paths: _*)
 
   // ------------------------------------------------------- change feed
 
@@ -667,15 +597,10 @@ object SnapshotTable {
         "(overwrite/merge in range) — file adds are not row inserts; " +
         "use rowChanges for copy-on-write ranges")
     import org.apache.spark.sql.functions.lit
-    val added = addedFiles(table, from, to)
-    val base =
-      if (added.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          readVersion(spark, table, to).schema)
-      // read under `to`'s pinned schema so a feed spanning a schema
-      // change is uniformly shaped
-      else readUnder(spark, schemaOf(table, to), added)
-    base.withColumn("_change_type", lit("insert"))
+    // read under `to`'s pinned schema so a feed spanning a schema
+    // change is uniformly shaped
+    readUnder(spark, schemaOf(table, to), addedFiles(table, from, to))
+      .withColumn("_change_type", lit("insert"))
   }
 
   /** Row-level change feed across arbitrary commits (including
@@ -699,13 +624,9 @@ object SnapshotTable {
     import org.apache.spark.sql.functions.lit
     // both sides read under `to`'s pinned schema: pre-evolution files
     // surface added columns as null, keeping the bag-diff well-typed
-    def readFiles(fs: Seq[String]): DataFrame =
-      if (fs.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          readVersion(spark, table, to).schema)
-      else readUnder(spark, schemaOf(table, to), fs)
-    val before = readFiles(removedFiles(table, from, to))
-    val after = readFiles(addedFiles(table, from, to))
+    val schema = schemaOf(table, to)
+    val before = readUnder(spark, schema, removedFiles(table, from, to))
+    val after = readUnder(spark, schema, addedFiles(table, from, to))
     val changedAfter = after.exceptAll(before)   // new or modified rows
     val changedBefore = before.exceptAll(after)  // deleted rows + pre-images
     val beforeKeys = before.select(key)
@@ -742,13 +663,8 @@ object SnapshotTable {
   def readRange(spark: SparkSession, table: String, version: Long,
       column: String, lo: Long, hi: Long): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val files = filesForRange(table, version, column, lo, hi)
-    if (files.isEmpty) {
-      val schema = readVersion(spark, table, version).schema
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else
-      readUnder(spark, schemaOf(table, version), files)
-        .filter(col(column) >= lo && col(column) <= hi)
+    readUnder(spark, schemaOf(table, version),
+      filesForRange(table, version, column, lo, hi))
+      .filter(col(column) >= lo && col(column) <= hi)
   }
 }

@@ -97,9 +97,9 @@ class IncrementalDedupSpec extends SparkSpec {
   test("compaction mid-stream keeps catching dups and carries the format stamp") {
     // the maintenance path the r19 growth probe prices: compact the
     // accreted per-batch files BETWEEN batches, then keep ingesting.
-    // A plain compactPlanned commit would drop the #band_index_format
-    // stamp and strand the index at the next batch's format guard —
-    // compactIndex exists so maintenance preserves the contract.
+    // The compaction commit must keep the #band_index_format stamp (every
+    // snapshot commit carries its base's metadata lines), or the next
+    // batch's format guard would strand the index.
     val base = Tables.documents(spark, sf).select("doc_id", "text")
     val t0 = base.orderBy("doc_id").limit(1).as[(Long, String)].collect()
     // planted post-compaction duplicate of a PRE-compaction text: the

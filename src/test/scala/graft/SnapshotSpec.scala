@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.sources.SnapshotTable
 
@@ -491,30 +492,6 @@ class SnapshotSpec extends SparkSpec {
     assert(SnapshotTable.versions(t) == Seq(1L, 2L, 3L, 4L))
   }
 
-  test("compact bin-packs small files and preserves data + history") {
-    val t = tmp()
-    for (i <- 0 until 6)
-      SnapshotTable.commit(spark, t,
-        ((i * 10 + 1) to (i * 10 + 10)).toDF("n").coalesce(1))
-    val small = SnapshotTable.entries(t, 6L)
-    assert(small.size == 6 && small.forall(_.rows == 10))
-    val v7 = SnapshotTable.compact(spark, t, targetRows = 100)
-    assert(v7 == 7L)
-    val packed = SnapshotTable.entries(t, 7L)
-    assert(packed.size == 1, s"expected 1 packed file, got ${packed.size}")
-    assert(packed.head.rows == 60)
-    assert(SnapshotTable.read(spark, t).as[Int].collect().sorted.toSeq
-      == (1 to 60))
-    // pre-compaction version still reads the small files
-    assert(SnapshotTable.readVersion(spark, t, 6).count() == 60)
-    // already-compacted table: no-op, no new version
-    assert(SnapshotTable.compact(spark, t, targetRows = 100) == 7L)
-    // GC then reclaims the small files
-    val dropped = SnapshotTable.expireSnapshots(t, keepLast = 1)
-    assert(dropped.size == 6)
-    assert(SnapshotTable.read(spark, t).count() == 60)
-  }
-
   test("compactPlanned executes the greedy plan: one file per group, data + history intact") {
     val t = tmp()
     // 12 single-file commits with CONTIGUOUS key ranges (the planner's
@@ -585,19 +562,86 @@ class SnapshotSpec extends SparkSpec {
       Set((1L, "a"), (2L, "b")))
   }
 
-  test("compact carries right-sized files by reference") {
+  test("compactPlanned carries singleton groups by reference") {
     val t = tmp()
     SnapshotTable.commit(spark, t, (1 to 500).toDF("n").coalesce(1))
     SnapshotTable.commit(spark, t, (501 to 505).toDF("n").coalesce(1))
     SnapshotTable.commit(spark, t, (506 to 510).toDF("n").coalesce(1))
     val bigPath = SnapshotTable.entries(t, 3L).filter(_.rows == 500)
       .map(_.path).toSet
-    SnapshotTable.compact(spark, t, targetRows = 100)
+    // target 255 rows: the 500-row file is a group on its own, the two
+    // small files share the second group
+    assert(SnapshotTable.compactPlanned(spark, t, "n", groups = 2) == 4L)
     val after = SnapshotTable.entries(t, 4L)
     assert(bigPath.subsetOf(after.map(_.path).toSet))
     assert(after.size == 2) // the big file + one packed file
     assert(SnapshotTable.read(spark, t).as[Int].collect().sorted.toSeq
       == (1 to 510))
+  }
+
+  test("a manifest without a #schema= line fails loudly") {
+    val t = tmp()
+    val data = java.nio.file.Paths.get(t, "data", "d0").toString
+    (1 to 5).toDF("n").coalesce(1).write.parquet(data)
+    val file = Files.list(java.nio.file.Paths.get(data)).iterator()
+      .asScala.map(_.toString).filter(_.endsWith(".parquet")).next()
+    Files.createDirectories(java.nio.file.Paths.get(t, "manifests"))
+    Files.write(java.nio.file.Paths.get(t, "manifests", "manifest-00001"),
+      s"version=1\nrows=5\n$file|rows=5|n=1:5".getBytes("UTF-8"))
+    Files.write(java.nio.file.Paths.get(t, "HEAD"), "manifest-00001".getBytes("UTF-8"))
+    val e = intercept[IllegalStateException](SnapshotTable.read(spark, t))
+    assert(e.getMessage.contains("#schema="), e.getMessage)
+    intercept[IllegalStateException](SnapshotTable.commit(spark, t, Seq(6).toDF("n")))
+    assert(SnapshotTable.currentVersion(t) == 1L)
+  }
+
+  /** The three rewrites, each over a table committed as two batches of
+    * `(k, v)` rows: `(1,a),(2,b)` then `(3,c)`. */
+  private val rewrites: Seq[(String, String => Long)] = Seq(
+    "merge" -> (t => SnapshotTable.merge(spark, t, Seq((2L, "B")).toDF("k", "v"), "k")),
+    "deleteWhere" -> (t => SnapshotTable.deleteWhere(spark, t, "k", 2L, 2L)),
+    "compactPlanned" -> (t => SnapshotTable.compactPlanned(spark, t, "k", groups = 1)))
+
+  private def batches(t: String): Unit = {
+    SnapshotTable.commitBatch(spark, t,
+      Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1), 0L)
+    SnapshotTable.commitBatch(spark, t, Seq((3L, "c")).toDF("k", "v").coalesce(1), 1L)
+  }
+
+  for ((name, rewrite) <- rewrites) {
+    test(s"a commit that lands while $name runs makes $name lose; the commit stays at HEAD") {
+      val t = tmp()
+      batches(t)
+      val before = SnapshotTable.read(spark, t).as[(Long, String)].collect().toSet
+      // the rewrite reads v2 on its own thread and is held at its data
+      // write while this thread's append publishes v3
+      val vAppend = GatedCommitter.holding(t)(rewrite(t)) {
+        SnapshotTable.commit(spark, t, Seq((4L, "d")).toDF("k", "v"))
+      } match {
+        case (Left(_: java.util.ConcurrentModificationException), v) => v
+        case (other, _) => fail(s"$name from a stale base returned $other")
+      }
+      assert(vAppend == 3L && SnapshotTable.currentVersion(t) == 3L)
+      assert(SnapshotTable.versions(t) == Seq(1L, 2L, 3L))
+      assert(SnapshotTable.read(spark, t).as[(Long, String)].collect().toSet ==
+        before + ((4L, "d")))
+      // the loser's data dir is the only orphan
+      assert(SnapshotTable.vacuumOrphans(t).size == 1)
+      assert(SnapshotTable.read(spark, t).count() == 4)
+    }
+
+    test(s"a replayed commitBatch after $name is a no-op") {
+      val t = tmp()
+      batches(t)
+      val v = rewrite(t)
+      assert(v == 3L)
+      val rows = SnapshotTable.read(spark, t).as[(Long, String)].collect().toSet
+      assert(SnapshotTable.commitBatch(spark, t,
+        Seq((1L, "a"), (2L, "b")).toDF("k", "v"), 0L) == v)
+      assert(SnapshotTable.commitBatch(spark, t, Seq((3L, "c")).toDF("k", "v"), 1L) == v)
+      assert(SnapshotTable.read(spark, t).as[(Long, String)].collect().toSet == rows)
+      assert(SnapshotTable.commitBatch(spark, t, Seq((5L, "e")).toDF("k", "v"), 2L) == v + 1)
+    }
   }
 
   test("materialized view: incremental refresh equals full recompute across append/merge/delete") {
@@ -647,5 +691,65 @@ class SnapshotSpec extends SparkSpec {
     SnapshotTable.merge(spark, t, Seq((7L, "d", 4L)).toDF("id", "g", "x"), "id")
     MaterializedView.refresh(spark, t, view, "id", "g", "x")
     assert(viewRows() == expected())
+  }
+}
+
+/** Parquet output committer that holds the first write into one table
+  * at job set-up, before any task runs: after the writer read its base version
+  * and before it publishes. Every other write passes straight through,
+  * so a test can land a commit in exactly that window. */
+class GatedCommitter(out: org.apache.hadoop.fs.Path,
+    ctx: org.apache.hadoop.mapreduce.TaskAttemptContext)
+    extends org.apache.parquet.hadoop.ParquetOutputCommitter(out, ctx) {
+  override def setupJob(job: org.apache.hadoop.mapreduce.JobContext): Unit = {
+    GatedCommitter.pass(out.toUri.getPath)
+    super.setupJob(job)
+  }
+}
+
+object GatedCommitter {
+  import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+  private final class Gate(val table: String) {
+    val taken = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reached = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+  }
+  @volatile private var gate: Option[Gate] = None
+
+  private def pass(out: String): Unit =
+    gate.filter(g => out.startsWith(g.table + "/") && g.taken.compareAndSet(false, true))
+      .foreach { g =>
+        g.reached.countDown()
+        g.release.await(120, TimeUnit.SECONDS)
+      }
+
+  /** Run `held` on its own thread and hold its first parquet write
+    * into `table` (a write may run on an adaptive-execution thread, so
+    * the gate keys on the table, not the thread); run `meanwhile` on
+    * this thread, then let `held` finish. Returns how `held` ended and
+    * what `meanwhile` returned. */
+  def holding[A, B](table: String)(held: => A)(meanwhile: => B): (Either[Throwable, A], B) = {
+    val spark = SparkSpec.session
+    val key = "spark.sql.parquet.output.committer.class"
+    @volatile var result: Either[Throwable, A] = Left(new IllegalStateException("never ran"))
+    val th = new Thread(() => result = scala.util.Try(held).toEither)
+    val g = new Gate(table)
+    spark.conf.set(key, classOf[GatedCommitter].getName)
+    gate = Some(g)
+    try {
+      th.start()
+      while (!g.reached.await(50, TimeUnit.MILLISECONDS) && th.isAlive) ()
+      th.join(50)
+      assert(g.reached.getCount == 0, s"the held write never started: $result")
+      val b = meanwhile
+      g.release.countDown()
+      th.join(120000)
+      (result, b)
+    } finally {
+      g.release.countDown()
+      gate = None
+      spark.conf.unset(key)
+    }
   }
 }
