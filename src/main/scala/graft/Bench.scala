@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 object Bench {
   /** Shuffle-partition count scaled to the corpus, not pinned to the
@@ -141,7 +142,7 @@ object Bench {
       // a failed warm-up (e.g. the trained-layout pre-build) must be
       // VISIBLE: llm_ann_trained would then pay full training inside its
       // timed run, and the number is uninterpretable without this signal
-      case e: Throwable =>
+      case NonFatal(e) =>
         System.err.println(s"[bench] warm-up failed: ${e.getClass.getName}: ${e.getMessage}")
     }
     // one timed execution; returns (seconds, CC-observation misses).
@@ -150,7 +151,7 @@ object Bench {
       val miss0 = graft.operators.GraphOps.ccObservationMisses.get()
       val t0 = System.nanoTime()
       val ok = try { run(fn(spark, sfDir)); true } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           false
       }

@@ -18,8 +18,8 @@ import graft.sources.SnapshotTable
   * pass, plus ONE MORE batch against the compacted index — the reading
   * that says what compaction buys the next arrival.
   *
-  * Per batch the artifact records wall seconds, index file count at
-  * HEAD (the O(batches) accretion term every join's file listing
+  * Per batch the artifact records wall seconds, index file count at the
+  * current version (the O(batches) accretion term every join's file listing
   * pays), cumulative index rows (the O(corpus) join-side term — 8
   * fixed-width rows per banded doc), and manifest bytes. A one-shot
   * [[IncrementalDedup.dedupFull]] over the same corpus rides along as

@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.control.NonFatal
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
@@ -51,7 +52,7 @@ object PlanDump {
             Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), plan)
             None
           } catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               System.err.println(s"[plandump] $name failed: ${e.getMessage}")
               Some(name)
           }

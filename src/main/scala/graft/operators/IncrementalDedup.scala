@@ -96,8 +96,8 @@ object IncrementalDedup {
   /** Maintenance: compact the band index's accreted per-batch files.
     * The index is append-only — N batches leave N commits' worth of
     * small files, and every batch's index join lists all of them
-    * ([[SnapshotTable.entries]] at HEAD), so per-batch cost picks up an
-    * O(batches) file-listing term on top of the O(index rows) join.
+    * ([[SnapshotTable.entries]] of one version), so per-batch cost picks
+    * up an O(batches) file-listing term on top of the O(index rows) join.
     * Planned compaction ([[SnapshotTable.compactPlanned]], keyed on
     * `doc_id` so file ranges stay contiguous) resets that accretion.
     * The [[IndexFormat]] stamp survives it because every snapshot

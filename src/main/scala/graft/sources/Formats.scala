@@ -400,10 +400,10 @@ object Formats {
     * (pre-evolution files surface added columns as null) is the one
     * this query inherits. The
     * 'removed' side reads exactly the pre-merge files the
-    * copy-on-write rewrite dropped from HEAD, so the DuckDB oracle —
-    * which restates BOTH versions declaratively over the original
-    * orders table — hash-proves that superseded files remain
-    * byte-faithfully readable after COW rewrote them out of HEAD. */
+    * copy-on-write rewrite dropped from the current version, so the
+    * DuckDB oracle — which restates BOTH versions declaratively over the
+    * original orders table — hash-proves that superseded files remain
+    * byte-faithfully readable after COW dropped them. */
   def snapshotTimetravel(s: SparkSession, d: String): DataFrame = {
     val root = java.nio.file.Files.createTempDirectory("graft_tt")
     val t = root.resolve("t").toString

@@ -63,17 +63,6 @@ object Ingest {
     "chunk_id STRING, dataset_id STRING, block_start BIGINT, " +
       "block_end BIGINT, size_bytes BIGINT")
 
-  /** Hadoop FileSystem for `path` and the path qualified on it — resolves
-    * by URI scheme, so the same code serves `file://` (local, tested) and
-    * `s3a://`/`hdfs://` (cluster) without change; raw `java.io.File`
-    * would pin the catalog to local disk, which has no 100 TB analog. */
-  private def fsFor(spark: SparkSession, path: String)
-      : (org.apache.hadoop.fs.FileSystem, Path) = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (fs, fs.makeQualified(p))
-  }
-
   /** Atomically promote a rewritten catalog at `tmp` over `dst` by
     * renaming the live catalog ASIDE first (never delete-then-rename: a
     * crash between those two steps would leave no live catalog at all).
@@ -135,7 +124,7 @@ object Ingest {
     * longer match the listing it was loaded from. Writes call it once
     * more after they land, so the next call finds the index current. */
   private def index(spark: SparkSession, catalogPath: String): CatalogIndex = {
-    val (fs, root) = fsFor(spark, catalogPath)
+    val (fs, root) = Listing.fsFor(spark, catalogPath)
     val files = Listing.parquetFiles(fs, root)
     val sig = Listing.signature(files)
     indexes.compute(root.toString, (_, cur) =>
@@ -171,7 +160,7 @@ object Ingest {
     * typed by Spark's partition inference (numeric-looking ids read back
     * as INT). A catalog with no parquet files reads as an empty frame. */
   def readCatalog(spark: SparkSession, catalogPath: String): DataFrame = {
-    val (fs, p) = fsFor(spark, catalogPath)
+    val (fs, p) = Listing.fsFor(spark, catalogPath)
     if (Listing.parquetFiles(fs, p).nonEmpty) spark.read.parquet(catalogPath)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], EmptySchema)
   }
@@ -227,9 +216,8 @@ object Ingest {
     * without a Spark job per call.
     *
     * The result is a local DataFrame with [[readCatalog]]'s schema and
-    * column order, holding a snapshot taken at call time, like
-    * [[SnapshotTable]]'s "resolve HEAD once": a later write to the
-    * catalog does not change a frame already returned. Collecting it
+    * column order, holding a snapshot taken at call time: a later write
+    * to the catalog does not change a frame already returned. Collecting it
     * launches no job. */
   def findChunk(spark: SparkSession, catalogPath: String,
       datasetId: String, blockNumber: Long): DataFrame = {
@@ -305,17 +293,18 @@ object Ingest {
     * small append files into one sorted file (the small-files problem —
     * every append job adds files; scans degrade as file count grows).
     * The rewrite is written from the index and promoted atomically like
-    * [[deleteChunk]]; readers on the old snapshot are unaffected.
-    * Returns the row count. */
+    * [[deleteChunk]], with the same reader and writer caveats. Returns
+    * the row count. */
   def compact(spark: SparkSession, catalogPath: String): Long = {
     val idx = index(spark, catalogPath)
     rewrite(spark, catalogPath, idx, idx.rows, "_compact", "compact")
   }
 
-  /** A8/A14 delete path: rewrite the catalog without the chunk id —
-    * atomic overwrite; concurrent readers keep their snapshot (the
-    * drain-readers semantics for free, SURVEY.md §3.3). Returns the
-    * number of rows that remain. */
+  /** A8/A14 delete path: rewrite the catalog without the chunk id beside
+    * it and [[promote]] it over the live directory. Readers are not
+    * drained: a [[findChunk]] frame is local, but a [[readCatalog]] scan
+    * planned before the promote fails if it runs after; an append landing
+    * between the index read and the promote is lost. Returns the rows left. */
   def deleteChunk(spark: SparkSession, catalogPath: String, chunkId: String): Long = {
     val idx = index(spark, catalogPath)
     // a filter over the local frame: no job, and `=!=`'s null semantics
@@ -329,7 +318,7 @@ object Ingest {
       rows: Vector[Row], suffix: String, what: String): Long = {
     val tmp = catalogPath + suffix
     writeRows(spark, rows, idx.schema, SaveMode.Overwrite, tmp)
-    val (fs, dst) = fsFor(spark, catalogPath)
+    val (fs, dst) = Listing.fsFor(spark, catalogPath)
     promote(fs, new Path(tmp), dst, what)
     index(spark, catalogPath)
     rows.size

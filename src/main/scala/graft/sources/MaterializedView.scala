@@ -15,11 +15,11 @@ import org.apache.spark.sql.functions._
   * The view is itself a SnapshotTable holding `(group, cnt, total)` plus
   * a `#basedon=<v>` manifest bookmark naming the base version it
   * reflects. [[refresh]] reads ONLY the change feed between the bookmark
-  * and the base HEAD ([[SnapshotTable.rowChanges]] — manifest-diff
-  * files, never the table), turns it into signed per-group deltas
-  * (+1 for `insert`/`update_postimage`, −1 for `delete`/
-  * `update_preimage`), and folds them into the stored groups with one
-  * outer join. Cost scales with the CHANGED data — the classic
+  * and the base's current version ([[SnapshotTable.rowChanges]] —
+  * manifest-diff files, never the table), turns it into signed
+  * per-group deltas (+1 for `insert`/`update_postimage`, −1 for
+  * `delete`/`update_preimage`), and folds them into the stored groups
+  * with one outer join. Cost scales with the CHANGED data — the classic
   * incremental-view-maintenance contract (delta rules for SUM/COUNT;
   * see Griffin & Libkin, "Incremental Maintenance of Views with
   * Duplicates", SIGMOD '95). SUM/COUNT are self-maintainable from the
@@ -52,9 +52,9 @@ object MaterializedView {
       count(lit(1)).as("cnt"),
       sum(col(valueCol)).as("total"))
 
-  /** Bring `viewTable` up to date with `baseTable`'s HEAD. First call
-    * builds the view with one full GROUP BY; later calls apply only the
-    * change feed since the bookmark. `key` is the base table's unique
+  /** Bring `viewTable` up to date with `baseTable`'s current version.
+    * First call builds the view with one full GROUP BY; later calls apply
+    * only the change feed since the bookmark. `key` is the base table's unique
     * row key (what [[SnapshotTable.merge]] merges on). Returns the new
     * view version (unchanged if the base hasn't moved). */
   def refresh(spark: SparkSession, baseTable: String, viewTable: String,

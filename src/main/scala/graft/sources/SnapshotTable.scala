@@ -1,9 +1,11 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import java.util.UUID
 import scala.jdk.CollectionConverters._
+import scala.util.Using
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -16,34 +18,31 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *
   *  - data files are IMMUTABLE and written to unique paths, so a commit
   *    never overwrites anything a reader could be holding;
-  *  - a snapshot is a MANIFEST (complete file listing + stats), written
-  *    whole-or-absent;
-  *  - publishing is one atomic pointer swap (HEAD → manifest-N). Locally
-  *    that is `Files.move(ATOMIC_MOVE)`; on S3/GCS it becomes a
-  *    conditional PUT (If-Match) or a metastore CAS — the single line
-  *    that changes per deployment.
+  *  - a snapshot is a MANIFEST (complete file listing + stats), and
+  *    creating `manifest-N` if absent IS the commit of version N (Delta
+  *    Lake's log, Armbrust et al., VLDB 2020); the current version is
+  *    the newest manifest, so there is no second step to crash between.
   *
   * The commit rule — every write (append, overwrite, merge, delete,
   * compaction, z-order) goes through one primitive, [[publish]]:
   *
   *  - an operation that read version `base` publishes exactly
   *    `base + 1`. A rewrite's base is the version it read; a blind
-  *    append or overwrite takes HEAD after its data write;
-  *  - manifest `base + 1` is created with CREATE_NEW and only then is
-  *    HEAD swapped, so of two writers from the same base exactly one
-  *    wins and the other gets a `ConcurrentModificationException`
-  *    before HEAD moves — an acknowledged commit is never overwritten,
-  *    and the loser leaves only a data dir [[vacuumOrphans]] reclaims;
+  *    append or overwrite takes the current version after its data write;
+  *  - of two writers from the same base exactly one creates manifest
+  *    `base + 1` and the other gets a `ConcurrentModificationException`,
+  *    leaving only a data dir [[vacuumOrphans]] reclaims;
   *  - the new manifest carries the base's `#` metadata lines (batch
   *    markers, consumer stamps, bookmarks) after its own, except the
   *    base's `#schema=` line, which the commit's own schema replaces.
   *
-  * Readers resolve HEAD once and then read only immutable paths: they
-  * see a consistent snapshot regardless of concurrent commits, and old
-  * versions stay readable (time travel) until a GC pass drops manifests.
+  * Readers resolve the current version once, then read only immutable
+  * paths: a consistent snapshot whatever commits follow, and old
+  * versions stay readable (time travel) until a GC pass drops them.
   *
-  * Layout: `<table>/data/<uuid>/part-*.parquet`,
-  * `<table>/manifests/manifest-<version>`, `<table>/HEAD`.
+  * Files go through the table path's Hadoop `FileSystem` (any scheme);
+  * entries are qualified paths. Layout: `<table>/data/<uuid>/part-*.parquet`,
+  * `<table>/manifests/manifest-<version>`.
   */
 object SnapshotTable {
 
@@ -74,37 +73,49 @@ object SnapshotTable {
     FileEntry(parts(0), parts(1).stripPrefix("rows=").toLong, stats)
   }
 
-  private def manifestDir(table: String): Path = Paths.get(table, "manifests")
-  private def manifestPath(table: String, version: Long): Path =
-    manifestDir(table).resolve(f"manifest-$version%05d")
-  private def headPath(table: String): Path = Paths.get(table, "HEAD")
+  /** `<table>/<sub>` qualified on the table's filesystem. */
+  private def under(table: String, sub: String): (FileSystem, Path) =
+    Listing.fsFor(SparkSession.active, s"$table/$sub")
 
-  private def writeManifest(table: String, version: Long, lines: Seq[String],
-      rows: Long): Unit = {
-    val p = manifestPath(table, version)
-    val body = (s"version=$version" +: s"rows=$rows" +: lines).mkString("\n")
-    Files.createDirectories(p.getParent)
-    // CREATE_NEW is the optimistic-concurrency gate: two writers racing
-    // from the same base both compute version N+1, and exactly one may
-    // own that manifest name — the loser fails here BEFORE the HEAD
-    // swap, leaving only an orphan data dir (vacuumOrphans reclaims
-    // it). On S3 this line becomes a conditional PUT (If-None-Match),
-    // the same single line that changes for HEAD (SURVEY §3.1).
-    try
-      Files.write(p, body.getBytes(StandardCharsets.UTF_8),
-        java.nio.file.StandardOpenOption.CREATE_NEW)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          f"manifest-$version%05d already committed by a concurrent " +
-            "writer — re-read HEAD and retry the commit")
-    }
+  private def manifestPath(table: String, version: Long): (FileSystem, Path) =
+    under(table, f"manifests/manifest-$version%05d")
+
+  private val ManifestName = """manifest-(\d+)""".r
+
+  /** The children of `dir`, or none when it does not exist. */
+  private def list(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    try fs.listStatus(dir).toSeq
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  /** Create `p` with `body` unless the name exists — the commit point;
+    * false when another writer owns it. On `file:` a hidden temp file is
+    * hard-linked as `p`: link(2) fails atomically on an existing name, so
+    * no losing or crashed writer leaves a partial or overwritten manifest
+    * (a move, or Hadoop's local create, checks and then acts); a crash may
+    * leave the temp file, which [[versions]] ignores. Other schemes use
+    * `create(overwrite = false)`, which the store must make conditional
+    * (S3 `If-None-Match: *`, GCS `ifGenerationMatch=0`). */
+  private def putIfAbsent(fs: FileSystem, p: Path, body: Array[Byte]): Boolean = {
+    fs.mkdirs(p.getParent)
+    if (p.toUri.getScheme == "file") {
+      val dst = Paths.get(p.toUri)
+      val tmp = dst.resolveSibling(s".${dst.getFileName}.${UUID.randomUUID()}.tmp")
+      Files.write(tmp, body)
+      try { Files.createLink(dst, tmp); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      finally Files.delete(tmp)
+    } else
+      try { Using.resource(fs.create(p, false))(_.write(body)); true }
+      catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
   }
 
   /** Body of `version`'s manifest: metadata and entry lines, without the
     * `version=`/`rows=` header. */
-  private def manifestLines(table: String, version: Long): Seq[String] =
-    Files.readAllLines(manifestPath(table, version)).asScala.toSeq.drop(2)
+  private def manifestLines(table: String, version: Long): Seq[String] = {
+    val (fs, p) = manifestPath(table, version)
+    new String(Using.resource(fs.open(p))(_.readAllBytes()), StandardCharsets.UTF_8)
+      .split('\n').toSeq.drop(2)
+  }
 
   /** Committed [[FileEntry]]s of `version` (metadata lines excluded). */
   def entries(table: String, version: Long): Seq[FileEntry] =
@@ -118,10 +129,10 @@ object SnapshotTable {
     * numbers arrive for free as task-side write metrics; footer reads are
     * the single-node stand-in with identical results. */
   private def scrapeFooter(conf: org.apache.hadoop.conf.Configuration,
-      file: String): FileEntry = {
+      file: FileStatus): FileEntry = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     val reader = org.apache.parquet.hadoop.ParquetFileReader
-      .open(conf, new org.apache.hadoop.fs.Path(file))
+      .open(org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf))
     try {
       val blocks = reader.getRowGroups.asScala.toSeq
       val rows = blocks.map(_.getRowCount).sum
@@ -147,61 +158,53 @@ object SnapshotTable {
           }
         }
       }
-      FileEntry(file, rows, stats.toMap)
+      FileEntry(file.getPath.toString, rows, stats.toMap)
     } finally reader.close()
   }
 
-  /** Current committed version, or 0 if the table is empty. */
-  def currentVersion(table: String): Long = {
-    val h = headPath(table)
-    if (Files.exists(h))
-      new String(Files.readAllBytes(h), StandardCharsets.UTF_8)
-        .trim.stripPrefix("manifest-").toLong
-    else 0L
-  }
+  /** Current committed version — the newest manifest — or 0 if none. */
+  def currentVersion(table: String): Long = versions(table).lastOption.getOrElse(0L)
 
-  /** All committed versions, oldest first (every one is time-travelable). */
+  /** All committed versions, oldest first (every one is time-travelable);
+    * temp and `.crc` files in `manifests/` are not versions. */
   def versions(table: String): Seq[Long] = {
-    val d = manifestDir(table)
-    if (!Files.exists(d)) Seq.empty
-    else Files.list(d).iterator().asScala
-      .map(_.getFileName.toString.stripPrefix("manifest-").toLong)
-      .toSeq.sorted
+    val (fs, dir) = under(table, "manifests")
+    list(fs, dir).map(_.getPath.getName)
+      .collect { case ManifestName(v) => v.toLong }.sorted
   }
 
   /** A fresh, unique data directory for one commit's files. */
   private def newDataDir(table: String): Path =
-    Paths.get(table, "data", UUID.randomUUID().toString)
+    under(table, s"data/${UUID.randomUUID()}")._2
 
   /** The one commit path (the rule in the header): list `kept` by
     * reference plus every non-empty parquet file written under
     * `dataDir` (row counts and stats from the footers, zero data
-    * re-scan — SnapshotSpec pins the action count per commit), write
-    * manifest `base + 1` under `schema` with `meta` followed by the
-    * base's carried `#` lines (a line repeated per commit, such as a
-    * format stamp, is kept once), then swap HEAD. Zero-row files are left
-    * out: a delete that empties a file shrinks the manifest instead of
-    * padding it. */
+    * re-scan — SnapshotSpec pins the action count per commit), and
+    * commit manifest `base + 1` ([[putIfAbsent]]) under `schema` with
+    * `meta` followed by the base's carried `#` lines (a line repeated
+    * per commit, such as a format stamp, is kept once). Zero-row files
+    * are left out: a delete that empties a file shrinks the manifest
+    * instead of padding it. */
   private def publish(spark: SparkSession, table: String, base: Long,
       schema: StructType, kept: Seq[FileEntry], dataDir: Path,
       meta: Seq[String]): Long = {
     val conf = spark.sessionState.newHadoopConf()
-    val written = Files.list(dataDir).iterator().asScala
-      .map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted
-      .map(f => scrapeFooter(conf, f)).filter(_.rows > 0)
+    val (fs, p) = manifestPath(table, base + 1)
+    val written = list(fs, dataDir).filter(_.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.toString).map(scrapeFooter(conf, _)).filter(_.rows > 0)
     val listed = kept ++ written
     val carried =
       if (base > 0) manifestMeta(table, base).filterNot(_.startsWith("#schema="))
       else Seq.empty
-    val version = base + 1
-    writeManifest(table, version,
-      (s"#schema=${schema.json}" +: (meta ++ carried).distinct) ++ listed.map(_.render),
-      listed.map(_.rows).sum)
-    val tmp = headPath(table).resolveSibling(s"HEAD.tmp-${UUID.randomUUID()}")
-    Files.write(tmp, f"manifest-$version%05d".getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, headPath(table), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    version
+    val body = (s"version=${base + 1}" +: s"rows=${listed.map(_.rows).sum}" +:
+      s"#schema=${schema.json}" +: ((meta ++ carried).distinct ++ listed.map(_.render)))
+      .mkString("\n")
+    if (!putIfAbsent(fs, p, body.getBytes(StandardCharsets.UTF_8)))
+      throw new java.util.ConcurrentModificationException(
+        s"${p.getName} already committed by a concurrent writer — " +
+          "re-read the current version and retry the commit")
+    base + 1
   }
 
   /** `pinned` union-widened by `incoming`: new columns
@@ -244,8 +247,8 @@ object SnapshotTable {
   }
 
   /** Blind append or overwrite: `df` is written first and the base is
-    * HEAD after the write. An append pins the table's schema widened by
-    * `df`'s ([[widen]]); an overwrite pins `df`'s own. */
+    * the current version after the write. An append pins the table's
+    * schema widened by `df`'s ([[widen]]); an overwrite pins `df`'s own. */
   private[graft] def commitWithMeta(spark: SparkSession, table: String,
       df: DataFrame, append: Boolean, meta: Seq[String]): Long = {
     val dataDir = newDataDir(table)
@@ -264,18 +267,18 @@ object SnapshotTable {
     * to kept versions only hold kept files. A reader pinned to an
     * EXPIRED version is not protected: the files only it lists are
     * deleted under it, and its next scan fails on a missing file
-    * (nothing here tracks open readers). */
+    * (nothing here tracks open readers). `keepLast >= 1`: the newest
+    * manifest is the current version. */
   def expireSnapshots(table: String, keepLast: Int): Seq[String] = {
+    require(keepLast >= 1, s"keepLast = $keepLast would expire the current version")
     val all = versions(table)
     if (all.size <= keepLast) return Seq.empty
     val (drop, keep) = all.splitAt(all.size - keepLast)
     val kept = keep.flatMap(v => entries(table, v)).map(_.path).toSet
-    val dropped = drop.flatMap { v =>
-      val files = entries(table, v).map(_.path)
-      Files.delete(manifestPath(table, v))
-      files
-    }.distinct.filterNot(kept)
-    dropped.foreach(f => Files.deleteIfExists(Paths.get(f)))
+    val dropped = drop.flatMap(v => entries(table, v).map(_.path)).distinct.filterNot(kept)
+    val (fs, _) = under(table, "data")
+    drop.foreach(v => fs.delete(manifestPath(table, v)._2, false))
+    dropped.foreach(f => fs.delete(new Path(f), false))
     dropped
   }
 
@@ -287,17 +290,13 @@ object SnapshotTable {
     * modification-time grace period so an IN-FLIGHT commit's dir isn't
     * swept before its manifest lands. Returns the removed dirs. */
   def vacuumOrphans(table: String): Seq[String] = {
-    val dataRoot = Paths.get(table, "data")
-    if (!Files.exists(dataRoot)) return Seq.empty
+    val (fs, dataRoot) = under(table, "data")
     val referenced = versions(table).flatMap(v => entries(table, v))
-      .map(e => Paths.get(e.path).getParent.getFileName.toString).toSet
-    val orphans = Files.list(dataRoot).iterator().asScala
-      .filter(d => Files.isDirectory(d) &&
-        !referenced.contains(d.getFileName.toString))
-      .toSeq
-    orphans.foreach { d =>
-      Files.walk(d).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    }
+      .map(e => new Path(e.path).getParent.getName).toSet
+    val orphans = list(fs, dataRoot)
+      .filter(d => d.isDirectory && !referenced.contains(d.getPath.getName))
+      .map(_.getPath)
+    orphans.foreach(fs.delete(_, true))
     orphans.map(_.toString)
   }
 
@@ -367,33 +366,32 @@ object SnapshotTable {
           case (mn, mx) => mx >= kLo && mn <= kHi
         })
       }
-      def readFiles(fs: Seq[FileEntry]): DataFrame = readUnder(spark, schema, fs.map(_.path))
+      def readFiles(es: Seq[FileEntry]): DataFrame = readUnder(spark, schema, es.map(_.path))
+      val fs = under(table, "data")._1
+      def qualified(p: Path): Path = fs.makeQualified(p)
       // stage 2: one candidate scan → file paths holding a matched key.
       // The collect is FILE-count bounded (manifest scale, not data).
-      val touchedPaths: Set[String] =
+      val touchedPaths: Set[Path] =
         if (candidates.isEmpty) Set.empty
         else readFiles(candidates)
           .select(input_file_name().as("__file"), col(key))
           .join(upd.select(key), Seq(key), "left_semi")
           .select("__file").distinct()
-          .collect().map(r => new java.net.URI(r.getString(0)).getPath).toSet
+          .collect().map(r => qualified(new Path(new java.net.URI(r.getString(0))))).toSet
       // representation guard: input_file_name() URIs and manifest paths
-      // are produced by DIFFERENT code (Hadoop FS vs java.nio) — if
-      // their normal forms ever diverge (scheme prefix, double slash,
-      // symlinked root), the partition below would silently classify
-      // every touched file as "carried" and the merge would APPEND
-      // updates instead of replacing matched rows, breaking key
-      // uniqueness inside the committed snapshot. Matched keys were
-      // found in stage 2, so every touched path MUST resolve to a
-      // manifest entry — assert it rather than corrupt the table.
-      val entryPaths = all.map(e => Paths.get(e.path).toAbsolutePath.toString).toSet
+      // compare as qualified Hadoop Paths. Should their forms ever diverge,
+      // every touched file would classify as "carried" and the merge would
+      // APPEND updates instead of replacing matched rows, breaking key
+      // uniqueness. Matched keys were found in stage 2, so every touched
+      // path MUST resolve to a manifest entry — assert it.
+      val entryPaths = all.map(e => qualified(new Path(e.path))).toSet
       val unmatched = touchedPaths.filterNot(entryPaths.contains)
       require(unmatched.isEmpty,
         s"touched file(s) not resolvable to manifest entries — path " +
           s"representation drift between scan and manifest: " +
           unmatched.take(3).mkString(", "))
-      val (touched, carried) = all.partition(e => touchedPaths.contains(
-        Paths.get(e.path).toAbsolutePath.toString))
+      val (touched, carried) =
+        all.partition(e => touchedPaths.contains(qualified(new Path(e.path))))
       val out =
         if (touched.isEmpty) upd
         else readFiles(touched).join(upd.select(key), Seq(key), "left_anti")
@@ -538,7 +536,7 @@ object SnapshotTable {
   def manifestMeta(table: String, version: Long): Seq[String] =
     manifestLines(table, version).filter(_.startsWith("#"))
 
-  /** Read the current snapshot (resolves HEAD exactly once). */
+  /** Read the current snapshot (resolves the current version once). */
   def read(spark: SparkSession, table: String): DataFrame =
     readVersion(spark, table, currentVersion(table))
 

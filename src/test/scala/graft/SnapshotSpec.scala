@@ -1,7 +1,10 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import java.util.ConcurrentModificationException
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.functions._
 import graft.sources.SnapshotTable
 
@@ -10,6 +13,25 @@ class SnapshotSpec extends SparkSpec {
 
   private def tmp(): String =
     Files.createTempDirectory("graft_snap").resolve("t").toString
+
+  /** A table on the `mock://` object store ([[MockObjectStoreFs]]), where
+    * the manifest commit takes the `create(overwrite = false)` branch. */
+  private def mockTmp(): String = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.mock.impl", classOf[MockObjectStoreFs].getName)
+    conf.set("fs.mock.impl.disable.cache", "true")
+    "mock://" + tmp()
+  }
+
+  /** Test-name suffix and table factory per store. */
+  private val stores: Seq[(String, () => String)] =
+    Seq("" -> (() => tmp()), " (mock://)" -> (() => mockTmp()))
+
+  /** The local file behind a manifest entry (a qualified `file:` path). */
+  private def local(entry: String): java.nio.file.Path = Paths.get(new HPath(entry).toUri)
+
+  private def names(dir: java.nio.file.Path): Set[String] =
+    Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSet
 
   test("optimizeZorder: rows unchanged, both dimensions prune after rewrite") {
     val t = tmp()
@@ -79,11 +101,22 @@ class SnapshotSpec extends SparkSpec {
     SnapshotTable.commit(spark, t, (1 to 10).toDF("n"))
     SnapshotTable.commit(spark, t, (11 to 20).toDF("n"))
     SnapshotTable.commit(spark, t, Seq(42).toDF("n"), append = false)
+    val old = SnapshotTable.entries(t, 2).map(_.path)
+    assert(old.nonEmpty && old.forall(f => Files.exists(local(f))))
     val dropped = SnapshotTable.expireSnapshots(t, keepLast = 1)
-    assert(dropped.nonEmpty) // v1/v2 data is unreferenced by v3
-    dropped.foreach(f => assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(f))))
+    assert(dropped.toSet == old.toSet) // v1/v2 data is unreferenced by v3
+    dropped.foreach(f => assert(!Files.exists(local(f))))
     assert(SnapshotTable.versions(t) == Seq(3L))
     assert(SnapshotTable.read(spark, t).as[Int].collect().toSeq == Seq(42))
+  }
+
+  test("expireSnapshots refuses keepLast = 0 and leaves the table intact") {
+    val t = tmp()
+    SnapshotTable.commit(spark, t, (1 to 10).toDF("n"))
+    SnapshotTable.commit(spark, t, (11 to 20).toDF("n"))
+    intercept[IllegalArgumentException](SnapshotTable.expireSnapshots(t, keepLast = 0))
+    assert(SnapshotTable.versions(t) == Seq(1L, 2L))
+    assert(SnapshotTable.read(spark, t).count() == 20)
   }
 
   test("foreachBatch sink: batch-id idempotence makes replayed micro-batches no-ops") {
@@ -205,19 +238,54 @@ class SnapshotSpec extends SparkSpec {
     assert(SnapshotTable.readRange(spark, t, 1L, "n", 5000, 6000).count() == 0)
   }
 
-  test("no partial state: HEAD always points at a complete manifest") {
+  test("no partial state: commits leave complete manifests and nothing else") {
     val t = tmp()
     SnapshotTable.commit(spark, t, (1 to 5).toDF("n"))
-    val head = java.nio.file.Paths.get(t, "HEAD")
-    val m = new String(java.nio.file.Files.readAllBytes(head)).trim
-    val manifest = java.nio.file.Paths.get(t, "manifests", m)
-    assert(java.nio.file.Files.exists(manifest))
-    // no stray tmp pointers left behind
-    val strays = java.nio.file.Files.list(java.nio.file.Paths.get(t))
-      .iterator()
-    val names = new scala.collection.mutable.ArrayBuffer[String]
-    while (strays.hasNext) names += strays.next().getFileName.toString
-    assert(!names.exists(_.startsWith("HEAD.tmp")), names.mkString(","))
+    SnapshotTable.commit(spark, t, (6 to 7).toDF("n"))
+    assert(names(Paths.get(t)) == Set("data", "manifests"))
+    assert(names(Paths.get(t, "manifests")) == Set("manifest-00001", "manifest-00002"))
+    for (v <- Seq(1L, 2L)) {
+      val lines = Files.readAllLines(Paths.get(t, "manifests", f"manifest-$v%05d")).asScala
+      assert(lines.head == s"version=$v")
+      assert(lines.count(_.contains("|rows=")) == SnapshotTable.entries(t, v).size)
+      assert(SnapshotTable.entries(t, v).forall(e => Files.exists(local(e.path))))
+    }
+  }
+
+  for ((on, mk) <- stores)
+    test(s"a complete manifest with no other step is committed$on") {
+      val t = mk()
+      SnapshotTable.commit(spark, t, (1 to 5).toDF("n"))
+      // a writer that stopped right after creating manifest-2, holding
+      // v1's listing: nothing else is needed for it to be a commit (on
+      // file:, Hadoop's create also leaves a .crc file beside it)
+      val fs = new HPath(t).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val in = fs.open(new HPath(t, "manifests/manifest-00001"))
+      val body = try new String(in.readAllBytes(), UTF_8) finally in.close()
+      val out = fs.create(new HPath(t, "manifests/manifest-00002"), false)
+      try out.write(body.replaceFirst("version=1", "version=2").getBytes(UTF_8))
+      finally out.close()
+      assert(SnapshotTable.currentVersion(t) == 2L)
+      assert(SnapshotTable.commit(spark, t, (6 to 9).toDF("n")) == 3L)
+      SnapshotTable.expireSnapshots(t, keepLast = 1)
+      assert(SnapshotTable.versions(t) == Seq(3L))
+      assert(SnapshotTable.read(spark, t).as[Int].collect().sorted.toSeq == (1 to 9))
+    }
+
+  test("a stray manifest temp file is ignored by versions, commit, expire and vacuum") {
+    val t = tmp()
+    SnapshotTable.commit(spark, t, (1 to 5).toDF("n"))
+    // what a writer that died before linking its manifest leaves behind
+    val stray = Paths.get(t, "manifests", s".manifest-00002.${java.util.UUID.randomUUID()}.tmp")
+    Files.write(stray, "version=2\nrows=".getBytes(UTF_8))
+    assert(SnapshotTable.versions(t) == Seq(1L))
+    assert(SnapshotTable.commit(spark, t, (6 to 8).toDF("n")) == 2L)
+    assert(SnapshotTable.commit(spark, t, Seq(9).toDF("n")) == 3L)
+    SnapshotTable.expireSnapshots(t, keepLast = 1)
+    assert(SnapshotTable.vacuumOrphans(t).isEmpty)
+    assert(SnapshotTable.versions(t) == Seq(3L))
+    assert(SnapshotTable.read(spark, t).as[Int].collect().sorted.toSeq == (1 to 9))
+    assert(Files.exists(stray))
   }
 
   test("changesBetween: append range reads ONLY the delta files") {
@@ -373,19 +441,24 @@ class SnapshotSpec extends SparkSpec {
     assert(running == full && full == (1 to 30).sum)
   }
 
-  test("concurrent commit from a stale base fails before HEAD moves") {
+  test("a writer whose manifest name is taken loses and leaves no visible state") {
     val t = tmp()
     SnapshotTable.commit(spark, t, (1 to 5).toDF("n"))
-    // a racing writer already owns manifest-2
-    val stolen = java.nio.file.Paths.get(t, "manifests", "manifest-00002")
-    java.nio.file.Files.write(stolen,
-      "version=2\nrows=0".getBytes("UTF-8"))
-    intercept[java.util.ConcurrentModificationException] {
-      SnapshotTable.commit(spark, t, (6 to 9).toDF("n"))
+    val m2 = Paths.get(t, "manifests", "manifest-00002")
+    // merge reads v1 and is held at its data write while another
+    // writer's complete manifest-2 (v1's listing) lands
+    val (res, body) = GatedCommitter.holding(t)(
+        SnapshotTable.merge(spark, t, Seq(3).toDF("n"), "n")) {
+      val b = Files.readString(Paths.get(t, "manifests", "manifest-00001"))
+        .replaceFirst("version=1", "version=2")
+      Files.writeString(m2, b)
+      b
     }
-    // HEAD still points at version 1; the loser left no partial state
-    // visible to readers
-    assert(SnapshotTable.currentVersion(t) == 1L)
+    assert(res.swap.exists(_.isInstanceOf[ConcurrentModificationException]), res)
+    // the winner's manifest is current and untouched, no temp file is left
+    assert(Files.readString(m2) == body)
+    assert(SnapshotTable.currentVersion(t) == 2L)
+    assert(names(Paths.get(t, "manifests")) == Set("manifest-00001", "manifest-00002"))
     assert(SnapshotTable.read(spark, t).count() == 5)
     // ... only an orphan data dir, which vacuum reclaims
     val removed = SnapshotTable.vacuumOrphans(t)
@@ -588,7 +661,6 @@ class SnapshotSpec extends SparkSpec {
     Files.createDirectories(java.nio.file.Paths.get(t, "manifests"))
     Files.write(java.nio.file.Paths.get(t, "manifests", "manifest-00001"),
       s"version=1\nrows=5\n$file|rows=5|n=1:5".getBytes("UTF-8"))
-    Files.write(java.nio.file.Paths.get(t, "HEAD"), "manifest-00001".getBytes("UTF-8"))
     val e = intercept[IllegalStateException](SnapshotTable.read(spark, t))
     assert(e.getMessage.contains("#schema="), e.getMessage)
     intercept[IllegalStateException](SnapshotTable.commit(spark, t, Seq(6).toDF("n")))
@@ -609,26 +681,27 @@ class SnapshotSpec extends SparkSpec {
   }
 
   for ((name, rewrite) <- rewrites) {
-    test(s"a commit that lands while $name runs makes $name lose; the commit stays at HEAD") {
-      val t = tmp()
-      batches(t)
-      val before = SnapshotTable.read(spark, t).as[(Long, String)].collect().toSet
-      // the rewrite reads v2 on its own thread and is held at its data
-      // write while this thread's append publishes v3
-      val vAppend = GatedCommitter.holding(t)(rewrite(t)) {
-        SnapshotTable.commit(spark, t, Seq((4L, "d")).toDF("k", "v"))
-      } match {
-        case (Left(_: java.util.ConcurrentModificationException), v) => v
-        case (other, _) => fail(s"$name from a stale base returned $other")
+    for ((on, mk) <- stores)
+      test(s"a commit that lands while $name runs makes $name lose; the commit stays current$on") {
+        val t = mk()
+        batches(t)
+        val before = SnapshotTable.read(spark, t).as[(Long, String)].collect().toSet
+        // the rewrite reads v2 on its own thread and is held at its data
+        // write while this thread's append publishes v3
+        val vAppend = GatedCommitter.holding(t)(rewrite(t)) {
+          SnapshotTable.commit(spark, t, Seq((4L, "d")).toDF("k", "v"))
+        } match {
+          case (Left(_: java.util.ConcurrentModificationException), v) => v
+          case (other, _) => fail(s"$name from a stale base returned $other")
+        }
+        assert(vAppend == 3L && SnapshotTable.currentVersion(t) == 3L)
+        assert(SnapshotTable.versions(t) == Seq(1L, 2L, 3L))
+        assert(SnapshotTable.read(spark, t).as[(Long, String)].collect().toSet ==
+          before + ((4L, "d")))
+        // the loser's data dir is the only orphan
+        assert(SnapshotTable.vacuumOrphans(t).size == 1)
+        assert(SnapshotTable.read(spark, t).count() == 4)
       }
-      assert(vAppend == 3L && SnapshotTable.currentVersion(t) == 3L)
-      assert(SnapshotTable.versions(t) == Seq(1L, 2L, 3L))
-      assert(SnapshotTable.read(spark, t).as[(Long, String)].collect().toSet ==
-        before + ((4L, "d")))
-      // the loser's data dir is the only orphan
-      assert(SnapshotTable.vacuumOrphans(t).size == 1)
-      assert(SnapshotTable.read(spark, t).count() == 4)
-    }
 
     test(s"a replayed commitBatch after $name is a no-op") {
       val t = tmp()
@@ -710,6 +783,8 @@ class GatedCommitter(out: org.apache.hadoop.fs.Path,
 object GatedCommitter {
   import java.util.concurrent.{CountDownLatch, TimeUnit}
 
+  /** `table` is the URI path of the table, so the gate matches the
+    * committer's output on any scheme. */
   private final class Gate(val table: String) {
     val taken = new java.util.concurrent.atomic.AtomicBoolean(false)
     val reached = new CountDownLatch(1)
@@ -734,7 +809,7 @@ object GatedCommitter {
     val key = "spark.sql.parquet.output.committer.class"
     @volatile var result: Either[Throwable, A] = Left(new IllegalStateException("never ran"))
     val th = new Thread(() => result = scala.util.Try(held).toEither)
-    val g = new Gate(table)
+    val g = new Gate(new org.apache.hadoop.fs.Path(table).toUri.getPath)
     spark.conf.set(key, classOf[GatedCommitter].getName)
     gate = Some(g)
     try {
