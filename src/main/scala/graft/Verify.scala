@@ -22,23 +22,6 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.exists(name.contains)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case NonFatal(e) =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // iterative/caching queries pin blocks (localCheckpoint, persist);
-      // release them so 100+ sequential queries don't accrete memory
-      // BLOCKING: an async drop lets one query's pinned blocks (an
-      // iterative build's checkpoints can run to GBs at sf10) overlap
-      // the next query's peak — the r12 sf10 sweep OOM'd the skew demo
-      // on exactly that overlap (fine in isolation, 27.7 s)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -51,6 +34,29 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    val failures = SparkEntry.queries.toSeq
+      .filter { case (name, _) => only.forall(_.exists(name.contains)) }
+      .flatMap { case (name, fn) =>
+      val failed =
+        try { fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"); None }
+        catch { case NonFatal(e) =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(s"{${q("query")}: ${q(name)}, ${q("exception")}: ${q(e.getClass.getName)}, " +
+            s"${q("message")}: ${q(String.valueOf(e.getMessage))}}")
+        }
+      // iterative/caching queries pin blocks (localCheckpoint, persist);
+      // release them so 100+ sequential queries don't accrete memory
+      // BLOCKING: an async drop lets one query's pinned blocks (an
+      // iterative build's checkpoints can run to GBs at sf10) overlap
+      // the next query's peak — the r12 sf10 sweep OOM'd the skew demo
+      // on exactly that overlap (fine in isolation, 27.7 s)
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = true))
+      failed
+    }
+    // a query that threw leaves no result dir; tools/check.py counts
+    // each entry here as a failure
+    Files.writeString(Paths.get(s"$outDir/failures.json"), failures.mkString("[", ",\n", "]"))
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

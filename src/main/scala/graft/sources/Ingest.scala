@@ -1,15 +1,15 @@
 package graft.sources
 
 import scala.jdk.CollectionConverters._
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
 
 /** The reference's ingest pipeline and chunk catalog (SURVEY.md §2 Part A
-  * rows A2-A5, A7, A8, A15, A18) over a parquet catalog partitioned by
-  * `dataset_id`.
+  * rows A2-A5, A7, A8, A15, A18) over a [[SnapshotTable]] at the catalog
+  * path.
   *
   * Reference flow (`data_manager.rs:188-276`): download chunk → decode →
   * dedup-on-id (`Entry::Vacant` gate, :223-256) → quota admission
@@ -19,29 +19,33 @@ import org.apache.spark.sql.types.{StringType, StructType}
   * and find-and-lock probes a range index over it
   * (`rocksdb_storage_engine.rs:34-50`).
   *
-  * Spark restatement: the catalog's rows live on disk as parquet, and on
-  * the driver as one [[CatalogIndex]] per catalog path — the reference's
-  * in-memory map. Every call first checks the index against a fresh
-  * `listStatus` walk of the catalog ([[Listing]]): when any parquet file
-  * was added, removed or rewritten, by this session or another process,
-  * the index is reloaded from exactly the listed files before use. Then:
+  * Spark restatement: the catalog's rows live on disk as the parquet
+  * files of a [[SnapshotTable]], and on the driver as one [[CatalogIndex]]
+  * per catalog path — the reference's in-memory map. Every call first
+  * lists the catalog's manifests once: when the current version moved,
+  * by this session or another process, the index is reloaded from that
+  * version's files before use. Then:
   *
   *  - [[ingest]] dedups against the index's id set and admits against its
-  *    size total, and appends the fresh rows in one write job (Spark's job
-  *    commit plays the optimistic transaction, SURVEY.md §3.1);
+  *    size total, and commits the fresh rows;
   *  - [[findChunk]] filters the index's rows for one dataset without a
   *    Spark job;
-  *  - [[deleteChunk]] and [[compact]] rewrite the catalog from the index
-  *    and promote the rewrite atomically.
+  *  - [[deleteChunk]] rewrites only the file that holds the chunk, and
+  *    [[compact]] rewrites the catalog into one file per dataset.
   *
-  * Each write reloads the index from the listing it left, reading
-  * exactly the listed files: the next call pays no reload, and an append
-  * another writer made while this one ran is in the index too, since
-  * rows and signature come from the same listing. Immutable files make
-  * the reference's semaphore pinning/rollback machinery unnecessary
-  * (SURVEY.md §1.4).
-  * Writers are expected one at a time per catalog, as before: the listing
-  * check keeps readers current, it does not serialise writers.
+  * Every write commits through the table's one commit path
+  * ([[SnapshotTable.replace]]) as version `base + 1`, where `base` is the
+  * version the index was read at: the reference's transactional persist.
+  * A write that raced another loses with a
+  * `ConcurrentModificationException` and leaves no visible state, so two
+  * ingests can neither admit one chunk id twice nor overshoot the quota
+  * together, and no commit is lost; the caller retries from the new
+  * version. A delete removes nothing a reader holds: the old files stay
+  * listed by the older manifests, so a scan planned before it still reads
+  * its version, until [[SnapshotTable.expireSnapshots]] drops them.
+  *
+  * `dataset_id` is a STRING compared exactly, as the reference's
+  * `DatasetId` is opaque bytes (`lib.rs:11`): `"010"` is not `"10"`.
   *
   * Scale: the index holds catalog rows (chunk metadata, tens of bytes
   * each), never chunk data; admission is evaluated against the catalog
@@ -58,59 +62,23 @@ object Ingest {
   final case class IngestResult(
       ingested: Long, deduped: Long, rejected: Option[IngestError])
 
-  /** Schema of a catalog with no parquet files yet. */
+  /** Schema of a catalog with no commit yet. */
   private val EmptySchema = StructType.fromDDL(
     "chunk_id STRING, dataset_id STRING, block_start BIGINT, " +
       "block_end BIGINT, size_bytes BIGINT")
 
-  /** Atomically promote a rewritten catalog at `tmp` over `dst` by
-    * renaming the live catalog ASIDE first (never delete-then-rename: a
-    * crash between those two steps would leave no live catalog at all).
-    * Every crash window leaves a complete catalog at `dst` or at the
-    * aside path, so recovery is a single rename — and on `s3a://`,
-    * where rename is itself a non-atomic copy, the live data is still
-    * never the thing mid-copy. A fresh (not-yet-created) `dst` promotes
-    * without an aside step; `FileSystem.delete` returning false for a
-    * missing path must not read as failure. Package-visible so
-    * IngestSpec can drive the failure branches through a FileSystem
-    * wrapper that vetoes the target rename. */
-  private[graft] def promote(fs: org.apache.hadoop.fs.FileSystem,
-      tmp: Path, dst: Path, what: String): Unit = {
-    val aside = new Path(dst.toString + "_old")
-    if (fs.exists(aside) && !fs.delete(aside, true))
-      throw new IllegalStateException(
-        s"$what: could not clear stale aside $aside; rewrite left at $tmp")
-    if (fs.exists(dst) && !fs.rename(dst, aside))
-      throw new IllegalStateException(
-        s"$what: could not move live catalog $dst aside; rewrite left at $tmp")
-    if (!fs.rename(tmp, dst)) {
-      // restore the previous catalog so the failure is non-destructive
-      if (fs.exists(aside)) fs.rename(aside, dst)
-      throw new IllegalStateException(
-        s"$what: rename $tmp -> $dst failed; previous catalog restored")
-    }
-    // best-effort: a leftover aside is cleared by the next promote
-    if (fs.exists(aside)) fs.delete(aside, true)
-  }
-
   // ------------------------------------------------------ catalog index
 
-  /** Driver-side copy of one catalog: its rows exactly as [[readCatalog]]
-    * returns them (schema, column order, partition-column type), and the
-    * [[Listing]] signature of the files they were read from. */
-  private final case class CatalogIndex(listing: Listing.Signature,
-      schema: StructType, rows: Vector[Row]) {
-    private def values(name: String): Iterator[Any] = {
-      val i = schema.fieldIndex(name)
-      rows.iterator.map(_.get(i))
-    }
-    lazy val byDataset: Map[Any, Vector[Row]] =
-      rows.groupBy(_.get(schema.fieldIndex("dataset_id")))
-    lazy val ids: Set[Any] = values("chunk_id").filter(_ != null).toSet
-    lazy val totalBytes: Long =
-      values("size_bytes").collect { case n: Number => n.longValue }.sum
-    def frame(spark: SparkSession, rs: Seq[Row] = rows): DataFrame =
-      spark.createDataFrame(rs.asJava, schema)
+  /** Driver-side copy of one catalog version (`head`, as
+    * [[SnapshotTable.head]] gives it): its rows exactly as [[readCatalog]]
+    * returns them, and for each row the manifest entry it was read from. */
+  private final case class CatalogIndex(head: (Long, Long), schema: StructType,
+      rows: Vector[Row], files: Vector[String]) {
+    private def column(name: String): Vector[Any] = rows.map(_.get(schema.fieldIndex(name)))
+    lazy val byDataset: Map[String, Vector[Row]] =
+      rows.groupBy(_.getString(schema.fieldIndex("dataset_id")))
+    lazy val ids: Set[Any] = column("chunk_id").filter(_ != null).toSet
+    lazy val totalBytes: Long = column("size_bytes").collect { case n: Number => n.longValue }.sum
   }
 
   /** One entry per qualified catalog path; a change replaces the entry. */
@@ -120,48 +88,59 @@ object Ingest {
     * per path). */
   private[graft] def indexedPaths: Int = indexes.size
 
-  /** The index of `catalogPath`, reloaded when the files on disk no
-    * longer match the listing it was loaded from. Writes call it once
-    * more after they land, so the next call finds the index current. */
+  /** The index of `catalogPath`, reloaded when the current version is no
+    * longer the one it was loaded at. Writes call it once more after they
+    * commit, so the next call finds the index current. */
   private def index(spark: SparkSession, catalogPath: String): CatalogIndex = {
-    val (fs, root) = Listing.fsFor(spark, catalogPath)
-    val files = Listing.parquetFiles(fs, root)
-    val sig = Listing.signature(files)
-    indexes.compute(root.toString, (_, cur) =>
-      if (cur != null && cur.listing == sig) cur else load(spark, root, files, sig))
+    val root = Listing.fsFor(spark, catalogPath)._2.toString
+    val head = SnapshotTable.head(root)
+    indexes.compute(root, (_, cur) =>
+      if (cur != null && cur.head == head) cur else load(spark, root, head))
   }
 
-  /** Read the listed files themselves (not a fresh listing of the
-    * directory), so the signature and the contents cannot disagree. */
-  private def load(spark: SparkSession, root: Path, files: Vector[FileStatus],
-      sig: Listing.Signature): CatalogIndex =
-    if (files.isEmpty) CatalogIndex(sig, EmptySchema, Vector.empty)
+  /** One scan of the version's files, tagging each row with its file; a
+    * file compares with the manifest entries as a qualified Hadoop path,
+    * as [[SnapshotTable.merge]] does. */
+  private def load(spark: SparkSession, table: String, head: (Long, Long)): CatalogIndex =
+    if (head._1 == 0) CatalogIndex(head, EmptySchema, Vector.empty, Vector.empty)
     else {
-      val df = spark.read.option("basePath", root.toString)
-        .parquet(files.map(_.getPath.toString): _*)
-      CatalogIndex(sig, df.schema, df.collect().toVector)
+      val fs = Listing.fsFor(spark, table)._1
+      val entry = SnapshotTable.entries(table, head._1)
+        .map(e => fs.makeQualified(new Path(e.path)) -> e.path).toMap
+      val df = SnapshotTable.readVersion(spark, table, head._1)
+      val n = df.schema.size
+      val got = df.withColumn("_file", input_file_name()).collect().toVector
+      CatalogIndex(head, df.schema, got.map(r => Row.fromSeq(r.toSeq.take(n))),
+        got.map(r => entry(fs.makeQualified(new Path(new java.net.URI(r.getString(n)))))))
     }
 
-  /** Write catalog rows in one task, sorted by (dataset_id, block_start):
-    * one file per dataset partition, with tight parquet min/max row-group
-    * stats — the columnar replacement for the reference's
+  /** Commit `rows` in place of the `removed` files as the version after
+    * the one `idx` was read at, then reload the index. The rows are
+    * grouped into one partition per dataset, each sorted by block_start,
+    * so the one write job leaves one file per dataset with tight parquet
+    * min/max stats — the columnar replacement for the reference's
     * order-preserving big-endian key clustering
     * (`rocksdb_storage_engine.rs:180-192`). */
-  private def writeRows(spark: SparkSession, rows: Seq[Row], schema: StructType,
-      mode: SaveMode, path: String): Unit =
-    spark.createDataFrame(rows.asJava, schema).coalesce(1)
-      .sortWithinPartitions("dataset_id", "block_start")
-      .write.mode(mode).partitionBy("dataset_id").parquet(path)
+  private def commit(spark: SparkSession, catalogPath: String, idx: CatalogIndex,
+      removed: Set[String], rows: Seq[Row], schema: StructType): Unit = {
+    val (d, s) = (schema.fieldIndex("dataset_id"), schema.fieldIndex("block_start"))
+    val groups = rows.groupBy(_.getString(d)).values.toSeq
+      .map(_.sortBy(r => Option(r.getAs[Number](s)).map(_.longValue)))
+    val df = spark.createDataFrame(spark.sparkContext
+      .parallelize(groups, math.max(groups.size, 1)).flatMap(identity), schema)
+    SnapshotTable.replace(spark, catalogPath, idx.head._1, removed, df)
+    index(spark, catalogPath)
+  }
 
   // ------------------------------------------------------ public surface
 
-  /** The catalog as a parquet scan: chunk_id, block_start, block_end,
-    * size_bytes (+ free columns), then the partition column dataset_id,
-    * typed by Spark's partition inference (numeric-looking ids read back
-    * as INT). A catalog with no parquet files reads as an empty frame. */
+  /** The catalog as a scan of its current version: chunk_id, dataset_id,
+    * block_start, block_end, size_bytes (+ free columns), in the order and
+    * types the first batch sent them. A catalog with no commit reads as
+    * an empty frame. */
   def readCatalog(spark: SparkSession, catalogPath: String): DataFrame = {
-    val (fs, p) = Listing.fsFor(spark, catalogPath)
-    if (Listing.parquetFiles(fs, p).nonEmpty) spark.read.parquet(catalogPath)
+    val v = SnapshotTable.currentVersion(catalogPath)
+    if (v > 0) SnapshotTable.readVersion(spark, catalogPath, v)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], EmptySchema)
   }
 
@@ -172,12 +151,16 @@ object Ingest {
     * 2. quota: if the index's total + incoming exceeds `maxSizeOnDisk`,
     *    reject the whole batch with [[MaxSizeAllocated]] (the reference
     *    rejects per-chunk; batch-level is the job-granularity analog);
-    * 3. atomic append, partitioned by dataset_id.
+    * 3. commit the fresh rows from the version the index was read at; a
+    *    commit that landed meanwhile makes this one throw
+    *    `ConcurrentModificationException`.
     *
     * Spark jobs: one to dedup the batch within itself, one to write, and
-    * the index reload from the files the write left. */
+    * the index reload from the committed version. */
   def ingest(spark: SparkSession, catalogPath: String, batch: DataFrame,
       maxSizeOnDisk: Long = 1000000000000L): IngestResult = {
+    require(batch.schema("dataset_id").dataType == StringType,
+      s"dataset_id must be STRING, got ${batch.schema("dataset_id").dataType}")
     val idx = index(spark, catalogPath)
     val byId = Window.partitionBy("chunk_id")
     val n = batch.schema.size
@@ -201,10 +184,7 @@ object Ingest {
     if (wouldBe > maxSizeOnDisk)
       IngestResult(0, deduped, Some(MaxSizeAllocated(wouldBe, maxSizeOnDisk)))
     else {
-      if (fresh.nonEmpty) {
-        writeRows(spark, fresh, batch.schema, SaveMode.Append, catalogPath)
-        index(spark, catalogPath)
-      }
+      if (fresh.nonEmpty) commit(spark, catalogPath, idx, Set.empty, fresh, batch.schema)
       IngestResult(fresh.size, deduped, None)
     }
   }
@@ -222,21 +202,11 @@ object Ingest {
   def findChunk(spark: SparkSession, catalogPath: String,
       datasetId: String, blockNumber: Long): DataFrame = {
     val idx = index(spark, catalogPath)
-    val part = idx.schema("dataset_id")
-    val candidates =
-      if (part.dataType == StringType) idx.byDataset.getOrElse(datasetId, Vector.empty)
-      else {
-        // a non-string dataset_id (numeric-looking ids) compares under
-        // Spark's coercion rules: run the predicate over the distinct ids,
-        // one row per dataset, then take the matching datasets' rows
-        val keys = idx.byDataset.keys.toSeq.map(Row(_))
-        spark.createDataFrame(keys.asJava, StructType(Seq(part)))
-          .filter(col("dataset_id") === datasetId).collect().toVector
-          .flatMap(k => idx.byDataset(k.get(0)))
-      }
-    idx.frame(spark, candidates)
-      .filter(col("dataset_id") === datasetId &&
-        col("block_start") <= blockNumber && lit(blockNumber) < col("block_end"))
+    def at(r: Row, name: String): Option[Long] =
+      Option(r.getAs[Number](idx.schema.fieldIndex(name))).map(_.longValue)
+    spark.createDataFrame(idx.byDataset.getOrElse(datasetId, Vector.empty).filter(r =>
+      at(r, "block_start").exists(_ <= blockNumber) && at(r, "block_end").exists(blockNumber < _)
+    ).asJava, idx.schema)
   }
 
   /** Dead-letter decode lane: split a raw text batch into typed good
@@ -289,38 +259,34 @@ object Ingest {
     def release(): Unit = { parsed.unpersist(blocking = false); () }
   }
 
-  /** Catalog compaction: rewrite each dataset partition's accumulated
-    * small append files into one sorted file (the small-files problem —
-    * every append job adds files; scans degrade as file count grows).
-    * The rewrite is written from the index and promoted atomically like
-    * [[deleteChunk]], with the same reader and writer caveats. Returns
+  /** Catalog compaction: rewrite the current version's files — every
+    * ingest and delete adds some — into one file per dataset, sorted by
+    * block_start (the small-files problem: scans degrade as file count
+    * grows). Written from the index, no scan; a commit that landed
+    * meanwhile makes it throw `ConcurrentModificationException`. Returns
     * the row count. */
   def compact(spark: SparkSession, catalogPath: String): Long = {
     val idx = index(spark, catalogPath)
-    rewrite(spark, catalogPath, idx, idx.rows, "_compact", "compact")
+    commit(spark, catalogPath, idx, idx.files.toSet, idx.rows, idx.schema)
+    idx.rows.size
   }
 
-  /** A8/A14 delete path: rewrite the catalog without the chunk id beside
-    * it and [[promote]] it over the live directory. Readers are not
-    * drained: a [[findChunk]] frame is local, but a [[readCatalog]] scan
-    * planned before the promote fails if it runs after; an append landing
-    * between the index read and the promote is lost. Returns the rows left. */
+  /** A8/A14 delete path: rewrite only the file or files that hold the
+    * chunk id, from the index's rows (no scan), and commit them in place
+    * of the old ones; every other file carries by reference. Readers are
+    * drained, not broken: the old files stay listed by the older
+    * versions, so a [[readCatalog]] scan planned before the delete still
+    * reads them. A commit that landed meanwhile makes the delete throw
+    * `ConcurrentModificationException`, and an absent id commits
+    * nothing. Returns the rows left. */
   def deleteChunk(spark: SparkSession, catalogPath: String, chunkId: String): Long = {
     val idx = index(spark, catalogPath)
-    // a filter over the local frame: no job, and `=!=`'s null semantics
-    val remaining = idx.frame(spark).filter(col("chunk_id") =!= chunkId).collect().toVector
-    rewrite(spark, catalogPath, idx, remaining, "_rewrite", "deleteChunk")
-  }
-
-  /** Write `rows` beside the catalog, promote them over it, and reload
-    * the index from the result. Returns the row count. */
-  private def rewrite(spark: SparkSession, catalogPath: String, idx: CatalogIndex,
-      rows: Vector[Row], suffix: String, what: String): Long = {
-    val tmp = catalogPath + suffix
-    writeRows(spark, rows, idx.schema, SaveMode.Overwrite, tmp)
-    val (fs, dst) = Listing.fsFor(spark, catalogPath)
-    promote(fs, new Path(tmp), dst, what)
-    index(spark, catalogPath)
-    rows.size
+    val id = idx.schema.fieldIndex("chunk_id")
+    val located = idx.rows.zip(idx.files)
+    val touched = located.collect { case (r, f) if r.get(id) == chunkId => f }.toSet
+    if (touched.nonEmpty)
+      commit(spark, catalogPath, idx, touched,
+        located.collect { case (r, f) if touched(f) && r.get(id) != chunkId => r }, idx.schema)
+    idx.rows.count(_.get(id) != chunkId)
   }
 }

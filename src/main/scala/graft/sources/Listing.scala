@@ -4,13 +4,14 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Content signature of a parquet table on any Hadoop filesystem: the
-  * (path, length, mtime) of every data file under it. In-process caches
-  * that describe a table's content ([[Ingest]]'s catalog index, the
-  * schema memo in [[graft.Tables]]) compare it with a fresh walk, so a
-  * table rewritten in place — by this session or another process — is
-  * never answered from the old entry.
+  * (path, length, mtime) of every data file under it. The schema memo in
+  * [[graft.Tables]] compares it with a fresh walk, so a table rewritten
+  * in place — by this session or another process — is never answered
+  * from the old entry. (A [[SnapshotTable]], such as [[Ingest]]'s
+  * catalog, needs no walk: its newest manifest names its content.) Also
+  * resolves a path's Hadoop `FileSystem` ([[fsFor]]).
   *
-  * The walk is one `listStatus` per directory. On a local catalog of 30
+  * The walk is one `listStatus` per directory. On a local table of 30
   * files in 6 partitions (4-core VM) it took 2.8 ms; a recursive
   * `listFiles(p, true)` over the same files took 155 ms. The signature of
   * a one-file corpus table takes about 0.06 ms. */

@@ -9,12 +9,12 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Manifest/snapshot table commits — the lake-scale transaction the
-  * directory-swap in [[Ingest.compact]]/[[Ingest.deleteChunk]] stands in
-  * for locally. The reference swaps RocksDB column families under a lock
-  * (/root/reference/src/rocksdb_storage_engine.rs:105-136); at 100 TB on
-  * an object store neither a lock nor a directory rename exists, so the
-  * industry shape (Iceberg/Delta) is:
+/** Manifest/snapshot table commits — the lake's one transaction
+  * protocol; [[Ingest]]'s chunk catalog is such a table too. The
+  * reference swaps RocksDB column families under a lock
+  * (`rocksdb_storage_engine.rs:105-136`); at 100 TB on an object store
+  * neither a lock nor a directory rename exists, so the industry shape
+  * (Iceberg/Delta) is:
   *
   *  - data files are IMMUTABLE and written to unique paths, so a commit
   *    never overwrites anything a reader could be holding;
@@ -34,7 +34,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    leaving only a data dir [[vacuumOrphans]] reclaims;
   *  - the new manifest carries the base's `#` metadata lines (batch
   *    markers, consumer stamps, bookmarks) after its own, except the
-  *    base's `#schema=` line, which the commit's own schema replaces.
+  *    base's `#schema=` line, which the commit's own schema replaces, and
+  *    the per-commit records ([[PerCommit]]), which describe only the
+  *    commit that wrote them.
   *
   * Readers resolve the current version once, then read only immutable
   * paths: a consistent snapshot whatever commits follow, and old
@@ -46,32 +48,41 @@ import org.apache.spark.sql.types.{DataType, StructType}
   */
 object SnapshotTable {
 
-  /** One manifest entry: a data file plus its footer-derived row count
-    * and per-column min/max for integral/timestamp columns — the stats
-    * that let a snapshot read prune files the way the main catalog's
-    * sorted parquet layout prunes row groups (Iceberg's manifest stats;
-    * the order-preserving analog of the reference's big-endian key
-    * clustering, /root/reference/src/rocksdb_storage_engine.rs:180-192). */
+  /** One manifest entry: a data file plus its footer-derived row count,
+    * per-column min/max for integral/timestamp columns (`stats`) and for
+    * short ASCII string columns (`strings`) — the stats that let a snapshot
+    * read prune files the way a sorted parquet layout prunes row groups
+    * (Iceberg's manifest stats; the order-preserving analog of the
+    * reference's big-endian key clustering, `rocksdb_storage_engine.rs:180-192`).
+    * String stats ride in a fourth field, so an entry without them
+    * renders as before. */
   final case class FileEntry(path: String, rows: Long,
-      stats: Map[String, (Long, Long)]) {
+      stats: Map[String, (Long, Long)],
+      strings: Map[String, (String, String)] = Map.empty) {
     def render: String = {
-      val st = stats.toSeq.sorted
+      def field(m: Map[String, (Any, Any)]) = m.toSeq.sortBy(_._1)
         .map { case (c, (lo, hi)) => s"$c=$lo:$hi" }.mkString(";")
-      s"$path|rows=$rows|$st"
+      s"$path|rows=$rows|${field(stats)}" +
+        (if (strings.isEmpty) "" else s"|${field(strings)}")
     }
   }
 
   private def parseEntry(line: String): FileEntry = {
     val parts = line.split('|')
-    val stats = parts.lift(2).filter(_.nonEmpty).map { s =>
-      s.split(';').map { kv =>
-        val Array(c, range) = kv.split('=')
-        val Array(lo, hi) = range.split(':')
-        c -> (lo.toLong, hi.toLong)
-      }.toMap
-    }.getOrElse(Map.empty)
-    FileEntry(parts(0), parts(1).stripPrefix("rows=").toLong, stats)
+    def field(i: Int): Map[String, (String, String)] =
+      parts.lift(i).filter(_.nonEmpty).map { s =>
+        s.split(';').map { kv =>
+          val Array(c, range) = kv.split("=", -1)
+          val Array(lo, hi) = range.split(":", -1)
+          c -> (lo, hi)
+        }.toMap
+      }.getOrElse(Map.empty)
+    FileEntry(parts(0), parts(1).stripPrefix("rows=").toLong,
+      field(2).map { case (c, (lo, hi)) => c -> (lo.toLong, hi.toLong) }, field(3))
   }
+
+  /** A column name or string stat that cannot break a manifest line. */
+  private def delimiterSafe(s: String): Boolean = !s.exists("|;=:\n\r".contains(_))
 
   /** `<table>/<sub>` qualified on the table's filesystem. */
   private def under(table: String, sub: String): (FileSystem, Path) =
@@ -121,44 +132,46 @@ object SnapshotTable {
   def entries(table: String, version: Long): Seq[FileEntry] =
     manifestLines(table, version).filterNot(_.startsWith("#")).map(parseEntry)
 
-  /** Footer scrape: row count + integral-column min/max per just-written
-    * file. Reads METADATA ONLY (the parquet writer already computed the
-    * stats; the footer is a few KB at the file tail) — the data itself is
-    * never re-read, unlike the `spark.read.parquet(...).count()` this
-    * replaced, which re-scanned the whole commit. On a cluster the same
-    * numbers arrive for free as task-side write metrics; footer reads are
-    * the single-node stand-in with identical results. */
+  /** Footer scrape: row count + integral- and string-column min/max per
+    * just-written file. Reads METADATA ONLY (the parquet writer already
+    * computed the stats; the footer is a few KB at the file tail) — the
+    * data itself is never re-read, unlike the `spark.read.parquet(...).count()`
+    * this replaced, which re-scanned the whole commit. On a cluster the
+    * same numbers arrive for free as task-side write metrics; footer reads
+    * are the single-node stand-in with identical results. */
   private def scrapeFooter(conf: org.apache.hadoop.conf.Configuration,
       file: FileStatus): FileEntry = {
+    import org.apache.parquet.io.api.Binary
+    import org.apache.parquet.schema.LogicalTypeAnnotation
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     val reader = org.apache.parquet.hadoop.ParquetFileReader
       .open(org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf))
     try {
       val blocks = reader.getRowGroups.asScala.toSeq
-      val rows = blocks.map(_.getRowCount).sum
-      val stats = scala.collection.mutable.Map.empty[String, (Long, Long)]
-      for (b <- blocks; c <- b.getColumns.asScala) {
-        val tpe = c.getPrimitiveType.getPrimitiveTypeName
-        val st = c.getStatistics
-        val name = c.getPath.toDotString
-        // stats are an OPTIMIZATION — a column whose footer min/max is
-        // not Number-typed, or whose name collides with the manifest
-        // delimiters (| ; = : newline), is simply recorded without stats
-        // rather than failing the commit
-        val safeName = !name.exists("|;=:\n\r".contains(_))
-        if ((tpe == INT64 || tpe == INT32) && st != null &&
-            st.hasNonNullValue && safeName) {
-          (st.genericGetMin, st.genericGetMax) match {
-            case (a: Number, b: Number) =>
-              val (lo, hi) = (a.longValue(), b.longValue())
-              val cur = stats.get(name)
-              stats(name) = (cur.fold(lo)(p => math.min(p._1, lo)),
-                cur.fold(hi)(p => math.max(p._2, hi)))
-            case _ => ()
-          }
+      // stats are an OPTIMIZATION: a column is simply recorded without
+      // them, rather than failing the commit, when it is neither integral
+      // nor a string, when its name or string values collide with the
+      // manifest delimiters (| ; = : newline) or are not short printable
+      // ASCII, or when a row group holding values has no footer min/max
+      // (a row group of nulls only holds no value)
+      val ranges = blocks.flatMap(_.getColumns.asScala)
+        .filter(c => c.getStatistics == null || c.getStatistics.getNumNulls != c.getValueCount)
+        .groupBy(_.getPath.toDotString).filter(col => delimiterSafe(col._1))
+        .map { case (name, cs) => (name, cs.head.getPrimitiveType, cs.map(c =>
+          Option(c.getStatistics).filter(_.hasNonNullValue).map(s => (s.genericGetMin, s.genericGetMax))))
         }
-      }
-      FileEntry(file.getPath.toString, rows, stats.toMap)
+      def bounds[T: Ordering](rs: Seq[Option[(Any, Any)]])(f: Any => T): Option[(T, T)] =
+        if (rs.contains(None)) None
+        else Some((rs.flatten.map(r => f(r._1)).min, rs.flatten.map(r => f(r._2)).max))
+      def short(v: String) = v.length <= 64 && v.forall(c => c >= ' ' && c <= '~') && delimiterSafe(v)
+      FileEntry(file.getPath.toString, blocks.map(_.getRowCount).sum,
+        ranges.collect { case (n, t, rs) if Set(INT64, INT32)(t.getPrimitiveTypeName) =>
+          bounds(rs)(_.asInstanceOf[Number].longValue).map(n -> _)
+        }.flatten.toMap,
+        ranges.collect { case (n, t, rs) if t.getLogicalTypeAnnotation == LogicalTypeAnnotation.stringType() =>
+          bounds(rs)(_.asInstanceOf[Binary].toStringUsingUTF8)
+            .filter { case (lo, hi) => short(lo) && short(hi) }.map(n -> _)
+        }.flatten.toMap)
     } finally reader.close()
   }
 
@@ -167,15 +180,30 @@ object SnapshotTable {
 
   /** All committed versions, oldest first (every one is time-travelable);
     * temp and `.crc` files in `manifests/` are not versions. */
-  def versions(table: String): Seq[Long] = {
+  def versions(table: String): Seq[Long] = manifests(table).map(_._1)
+
+  /** The committed manifests, oldest first, from one listing. */
+  private def manifests(table: String): Seq[(Long, FileStatus)] = {
     val (fs, dir) = under(table, "manifests")
-    list(fs, dir).map(_.getPath.getName)
-      .collect { case ManifestName(v) => v.toLong }.sorted
+    list(fs, dir).map(s => s.getPath.getName -> s)
+      .collect { case (ManifestName(v), s) => v.toLong -> s }.sortBy(_._1)
   }
+
+  /** The current version and its manifest's modification time, or
+    * `(0, 0)` with none: what a driver-side cache of the current
+    * version keys on, so a table deleted and recreated at the same path
+    * is not mistaken for the old one. One listing. */
+  private[graft] def head(table: String): (Long, Long) =
+    manifests(table).lastOption.fold((0L, 0L)) { case (v, s) => (v, s.getModificationTime) }
 
   /** A fresh, unique data directory for one commit's files. */
   private def newDataDir(table: String): Path =
     under(table, s"data/${UUID.randomUUID()}")._2
+
+  /** Metadata lines that describe one commit (what a merge touched, a
+    * compaction or z-order rewrite): a later commit does not carry them,
+    * so they do not pile up in every later manifest. */
+  private val PerCommit = Seq("#schema=", "#merge=", "#compacted=", "#optimized=")
 
   /** The one commit path (the rule in the header): list `kept` by
     * reference plus every non-empty parquet file written under
@@ -195,7 +223,7 @@ object SnapshotTable {
       .sortBy(_.getPath.toString).map(scrapeFooter(conf, _)).filter(_.rows > 0)
     val listed = kept ++ written
     val carried =
-      if (base > 0) manifestMeta(table, base).filterNot(_.startsWith("#schema="))
+      if (base > 0) manifestMeta(table, base).filterNot(l => PerCommit.exists(l.startsWith))
       else Seq.empty
     val body = (s"version=${base + 1}" +: s"rows=${listed.map(_.rows).sum}" +:
       s"#schema=${schema.json}" +: ((meta ++ carried).distinct ++ listed.map(_.render)))
@@ -205,6 +233,19 @@ object SnapshotTable {
         s"${p.getName} already committed by a concurrent writer — " +
           "re-read the current version and retry the commit")
     base + 1
+  }
+
+  /** Write `df` to a new data dir and publish `entries(base)` without
+    * the `removed` paths, plus the written files, as version `base + 1`
+    * under the base's schema widened by `df`'s ([[widen]]) — a rewrite
+    * from the version it read. Returns the new version. */
+  private[graft] def replace(spark: SparkSession, table: String, base: Long,
+      removed: Set[String], df: DataFrame, meta: Seq[String] = Seq.empty): Long = {
+    val dataDir = newDataDir(table)
+    df.write.parquet(dataDir.toString)
+    if (base == 0) publish(spark, table, base, df.schema, Seq.empty, dataDir, meta)
+    else publish(spark, table, base, widen(schemaOf(table, base), df.schema),
+      entries(table, base).filterNot(e => removed(e.path)), dataDir, meta)
   }
 
   /** `pinned` union-widened by `incoming`: new columns
@@ -396,9 +437,7 @@ object SnapshotTable {
         if (touched.isEmpty) upd
         else readFiles(touched).join(upd.select(key), Seq(key), "left_anti")
           .unionByName(upd)
-      val dataDir = newDataDir(table)
-      out.write.parquet(dataDir.toString)
-      publish(spark, table, v, schema, carried, dataDir,
+      replace(spark, table, v, touched.map(_.path).toSet, out,
         meta = Seq(s"#merge=$key;touched=${touched.size};carried=${carried.size}"))
     } finally upd.unpersist(blocking = false)
   }
@@ -419,16 +458,13 @@ object SnapshotTable {
     val v = currentVersion(table)
     require(v > 0, s"no committed snapshot in $table")
     val all = entries(table, v)
-    val (touched, untouched) = all.partition { e =>
+    val touched = all.filter { e =>
       e.stats.get(column).forall { case (mn, mx) => mx >= lo && mn <= hi }
     }
     if (touched.isEmpty) return v
-    val schema = schemaOf(table, v)
-    val dataDir = newDataDir(table)
-    readUnder(spark, schema, touched.map(_.path))
-      .filter(!(col(column) >= lo && col(column) <= hi))
-      .write.parquet(dataDir.toString)
-    publish(spark, table, v, schema, untouched, dataDir, meta = Seq.empty)
+    replace(spark, table, v, touched.map(_.path).toSet,
+      readUnder(spark, schemaOf(table, v), touched.map(_.path))
+        .filter(!(col(column) >= lo && col(column) <= hi)))
   }
 
   /** Execute a greedy compaction PLAN — the EXECUTION half of
@@ -497,12 +533,11 @@ object SnapshotTable {
   def optimizeZorder(spark: SparkSession, table: String,
       colA: String, colB: String, bits: Int = 8,
       targetRows: Long = 1000000L): Long = {
-    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.functions.{col, expr, lit, max, min}
     val v = currentVersion(table)
     require(v > 0, s"no committed snapshot in $table")
     val all = entries(table, v)
-    val schema = schemaOf(table, v)
-    val df0 = readUnder(spark, schema, all.map(_.path))
+    val df0 = readUnder(spark, schemaOf(table, v), all.map(_.path))
     val mm = df0.agg(
       min(col(colA).cast("long")).as("a_lo"), max(col(colA).cast("long")).as("a_hi"),
       min(col(colB).cast("long")).as("b_lo"), max(col(colB).cast("long")).as("b_hi"))
@@ -520,13 +555,11 @@ object SnapshotTable {
       bucket(colA, aLo, aHi), bucket(colB, bLo, bHi), bits)
     val rows = all.map(_.rows).sum
     val nOut = math.max(1L, math.ceil(rows.toDouble / targetRows).toLong).toInt
-    val dataDir = newDataDir(table)
-    df0.withColumn("__z", z)
-      .repartitionByRange(nOut, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.parquet(dataDir.toString)
-    publish(spark, table, v, schema, Seq.empty, dataDir,
+    replace(spark, table, v, all.map(_.path).toSet,
+      df0.withColumn("__z", z)
+        .repartitionByRange(nOut, col("__z"))
+        .sortWithinPartitions("__z")
+        .drop("__z"),
       meta = Seq(s"#optimized=zorder($colA,$colB,bits=$bits)"))
   }
 
@@ -648,6 +681,18 @@ object SnapshotTable {
       lo: Long, hi: Long): Seq[String] =
     entries(table, version).filter { e =>
       e.stats.get(column).forall { case (mn, mx) => mx >= lo && mn <= hi }
+    }.map(_.path)
+
+  /** Data files of `version` whose manifest string stats on `column`
+    * can hold `value` — the [[filesForRange]] of a string column, such as
+    * the chunk catalog's `dataset_id`. Files with no stats for the
+    * column are conservatively kept. */
+  def filesForValue(table: String, version: Long, column: String,
+      value: String): Seq[String] =
+    entries(table, version).filter { e =>
+      // string stats are ASCII only, where String order is parquet's
+      // unsigned-byte order for any probe value
+      e.strings.get(column).forall { case (mn, mx) => mn <= value && value <= mx }
     }.map(_.path)
 
   /** Range read with MANIFEST-LEVEL pruning: files whose [min, max] on

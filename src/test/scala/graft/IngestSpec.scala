@@ -1,10 +1,13 @@
 package graft
 
 import java.nio.file.Files
-import graft.sources.Ingest
+import java.util.ConcurrentModificationException
+import org.apache.spark.sql.types.StringType
+import graft.sources.{Ingest, SnapshotTable}
 
 /** Ingest-pipeline semantics (reference A2-A5/A15): idempotent replay,
-  * in-batch dedup, quota rejection, delete rewrite. */
+  * in-batch dedup, quota rejection, delete rewrite, and the catalog's
+  * commits under concurrent writers and readers. */
 class IngestSpec extends SparkSpec {
   import spark.implicits._
 
@@ -13,6 +16,26 @@ class IngestSpec extends SparkSpec {
 
   private def tmpCatalog(): String =
     Files.createTempDirectory("graft_cat").resolve("catalog").toString
+
+  /** A catalog on the `mock://` object store ([[MockObjectStoreFs]]). */
+  private def mockCatalog(): String = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.mock.impl", classOf[MockObjectStoreFs].getName)
+    conf.set("fs.mock.impl.disable.cache", "true")
+    "mock://" + tmpCatalog()
+  }
+
+  /** Test-name suffix and catalog factory per store. */
+  private val stores: Seq[(String, () => String)] =
+    Seq("" -> (() => tmpCatalog()), " (mock://)" -> (() => mockCatalog()))
+
+  /** The directory that holds the catalog: a gate on it also holds a
+    * write beside the catalog, not only one inside it. */
+  private def parentOf(path: String): String =
+    new org.apache.hadoop.fs.Path(path).getParent.toString
+
+  private def lost[A](res: Either[Throwable, A]): Boolean =
+    res.swap.exists(_.isInstanceOf[ConcurrentModificationException])
 
   test("fresh ingest persists all; replay ingests nothing (idempotent)") {
     val path = tmpCatalog()
@@ -53,18 +76,12 @@ class IngestSpec extends SparkSpec {
       Ingest.ingest(spark, path,
         batch((s"c$i", "D1", i * 100L, i * 100L + 100L, 10L)))
     }
-    def parquetFiles(): Int = {
-      def walk(f: java.io.File): Seq[java.io.File] = {
-        val kids = Option(f.listFiles()).getOrElse(Array.empty).toSeq
-        kids.filter(_.isFile) ++ kids.filter(_.isDirectory).flatMap(walk)
-      }
-      walk(new java.io.File(path)).count(_.getName.endsWith(".parquet"))
-    }
-    val before = parquetFiles()
-    assert(before >= 5)
+    def entries(): Int =
+      SnapshotTable.entries(path, SnapshotTable.currentVersion(path)).size
+    assert(entries() == 5)
     val n = Ingest.compact(spark, path)
     assert(n == 5)
-    assert(parquetFiles() < before)
+    assert(entries() == 1) // one file per dataset
     assert(Ingest.readCatalog(spark, path).count() == 5)
     assert(Ingest.findChunk(spark, path, "D1", 250).count() == 1)
   }
@@ -87,9 +104,8 @@ class IngestSpec extends SparkSpec {
     val path = tmpCatalog()
     Ingest.ingest(spark, path, batch(("c1", "D1", 0, 100, 1), ("c2", "D1", 100, 200, 1)))
     assert(ids(Ingest.findChunk(spark, path, "D1", 250)).isEmpty) // index warm
-    // another writer appends with a plain partitioned parquet write
-    batch(("c3", "D1", 200, 300, 1)).write.mode("append")
-      .partitionBy("dataset_id").parquet(path)
+    // another writer commits an append to the catalog table
+    SnapshotTable.commit(spark, path, batch(("c3", "D1", 200, 300, 1)))
     assert(ids(Ingest.findChunk(spark, path, "D1", 250)) == Set("c3"))
     assertFindMatchesScan(spark, path, "D1", 250)
     // the reloaded index feeds dedup: c3 is a replay, c4 is new
@@ -98,27 +114,25 @@ class IngestSpec extends SparkSpec {
     assertFindMatchesScan(spark, path, "D2", 5)
   }
 
-  test("numeric-looking dataset ids read back as INT, in the index as in a scan") {
+  test("numeric-looking dataset ids stay STRING and match exactly, in index and scan") {
     val path = tmpCatalog()
     Ingest.ingest(spark, path, batch(("c1", "1", 0, 100, 1), ("c2", "10", 0, 100, 1)))
-    assert(Ingest.readCatalog(spark, path).schema("dataset_id").dataType ==
-      org.apache.spark.sql.types.IntegerType)
-    assertFindMatchesScan(spark, path, "1", 50)
-    assertFindMatchesScan(spark, path, "10", 50)
-    // ids compare under Spark's coercion rules, still without a job
-    assertFindMatchesScan(spark, path, "010", 50)
+    assert(Ingest.readCatalog(spark, path).schema("dataset_id").dataType == StringType)
+    // ids are opaque bytes: "10" finds its rows, "010" finds nothing
+    assert(ids(Ingest.findChunk(spark, path, "10", 50)) == Set("c2"))
+    assert(ids(Ingest.findChunk(spark, path, "010", 50)).isEmpty)
+    Seq("1", "10", "010").foreach(d => assertFindMatchesScan(spark, path, d, 50))
     assert(jobsDuring(Ingest.findChunk(spark, path, "10", 50).collect()) == 0)
-    // a new numeric dataset keeps the type; a non-numeric one turns the
-    // column to STRING for every row
+    // new numeric and non-numeric datasets, and a delete, keep the type
     Ingest.ingest(spark, path, batch(("c3", "2", 0, 100, 1)))
-    assertFindMatchesScan(spark, path, "2", 50)
     Ingest.ingest(spark, path, batch(("c4", "x", 0, 100, 1)))
-    assert(Ingest.readCatalog(spark, path).schema("dataset_id").dataType ==
-      org.apache.spark.sql.types.StringType)
-    Seq("1", "2", "10", "x").foreach(d => assertFindMatchesScan(spark, path, d, 50))
-    // and deleting the only non-numeric chunk turns it back to INT
     Ingest.deleteChunk(spark, path, "c4")
-    Seq("1", "2", "10").foreach(d => assertFindMatchesScan(spark, path, d, 50))
+    assert(Ingest.readCatalog(spark, path).schema("dataset_id").dataType == StringType)
+    Seq("1", "2", "10", "x").foreach(d => assertFindMatchesScan(spark, path, d, 50))
+    // a batch that types dataset_id otherwise is refused
+    intercept[IllegalArgumentException](Ingest.ingest(spark, path,
+      Seq(("c5", 7L, 0L, 100L, 1L)).toDF("chunk_id", "dataset_id", "block_start",
+        "block_end", "size_bytes")))
   }
 
   test("overlapping ranges: find returns every chunk whose range holds the block") {
@@ -143,41 +157,80 @@ class IngestSpec extends SparkSpec {
       .collect().toSeq == Seq("gcs"))
     Ingest.compact(spark, path)
     assertFindMatchesScan(spark, path, "D1", 50)
-    // a batch without the free column: the index reloads from the files
+    // a batch without the free column: the index reloads from the commit
     Ingest.ingest(spark, path, batch(("c3", "D1", 200, 300, 1)))
     assertFindMatchesScan(spark, path, "D1", 250)
   }
 
   test("an append that lands while ingest or delete commits is in the index") {
-    val dir = Files.createTempDirectory("graft_race")
-    val root = dir.resolve("catalog")
-    val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.racy.impl", classOf[RacyObjectStoreFs].getName)
-    conf.set("fs.racy.impl.disable.cache", "true")
-    val path = "racy://" + root
+    val path = tmpCatalog()
     Ingest.ingest(spark, path, batch(("c1", "D1", 0, 100, 1)))
-    // another writer's file for D1, copied in while the catalog commits
-    def outside(id: String, start: Long): () => Unit = {
-      val stage = dir.resolve(s"stage_$id")
-      batch((id, "D1", start, start + 100, 1)).coalesce(1)
-        .write.partitionBy("dataset_id").parquet(stage.toString)
-      val file = Files.list(stage.resolve("dataset_id=D1")).toArray
-        .map(_.asInstanceOf[java.nio.file.Path]).find(_.toString.endsWith(".parquet")).get
-      () => { Files.copy(file, root.resolve(s"dataset_id=D1/part-outside-$id.parquet")); () }
-    }
-    RacyObjectStoreFs.arm(root.toString, outside("o1", 500))
-    Ingest.ingest(spark, path, batch(("c2", "D2", 0, 100, 1)))
-    assert(RacyObjectStoreFs.armed.get.isEmpty, "the outside append never ran")
+    // another writer's commit lands while an ingest is held at its data
+    // write: the ingest loses, and the append is in the index
+    def outside(id: String, start: Long): Long =
+      SnapshotTable.commit(spark, path, batch((id, "D1", start, start + 100, 1)))
+    val (ingest, _) = GatedCommitter.holding(path)(
+      Ingest.ingest(spark, path, batch(("c2", "D2", 0, 100, 1))))(outside("o1", 500))
+    assert(lost(ingest), ingest)
     assert(ids(Ingest.findChunk(spark, path, "D1", 550)) == Set("o1"))
     assertFindMatchesScan(spark, path, "D1", 550)
-    assert(Ingest.ingest(spark, path, batch(("o1", "D1", 500, 600, 1))).deduped == 1)
-    // the same while a delete promotes its rewrite
-    RacyObjectStoreFs.arm(root.toString, outside("o2", 700))
-    assert(Ingest.deleteChunk(spark, path, "c2") == 2) // c1 and o1 rewritten
-    assert(RacyObjectStoreFs.armed.get.isEmpty, "the outside append never ran")
+    val retry = Ingest.ingest(spark, path, batch(("o1", "D1", 500, 600, 1), ("c2", "D2", 0, 100, 1)))
+    assert(retry.ingested == 1 && retry.deduped == 1)
+    // the same while a delete is held
+    val (delete, _) = GatedCommitter.holding(path)(
+      Ingest.deleteChunk(spark, path, "c2"))(outside("o2", 700))
+    assert(lost(delete), delete)
     assert(ids(Ingest.findChunk(spark, path, "D1", 750)) == Set("o2"))
     assertFindMatchesScan(spark, path, "D1", 750)
+    assert(Ingest.deleteChunk(spark, path, "c2") == 3) // c1, o1 and o2 left
     assert(Ingest.ingest(spark, path, batch(("o2", "D1", 700, 800, 1))).deduped == 1)
+  }
+
+  for ((on, mk) <- stores) {
+    test(s"a delete that races an ingest loses, and the ingested chunk is kept$on") {
+      val path = mk()
+      Ingest.ingest(spark, path, batch(("c1", "D1", 0, 100, 1), ("c2", "D1", 100, 200, 1)))
+      val (delete, fresh) = GatedCommitter.holding(parentOf(path))(
+        Ingest.deleteChunk(spark, path, "c1")) {
+        Ingest.ingest(spark, path, batch(("c3", "D1", 200, 300, 1)))
+      }
+      assert(fresh.ingested == 1)
+      assert(lost(delete), delete)
+      assert(ids(Ingest.findChunk(spark, path, "D1", 250)) == Set("c3"))
+      assert(ids(Ingest.findChunk(spark, path, "D1", 50)) == Set("c1"))
+      // the retried delete reads the new version and wins
+      assert(Ingest.deleteChunk(spark, path, "c1") == 2)
+      assert(ids(Ingest.findChunk(spark, path, "D1", 250)) == Set("c3"))
+      assert(ids(Ingest.findChunk(spark, path, "D1", 50)).isEmpty)
+      assertFindMatchesScan(spark, path, "D1", 250)
+    }
+
+    test(s"a catalog scan planned before a delete still reads its rows after it$on") {
+      val path = mk()
+      Ingest.ingest(spark, path, batch(("c1", "D1", 0, 100, 1), ("c2", "D2", 0, 100, 1)))
+      val before = Ingest.readCatalog(spark, path)
+      assert(Ingest.deleteChunk(spark, path, "c1") == 1)
+      Ingest.compact(spark, path)
+      assert(ids(before) == Set("c1", "c2"))
+      assert(ids(Ingest.readCatalog(spark, path)) == Set("c2"))
+    }
+
+    test(s"of two racing ingests one loses; its retry dedups against the winner$on") {
+      val path = mk()
+      Ingest.ingest(spark, path, batch(("c1", "D1", 0, 100, 2)))
+      // each batch fits the quota alone, not both together
+      val mine = batch(("c2", "D1", 100, 200, 5), ("c3", "D2", 0, 100, 5))
+      val (held, theirs) = GatedCommitter.holding(parentOf(path))(
+        Ingest.ingest(spark, path, mine, maxSizeOnDisk = 12L)) {
+        Ingest.ingest(spark, path, batch(("c3", "D2", 0, 100, 5), ("c4", "D2", 100, 200, 5)),
+          maxSizeOnDisk = 12L)
+      }
+      assert(theirs.ingested == 2 && theirs.rejected.isEmpty)
+      assert(lost(held), held)
+      val retry = Ingest.ingest(spark, path, mine, maxSizeOnDisk = 12L)
+      assert(retry.deduped == 1 && retry.rejected.nonEmpty, retry)
+      assert(ids(Ingest.readCatalog(spark, path)) == Set("c1", "c3", "c4"))
+    }
   }
 
   test("the index holds one entry per catalog path after 50 ingests") {
@@ -190,88 +243,6 @@ class IngestSpec extends SparkSpec {
     assert(Ingest.readCatalog(spark, path).count() == 50)
     Seq(("D0", 5L), ("D1", 495L), ("D2", 55L))
       .foreach { case (d, b) => assertFindMatchesScan(spark, path, d, b) }
-  }
-
-  // ------------------------------------------------- promote crash paths
-
-  import org.apache.hadoop.fs.{FileSystem, FilterFileSystem, Path => HPath}
-
-  /** Wrapper that vetoes the FIRST rename whose source ends with
-    * `failSrcSuffix` — the fault injection for promote's
-    * rename(tmp,dst)-fails branch. */
-  private class VetoRenameFs(underlying: FileSystem, failSrcSuffix: String)
-      extends FilterFileSystem(underlying) {
-    var vetoed = 0
-    override def rename(src: HPath, dst: HPath): Boolean =
-      if (vetoed == 0 && src.toString.endsWith(failSrcSuffix)) {
-        vetoed += 1; false
-      } else super.rename(src, dst)
-  }
-
-  private def rawFs(): FileSystem =
-    new HPath("file:///").getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def mkDirWithMarker(fs: FileSystem, dir: HPath, marker: String): Unit = {
-    fs.mkdirs(dir)
-    fs.create(new HPath(dir, marker), true).close()
-  }
-
-  test("promote: failed target rename restores the previous catalog") {
-    val root = new HPath("file://" + Files.createTempDirectory("graft_promote"))
-    val fs = rawFs()
-    val dst = new HPath(root, "catalog")
-    val tmp = new HPath(root, "catalog_tmp")
-    mkDirWithMarker(fs, dst, "OLD")
-    mkDirWithMarker(fs, tmp, "NEW")
-    val veto = new VetoRenameFs(fs, "catalog_tmp")
-    val e = intercept[IllegalStateException] {
-      Ingest.promote(veto, tmp, dst, "test")
-    }
-    assert(e.getMessage.contains("previous catalog restored"))
-    assert(veto.vetoed == 1)
-    // the live catalog is back at dst with its ORIGINAL content, the
-    // aside slot is drained, and the rewrite is still intact at tmp
-    assert(fs.exists(new HPath(dst, "OLD")), "previous catalog not restored")
-    assert(!fs.exists(new HPath(root, "catalog_old")), "aside left behind")
-    assert(fs.exists(new HPath(tmp, "NEW")), "rewrite lost")
-  }
-
-  test("promote: fresh dst (no live catalog) promotes without an aside") {
-    val root = new HPath("file://" + Files.createTempDirectory("graft_promote"))
-    val fs = rawFs()
-    val dst = new HPath(root, "catalog")
-    val tmp = new HPath(root, "catalog_tmp")
-    mkDirWithMarker(fs, tmp, "NEW")
-    Ingest.promote(fs, tmp, dst, "test")
-    assert(fs.exists(new HPath(dst, "NEW")))
-    assert(!fs.exists(tmp))
-    assert(!fs.exists(new HPath(root, "catalog_old")))
-  }
-
-  test("promote: success over a live catalog clears the aside") {
-    val root = new HPath("file://" + Files.createTempDirectory("graft_promote"))
-    val fs = rawFs()
-    val dst = new HPath(root, "catalog")
-    val tmp = new HPath(root, "catalog_tmp")
-    mkDirWithMarker(fs, dst, "OLD")
-    mkDirWithMarker(fs, tmp, "NEW")
-    Ingest.promote(fs, tmp, dst, "test")
-    assert(fs.exists(new HPath(dst, "NEW")) && !fs.exists(new HPath(dst, "OLD")))
-    assert(!fs.exists(new HPath(root, "catalog_old")), "aside not cleared")
-    assert(!fs.exists(tmp))
-  }
-
-  test("promote: stale aside from a prior crash is cleared, not fatal") {
-    val root = new HPath("file://" + Files.createTempDirectory("graft_promote"))
-    val fs = rawFs()
-    val dst = new HPath(root, "catalog")
-    val tmp = new HPath(root, "catalog_tmp")
-    mkDirWithMarker(fs, dst, "OLD")
-    mkDirWithMarker(fs, tmp, "NEW")
-    mkDirWithMarker(fs, new HPath(root, "catalog_old"), "STALE")
-    Ingest.promote(fs, tmp, dst, "test")
-    assert(fs.exists(new HPath(dst, "NEW")))
-    assert(!fs.exists(new HPath(root, "catalog_old")))
   }
 
   test("quarantine lane: every malformed line lands with its first-failing reason") {
@@ -309,30 +280,6 @@ class IngestSpec extends SparkSpec {
     assert(reasons("c10,1,0,100,512,extra") == "wrong_arity")
     batch.release() // cache ownership: caller frees after both lanes read
   }
-}
-
-/** The `mock://` object store under the `racy://` scheme, with a hook
-  * that runs once, right after the first rename that lands a file or
-  * directory inside (or onto) a catalog: a second writer's append
-  * arriving while a catalog write commits. */
-class RacyObjectStoreFs extends MockObjectStoreFs {
-  override def getScheme: String = "racy"
-  override def getUri: java.net.URI = java.net.URI.create("racy:///")
-  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean = {
-    val renamed = super.rename(src, dst)
-    val to = dst.toUri.getPath
-    val cur = RacyObjectStoreFs.armed.get
-    cur.foreach { case (root, hook) =>
-      if (renamed && !to.contains("_temporary") && (to == root || to.startsWith(root + "/")) &&
-          RacyObjectStoreFs.armed.compareAndSet(cur, None)) hook()
-    }
-    renamed
-  }
-}
-
-object RacyObjectStoreFs {
-  val armed = new java.util.concurrent.atomic.AtomicReference[Option[(String, () => Unit)]](None)
-  def arm(root: String, hook: () => Unit): Unit = armed.set(Some((root, hook)))
 }
 
 object IngestSpec {

@@ -5,15 +5,15 @@ import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.hadoop.fs.{FileStatus, FileUtil, Path => HPath, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
-import graft.sources.Ingest
+import graft.sources.{Ingest, SnapshotTable}
 
 /** A Hadoop FileSystem with OBJECT-STORE semantics (the part of
   * `s3a://` that changes correctness, minus the wire protocol): rename
   * is not a metadata operation but a full copy-then-delete, exactly how
   * S3A emulates it over COPY+DELETE requests. Registered under the
   * `mock://` scheme and driven through the real ingest/catalog path —
-  * this pins that nothing in Ingest (job-commit renames, the aside
-  * promote, recursive listing) silently assumes POSIX atomic rename,
+  * this pins that nothing in Ingest (job-commit renames, the manifest
+  * commit, listing) silently assumes POSIX atomic rename,
   * which is the concrete risk behind SURVEY §2 B2's "environment-bound"
   * status (the reference's own store is an S3 GET/PUT,
   * /root/reference/src/data_manager.rs:195-209). */
@@ -72,12 +72,12 @@ class ObjectStoreFsSpec extends SparkSpec {
       "no rename crossed the object-store filesystem")
   }
 
-  test("find + delete (aside promote) work over the object store") {
+  test("find + delete work over the object store") {
     val path = mockPath()
     Ingest.ingest(spark, path,
       batch(("c1", "D1", 0, 100, 1), ("c2", "D1", 100, 200, 1)))
     assert(Ingest.findChunk(spark, path, "D1", 150).count() == 1)
-    // deleteChunk rewrites + promotes via rename-aside — all copy-delete
+    // deleteChunk rewrites the chunk's file and commits a manifest
     assert(Ingest.deleteChunk(spark, path, "c2") == 1)
     assert(Ingest.findChunk(spark, path, "D1", 150).count() == 0)
     assert(Ingest.findChunk(spark, path, "D1", 50).count() == 1)
@@ -90,7 +90,7 @@ class ObjectStoreFsSpec extends SparkSpec {
     Ingest.ingest(spark, path, batch(("c1", "7", 0, 100, 1), ("c2", "7", 50, 150, 1)))
     assert(ids(Ingest.findChunk(spark, path, "7", 75)) == Set("c1", "c2"))
     assertFindMatchesScan(spark, path, "7", 75)
-    batch(("c3", "8", 0, 100, 1)).write.mode("append").partitionBy("dataset_id").parquet(path)
+    SnapshotTable.commit(spark, path, batch(("c3", "8", 0, 100, 1)))
     assertFindMatchesScan(spark, path, "8", 50)
     val r = Ingest.ingest(spark, path, batch(("c3", "8", 0, 100, 1), ("c4", "8", 100, 200, 1)))
     assert(r.ingested == 1 && r.deduped == 1)

@@ -466,6 +466,16 @@ class SnapshotSpec extends SparkSpec {
     assert(SnapshotTable.read(spark, t).count() == 5)
   }
 
+  test("per-commit records do not ride later commits; bookmarks do") {
+    val t = tmp()
+    SnapshotTable.commitBatch(spark, t, (1 to 5).toDF("n").coalesce(1), 0L)
+    // three merges whose records differ: a new key, a matched key, a new key
+    Seq(6, 1, 7).foreach(k => SnapshotTable.merge(spark, t, Seq(k).toDF("n"), "n"))
+    val meta = SnapshotTable.manifestMeta(t, SnapshotTable.currentVersion(t))
+    assert(meta.count(_.startsWith("#merge=")) == 1, meta)
+    assert(meta.contains("#batch=0"), meta)
+  }
+
   test("vacuumOrphans keeps every referenced file across all versions") {
     val t = tmp()
     SnapshotTable.commit(spark, t, (1 to 5).toDF("n"))

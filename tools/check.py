@@ -3,7 +3,9 @@
 
 Reads each SparkEntry query result (parquet written by graft.Verify),
 runs the matching oracle SQL from oracle_sql.json in DuckDB over the same
-testdata tables, sorts columns by name, and compares row-by-row.
+testdata tables, sorts columns by name, and compares row-by-row. Each
+query listed in the dump's failures.json (a query that threw) counts as a
+failure.
 
 Usage: python3 tools/check.py <verify_out_dir> <sf_dir>
 """
@@ -85,8 +87,19 @@ def main(out_dir, sf_dir):
 
     ok, bad, noracle, skipped = [], [], [], []
     import time
+    # graft.Verify lists each query that threw in failures.json: such a
+    # query leaves no result dir (or a stale one), so count it here as a
+    # failure instead of letting it vanish from the summary. A dump
+    # without the file is checked as before.
+    failures = []
+    if os.path.exists(f"{out_dir}/failures.json"):
+        with open(f"{out_dir}/failures.json") as f:
+            failures = json.load(f)
+    threw = {e["query"] for e in failures}
+    bad += [(e["query"], f"threw {e['exception']}: {e['message']}")
+            for e in failures]
     names = sorted(d for d in os.listdir(out_dir)
-                   if os.path.isdir(os.path.join(out_dir, d)))
+                   if os.path.isdir(os.path.join(out_dir, d)) and d not in threw)
     # GRAFT_CHECK_SKIP=a,b,c — leave out oracles that are prohibitively
     # expensive at a given SF; recorded distinctly (err: skipped_by_env)
     # so a skipped check can never masquerade as a query that genuinely
@@ -169,7 +182,7 @@ def main(out_dir, sf_dir):
                 universe = set(json.load(f))
         else:
             universe = set(oracles)
-        missing = sorted(universe - set(names))
+        missing = sorted(universe - set(names) - threw)
         # _meta is stamped on EVERY board, full or partial (r15 verdict
         # task 4): git sha + tree state + UTC make a byte-identical
         # replay still change the file and self-certify which code it
