@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Dumps `explain("formatted")` per query to individual files — the
   * optimization-round evidence format (`plans/r19/<q>_before.txt` /
-  * `_after.txt`). Unlike [[Plans]] (curated PLANS.md), this writes one
-  * file per query so a before/after pair can be diffed.
+  * `_after.txt`), one file per query so a before/after pair can be
+  * diffed. An unknown or throwing query is named and fails the run.
   *
   * Run: `sbt "runMain graft.PlanDump <sfDir> <outDir> <suffix> [names…|all]"`
   *

@@ -51,7 +51,7 @@ object TouchedQueries {
     "graft/Bench.scala", "graft/Verify.scala", "graft/ScaleGen.scala",
     "graft/Probe.scala", "graft/LayoutBuildProbe.scala",
     "graft/IncDedupProbe.scala", "graft/Meta.scala",
-    "graft/Plans.scala", "graft/TouchedQueries.scala")
+    "graft/TouchedQueries.scala")
 
   /** Pure classification: `NONE` (nothing query-bearing changed),
     * `ALL` (shared infra / build config — full board), or the sorted

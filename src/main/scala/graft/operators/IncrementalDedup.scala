@@ -48,16 +48,15 @@ object IncrementalDedup {
   private[graft] val IndexFormat = 3
   private val FormatMeta = s"#band_index_format=$IndexFormat"
 
-  /** Fail fast if `indexTable`'s newest manifest was stamped by a
-    * different [[IndexFormat]] (or none — an index older than the
+  /** Fail fast if `index`, `indexTable`'s newest manifest, was stamped by
+    * a different [[IndexFormat]] (or none — an index older than the
     * stamp discipline is equally unreadable: its rows are in an
     * unknown band format). */
-  private def requireFormat(indexTable: String, version: Long): Unit = {
-    val stamped = SnapshotTable.manifestMeta(indexTable, version)
-      .collectFirst { case s if s.startsWith("#band_index_format=") =>
-        s.stripPrefix("#band_index_format=") }
+  private def requireFormat(indexTable: String, index: SnapshotTable.Manifest): Unit = {
+    val stamped = index.meta.collectFirst { case s if s.startsWith("#band_index_format=") =>
+      s.stripPrefix("#band_index_format=") }
     require(stamped.contains(IndexFormat.toString),
-      s"band index $indexTable v$version has format " +
+      s"band index $indexTable v${index.version} has format " +
         s"${stamped.getOrElse("<unstamped>")}, this build writes v$IndexFormat " +
         "(TextOps.bandSignatures changed shape) — rebuild the index; " +
         "joining across formats silently matches nothing")
@@ -73,12 +72,12 @@ object IncrementalDedup {
     // format guard FIRST: localCheckpoint is eager, so computing the
     // batch's signatures before the check would pay the full minhash
     // cost only to be rejected on a legacy index (r14 advisor)
-    val indexVersion = SnapshotTable.currentVersion(indexTable)
-    if (indexVersion > 0) requireFormat(indexTable, indexVersion)
+    val index = SnapshotTable.current(indexTable)
+    if (index.version > 0) requireFormat(indexTable, index)
     val bands = TextOps.bandSignatures(batch).localCheckpoint()
     val seenBefore =
-      if (indexVersion > 0)
-        bands.join(SnapshotTable.read(spark, indexTable),
+      if (index.version > 0)
+        bands.join(index.read(spark),
           Seq("band", "bh"), "left_semi")
           .select("doc_id")
       else bands.select("doc_id").limit(0)
@@ -89,14 +88,14 @@ object IncrementalDedup {
     val dropped = seenBefore.unionByName(dupWithinBatch).distinct()
     val kept = batch.join(dropped, Seq("doc_id"), "left_anti")
     SnapshotTable.commitWithMeta(spark, indexTable, bands, append = true,
-      meta = Seq(FormatMeta))
+      meta = Seq(FormatMeta), index)
     kept
   }
 
   /** Maintenance: compact the band index's accreted per-batch files.
     * The index is append-only — N batches leave N commits' worth of
     * small files, and every batch's index join lists all of them
-    * ([[SnapshotTable.entries]] of one version), so per-batch cost picks
+    * (the entries of one [[SnapshotTable.Manifest]]), so per-batch cost picks
     * up an O(batches) file-listing term on top of the O(index rows) join.
     * Planned compaction ([[SnapshotTable.compactPlanned]], keyed on
     * `doc_id` so file ranges stay contiguous) resets that accretion.
@@ -106,10 +105,10 @@ object IncrementalDedup {
     * loudly as joining it. */
   def compactIndex(spark: SparkSession, indexTable: String,
       groups: Int = 8): Long = {
-    val v = SnapshotTable.currentVersion(indexTable)
-    require(v > 0, s"no committed band index at $indexTable")
-    requireFormat(indexTable, v)
-    SnapshotTable.compactPlanned(spark, indexTable, "doc_id", groups = groups)
+    val index = SnapshotTable.current(indexTable)
+    require(index.version > 0, s"no committed band index at $indexTable")
+    requireFormat(indexTable, index)
+    SnapshotTable.compactPlannedFrom(spark, indexTable, index, "doc_id", groups)
   }
 
   /** One-shot greedy baseline over a full corpus: drop every doc that

@@ -419,10 +419,10 @@ object Formats {
         .withColumn("o_orderkey", col("o_orderkey") + lit(20000000L)))
     val v2 = SnapshotTable.merge(s, t, updates, "o_orderkey")
     // manifest-diff read under v2's pinned schema (rowChanges' shape)
-    val pinned = SnapshotTable.schemaOf(t, v2)
-    def readDiff(fs: Seq[String]): DataFrame = s.read.schema(pinned).parquet(fs: _*)
-    val before = readDiff(SnapshotTable.removedFiles(t, v2 - 1, v2))
-    val after = readDiff(SnapshotTable.addedFiles(t, v2 - 1, v2))
+    val (was, now) = (SnapshotTable.manifest(t, v2 - 1), SnapshotTable.manifest(t, v2))
+    def readDiff(fs: Seq[String]): DataFrame = s.read.schema(now.schema).parquet(fs: _*)
+    val before = readDiff(was.pathsNotIn(now))
+    val after = readDiff(now.pathsNotIn(was))
     val out = after.exceptAll(before).withColumn("change", lit("added"))
       .unionByName(before.exceptAll(after).withColumn("change", lit("removed")))
       .select(col("change"), col("o_orderkey"), col("o_custkey"),

@@ -70,10 +70,12 @@ object Ingest {
   // ------------------------------------------------------ catalog index
 
   /** Driver-side copy of one catalog version (`head`, as
-    * [[SnapshotTable.head]] gives it): its rows exactly as [[readCatalog]]
-    * returns them, and for each row the manifest entry it was read from. */
-  private final case class CatalogIndex(head: (Long, Long), schema: StructType,
-      rows: Vector[Row], files: Vector[String]) {
+    * [[SnapshotTable.head]] gives it): `base`, the version's manifest as
+    * it was parsed at load, which a write commits from without reading it
+    * again; its rows exactly as [[readCatalog]] returns them, and for each
+    * row the manifest entry it was read from. */
+  private final case class CatalogIndex(head: (Long, Long), base: SnapshotTable.Manifest,
+      schema: StructType, rows: Vector[Row], files: Vector[String]) {
     private def column(name: String): Vector[Any] = rows.map(_.get(schema.fieldIndex(name)))
     lazy val byDataset: Map[String, Vector[Row]] =
       rows.groupBy(_.getString(schema.fieldIndex("dataset_id")))
@@ -98,24 +100,25 @@ object Ingest {
       if (cur != null && cur.head == head) cur else load(spark, root, head))
   }
 
-  /** One scan of the version's files, tagging each row with its file; a
-    * file compares with the manifest entries as a qualified Hadoop path,
-    * as [[SnapshotTable.merge]] does. */
+  /** One read of the version's manifest and one scan of its files,
+    * tagging each row with its file; a file compares with the manifest
+    * entries as a qualified Hadoop path, as [[SnapshotTable.merge]] does. */
   private def load(spark: SparkSession, table: String, head: (Long, Long)): CatalogIndex =
-    if (head._1 == 0) CatalogIndex(head, EmptySchema, Vector.empty, Vector.empty)
+    if (head._1 == 0)
+      CatalogIndex(head, SnapshotTable.Manifest.empty, EmptySchema, Vector.empty, Vector.empty)
     else {
       val fs = Listing.fsFor(spark, table)._1
-      val entry = SnapshotTable.entries(table, head._1)
-        .map(e => fs.makeQualified(new Path(e.path)) -> e.path).toMap
-      val df = SnapshotTable.readVersion(spark, table, head._1)
+      val base = SnapshotTable.manifest(table, head._1)
+      val entry = base.entries.map(e => fs.makeQualified(new Path(e.path)) -> e.path).toMap
+      val df = base.read(spark)
       val n = df.schema.size
       val got = df.withColumn("_file", input_file_name()).collect().toVector
-      CatalogIndex(head, df.schema, got.map(r => Row.fromSeq(r.toSeq.take(n))),
+      CatalogIndex(head, base, df.schema, got.map(r => Row.fromSeq(r.toSeq.take(n))),
         got.map(r => entry(fs.makeQualified(new Path(new java.net.URI(r.getString(n)))))))
     }
 
   /** Commit `rows` in place of the `removed` files as the version after
-    * the one `idx` was read at, then reload the index. The rows are
+    * the one `idx` was read at, from its manifest, then reload the index. The rows are
     * grouped into one partition per dataset, each sorted by block_start,
     * so the one write job leaves one file per dataset with tight parquet
     * min/max stats — the columnar replacement for the reference's
@@ -128,7 +131,7 @@ object Ingest {
       .map(_.sortBy(r => Option(r.getAs[Number](s)).map(_.longValue)))
     val df = spark.createDataFrame(spark.sparkContext
       .parallelize(groups, math.max(groups.size, 1)).flatMap(identity), schema)
-    SnapshotTable.replace(spark, catalogPath, idx.head._1, removed, df)
+    SnapshotTable.replace(spark, catalogPath, idx.base, removed, df)
     index(spark, catalogPath)
   }
 
@@ -217,7 +220,10 @@ object Ingest {
     * silently (permissive-null), it must land in a quarantine table a
     * human can replay. All parse lanes are `try_cast` (NULL, never
     * throw); reason precedence is fixed (arity → field casts → range)
-    * so the verdict is deterministic per line.
+    * so the verdict is deterministic per line. `dataset_id` stays the
+    * STRING it was sent as, the type [[ingest]] takes (`DatasetId` is
+    * opaque bytes, `lib.rs:11`), so `bad_dataset_id` is an empty id, as
+    * `empty_chunk_id` is an empty chunk id.
     *
     * The two lanes share ONE cached parse; the cache is owned by the
     * returned [[DecodedBatch]] — call `release()` once both lanes are
@@ -229,7 +235,7 @@ object Ingest {
     val f = split(col("line"), ",")
     val parsed = raw
       .select(col("line"), coalesce(get(f, lit(0)), lit("")).as("chunk_id"),
-        expr("try_cast(get(split(line, ','), 1) AS BIGINT)").as("dataset_id"),
+        coalesce(get(f, lit(1)), lit("")).as("dataset_id"),
         expr("try_cast(get(split(line, ','), 2) AS BIGINT)").as("block_start"),
         expr("try_cast(get(split(line, ','), 3) AS BIGINT)").as("block_end"),
         expr("try_cast(get(split(line, ','), 4) AS BIGINT)").as("size_bytes"),
@@ -237,7 +243,7 @@ object Ingest {
       .withColumn("reason",
         when(col("arity") =!= 5, "wrong_arity")
           .when(length(col("chunk_id")) === 0, "empty_chunk_id")
-          .when(col("dataset_id").isNull, "bad_dataset_id")
+          .when(length(col("dataset_id")) === 0, "bad_dataset_id")
           .when(col("block_start").isNull || col("block_end").isNull, "bad_block_range")
           .when(col("size_bytes").isNull, "bad_size")
           .when(col("block_end") < col("block_start"), "inverted_range")

@@ -37,14 +37,10 @@ object MaterializedView {
 
   /** Base version the view at `viewTable` currently reflects (0 = view
     * not yet built). */
-  def basedOn(viewTable: String): Long = {
-    val v = SnapshotTable.currentVersion(viewTable)
-    if (v == 0) 0L
-    else SnapshotTable.manifestMeta(viewTable, v)
-      .find(_.startsWith(BasedOn))
-      .map(_.stripPrefix(BasedOn).toLong)
-      .getOrElse(0L)
-  }
+  def basedOn(viewTable: String): Long = bookmark(SnapshotTable.current(viewTable))
+
+  private def bookmark(view: SnapshotTable.Manifest): Long =
+    view.meta.find(_.startsWith(BasedOn)).map(_.stripPrefix(BasedOn).toLong).getOrElse(0L)
 
   private def aggregate(df: DataFrame, groupCol: String,
       valueCol: String): DataFrame =
@@ -61,8 +57,9 @@ object MaterializedView {
       key: String, groupCol: String, valueCol: String): Long = {
     val baseV = SnapshotTable.currentVersion(baseTable)
     require(baseV > 0, s"no committed snapshot in $baseTable")
-    val from = basedOn(viewTable)
-    if (from == baseV) return SnapshotTable.currentVersion(viewTable)
+    val view = SnapshotTable.current(viewTable)
+    val from = bookmark(view)
+    if (from == baseV) return view.version
     val next =
       if (from == 0)
         aggregate(SnapshotTable.readVersion(spark, baseTable, baseV),
@@ -76,7 +73,7 @@ object MaterializedView {
         val delta = signed.groupBy(groupCol).agg(
           sum(col("_sign")).as("dcnt"),
           sum(col(valueCol) * col("_sign")).as("dtotal"))
-        val cur = SnapshotTable.read(spark, viewTable)
+        val cur = view.read(spark)
         // full outer: a delta can create a group the view lacks or
         // drain one it has; cnt hitting 0 retires the group
         cur.join(delta, Seq(groupCol), "full_outer")
@@ -89,6 +86,6 @@ object MaterializedView {
           .filter(col("cnt") > 0)
       }
     SnapshotTable.commitWithMeta(spark, viewTable, next,
-      append = false, meta = Seq(s"$BasedOn$baseV"))
+      append = false, meta = Seq(s"$BasedOn$baseV"), view)
   }
 }

@@ -42,6 +42,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * paths: a consistent snapshot whatever commits follow, and old
   * versions stay readable (time travel) until a GC pass drops them.
   *
+  * An operation opens and parses each manifest it needs once, into a
+  * [[Manifest]], and reads its schema, metadata and entries from that
+  * value; a write passes it to [[publish]] as its base.
+  *
   * Files go through the table path's Hadoop `FileSystem` (any scheme);
   * entries are qualified paths. Layout: `<table>/data/<uuid>/part-*.parquet`,
   * `<table>/manifests/manifest-<version>`.
@@ -65,6 +69,36 @@ object SnapshotTable {
       s"$path|rows=$rows|${field(stats)}" +
         (if (strings.isEmpty) "" else s"|${field(strings)}")
     }
+
+    /** Whether the file can hold a `column` value in `[lo, hi]` by its
+      * stats; a file with no stats for the column can. */
+    def overlaps(column: String, lo: Long, hi: Long): Boolean =
+      stats.get(column).forall { case (mn, mx) => mx >= lo && mn <= hi }
+
+    /** [[overlaps]] for one value of a string column. String stats are
+      * ASCII only, where String order is parquet's unsigned-byte order for
+      * any probe value. */
+    def mayHold(column: String, value: String): Boolean =
+      strings.get(column).forall { case (mn, mx) => mn <= value && value <= mx }
+  }
+
+  /** One parsed `manifest-N`: the schema it pins, its metadata (`#`)
+    * lines — `#schema=`, batch markers, consumer bookmarks like
+    * [[MaterializedView]]'s `#basedon` — and its [[FileEntry]]s. */
+  final case class Manifest(version: Long, schema: StructType, meta: Seq[String],
+      entries: Seq[FileEntry]) {
+    def paths: Seq[String] = entries.map(_.path)
+
+    /** Data files listed here but not in `other` — pure manifest math. */
+    def pathsNotIn(other: Manifest): Seq[String] = paths.filterNot(other.paths.toSet)
+
+    /** This version's rows, under the schema it pins. */
+    def read(spark: SparkSession): DataFrame = readUnder(spark, schema, paths)
+  }
+
+  object Manifest {
+    /** The base of a table's first commit: no columns, metadata or files. */
+    val empty: Manifest = Manifest(0L, new StructType(), Seq.empty, Seq.empty)
   }
 
   private def parseEntry(line: String): FileEntry = {
@@ -120,17 +154,21 @@ object SnapshotTable {
       catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
   }
 
-  /** Body of `version`'s manifest: metadata and entry lines, without the
-    * `version=`/`rows=` header. */
-  private def manifestLines(table: String, version: Long): Seq[String] = {
+  /** Open and parse `version`'s manifest: the one read of a manifest
+    * file. Every commit pins a `#schema=` line; a manifest without it is
+    * not this table's and fails here, loudly. */
+  def manifest(table: String, version: Long): Manifest = {
     val (fs, p) = manifestPath(table, version)
-    new String(Using.resource(fs.open(p))(_.readAllBytes()), StandardCharsets.UTF_8)
-      .split('\n').toSeq.drop(2)
+    val body = new String(Using.resource(fs.open(p))(_.readAllBytes()), StandardCharsets.UTF_8)
+    val (meta, files) = body.split('\n').toSeq.drop(2).partition(_.startsWith("#"))
+    val schema = meta.find(_.startsWith("#schema="))
+      .map(l => DataType.fromJson(l.stripPrefix("#schema=")).asInstanceOf[StructType])
+      .getOrElse(throw new IllegalStateException(f"manifest-$version%05d of $table pins no #schema= line"))
+    Manifest(version, schema, meta, files.map(parseEntry))
   }
 
-  /** Committed [[FileEntry]]s of `version` (metadata lines excluded). */
-  def entries(table: String, version: Long): Seq[FileEntry] =
-    manifestLines(table, version).filterNot(_.startsWith("#")).map(parseEntry)
+  /** Committed [[FileEntry]]s of `version`. */
+  def entries(table: String, version: Long): Seq[FileEntry] = manifest(table, version).entries
 
   /** Footer scrape: row count + integral- and string-column min/max per
     * just-written file. Reads METADATA ONLY (the parquet writer already
@@ -178,6 +216,20 @@ object SnapshotTable {
   /** Current committed version — the newest manifest — or 0 if none. */
   def currentVersion(table: String): Long = versions(table).lastOption.getOrElse(0L)
 
+  /** The current version's [[Manifest]], or [[Manifest.empty]] with none;
+    * `known` itself when it is still current, so it is not read again. */
+  private[graft] def current(table: String, known: Manifest = Manifest.empty): Manifest = {
+    val v = currentVersion(table)
+    if (v == known.version) known else manifest(table, v)
+  }
+
+  /** [[current]], refusing a table with no commit. */
+  private def committed(table: String): Manifest = {
+    val m = current(table)
+    require(m.version > 0, s"no committed snapshot in $table")
+    m
+  }
+
   /** All committed versions, oldest first (every one is time-travelable);
     * temp and `.crc` files in `manifests/` are not versions. */
   def versions(table: String): Seq[Long] = manifests(table).map(_._1)
@@ -209,43 +261,42 @@ object SnapshotTable {
     * reference plus every non-empty parquet file written under
     * `dataDir` (row counts and stats from the footers, zero data
     * re-scan — SnapshotSpec pins the action count per commit), and
-    * commit manifest `base + 1` ([[putIfAbsent]]) under `schema` with
-    * `meta` followed by the base's carried `#` lines (a line repeated
-    * per commit, such as a format stamp, is kept once). Zero-row files
-    * are left out: a delete that empties a file shrinks the manifest
-    * instead of padding it. */
-  private def publish(spark: SparkSession, table: String, base: Long,
+    * commit manifest `base.version + 1` ([[putIfAbsent]]) under `schema`
+    * with `meta` followed by the `#` lines carried from `base`, the
+    * manifest the caller already holds (a line repeated per commit, such
+    * as a format stamp, is kept once). Zero-row files are left out: a
+    * delete that empties a file shrinks the manifest instead of padding
+    * it. */
+  private def publish(spark: SparkSession, table: String, base: Manifest,
       schema: StructType, kept: Seq[FileEntry], dataDir: Path,
       meta: Seq[String]): Long = {
     val conf = spark.sessionState.newHadoopConf()
-    val (fs, p) = manifestPath(table, base + 1)
+    val (fs, p) = manifestPath(table, base.version + 1)
     val written = list(fs, dataDir).filter(_.getPath.getName.endsWith(".parquet"))
       .sortBy(_.getPath.toString).map(scrapeFooter(conf, _)).filter(_.rows > 0)
     val listed = kept ++ written
-    val carried =
-      if (base > 0) manifestMeta(table, base).filterNot(l => PerCommit.exists(l.startsWith))
-      else Seq.empty
-    val body = (s"version=${base + 1}" +: s"rows=${listed.map(_.rows).sum}" +:
+    val carried = base.meta.filterNot(l => PerCommit.exists(l.startsWith))
+    val body = (s"version=${base.version + 1}" +: s"rows=${listed.map(_.rows).sum}" +:
       s"#schema=${schema.json}" +: ((meta ++ carried).distinct ++ listed.map(_.render)))
       .mkString("\n")
     if (!putIfAbsent(fs, p, body.getBytes(StandardCharsets.UTF_8)))
       throw new java.util.ConcurrentModificationException(
         s"${p.getName} already committed by a concurrent writer — " +
           "re-read the current version and retry the commit")
-    base + 1
+    base.version + 1
   }
 
-  /** Write `df` to a new data dir and publish `entries(base)` without
-    * the `removed` paths, plus the written files, as version `base + 1`
-    * under the base's schema widened by `df`'s ([[widen]]) — a rewrite
-    * from the version it read. Returns the new version. */
-  private[graft] def replace(spark: SparkSession, table: String, base: Long,
+  /** Write `df` to a new data dir and publish `base`'s entries without
+    * the `removed` paths, plus the written files, as the version after
+    * `base` under its schema widened by `df`'s ([[widen]]) — a rewrite
+    * from the manifest it read ([[Manifest.empty]] for a first commit).
+    * Returns the new version. */
+  private[graft] def replace(spark: SparkSession, table: String, base: Manifest,
       removed: Set[String], df: DataFrame, meta: Seq[String] = Seq.empty): Long = {
     val dataDir = newDataDir(table)
     df.write.parquet(dataDir.toString)
-    if (base == 0) publish(spark, table, base, df.schema, Seq.empty, dataDir, meta)
-    else publish(spark, table, base, widen(schemaOf(table, base), df.schema),
-      entries(table, base).filterNot(e => removed(e.path)), dataDir, meta)
+    publish(spark, table, base, widen(base.schema, df.schema),
+      base.entries.filterNot(e => removed(e.path)), dataDir, meta)
   }
 
   /** `pinned` union-widened by `incoming`: new columns
@@ -282,22 +333,22 @@ object SnapshotTable {
     * The markers ride every later commit, rewrites included. */
   def commitBatch(spark: SparkSession, table: String, df: DataFrame,
       batchId: Long): Long = {
-    val prev = currentVersion(table)
-    if (prev > 0 && manifestMeta(table, prev).contains(s"#batch=$batchId")) prev
-    else commitWithMeta(spark, table, df, append = true, meta = Seq(s"#batch=$batchId"))
+    val prev = current(table)
+    if (prev.meta.contains(s"#batch=$batchId")) prev.version
+    else commitWithMeta(spark, table, df, append = true, meta = Seq(s"#batch=$batchId"), prev)
   }
 
   /** Blind append or overwrite: `df` is written first and the base is
-    * the current version after the write. An append pins the table's
+    * the current version after the write ([[current]]; `known` when the
+    * caller already read that version). An append pins the table's
     * schema widened by `df`'s ([[widen]]); an overwrite pins `df`'s own. */
   private[graft] def commitWithMeta(spark: SparkSession, table: String,
-      df: DataFrame, append: Boolean, meta: Seq[String]): Long = {
+      df: DataFrame, append: Boolean, meta: Seq[String], known: Manifest = Manifest.empty): Long = {
     val dataDir = newDataDir(table)
     df.write.parquet(dataDir.toString)
-    val base = currentVersion(table)
-    if (append && base > 0)
-      publish(spark, table, base, widen(schemaOf(table, base), df.schema),
-        entries(table, base), dataDir, meta)
+    val base = current(table, known)
+    if (append) publish(spark, table, base, widen(base.schema, df.schema),
+      base.entries, dataDir, meta)
     else publish(spark, table, base, df.schema, Seq.empty, dataDir, meta)
   }
 
@@ -362,16 +413,15 @@ object SnapshotTable {
   def merge(spark: SparkSession, table: String, updates: DataFrame,
       key: String): Long = {
     import org.apache.spark.sql.functions.{col, input_file_name, max, min}
-    val v = currentVersion(table)
-    require(v > 0, s"no committed snapshot in $table")
-    val all = entries(table, v)
+    val base = committed(table)
+    val all = base.entries
     // same no-silent-retyping contract as append commits
-    val schema = widen(schemaOf(table, v), updates.schema)
+    val schema = widen(base.schema, updates.schema)
     // updates feed the range agg, the semi probe, and the final union —
     // pin them once rather than recompute the (arbitrary) source plan
     val upd = updates.localCheckpoint()
     try {
-      if (upd.isEmpty) return v // empty update set: metadata no-op
+      if (upd.isEmpty) return base.version // empty update set: metadata no-op
       // MERGE maintains key uniqueness per snapshot (rowChanges and every
       // consumer depend on it) — an update set carrying the same key
       // twice, or a NULL key (which no equi-join can ever match), would
@@ -403,9 +453,7 @@ object SnapshotTable {
         val kr = upd.agg(min(col(key).cast("long")).as("lo"),
           max(col(key).cast("long")).as("hi")).head()
         val (kLo, kHi) = (kr.getLong(0), kr.getLong(1))
-        all.filter(_.stats.get(key).forall {
-          case (mn, mx) => mx >= kLo && mn <= kHi
-        })
+        all.filter(_.overlaps(key, kLo, kHi))
       }
       def readFiles(es: Seq[FileEntry]): DataFrame = readUnder(spark, schema, es.map(_.path))
       val fs = under(table, "data")._1
@@ -437,7 +485,7 @@ object SnapshotTable {
         if (touched.isEmpty) upd
         else readFiles(touched).join(upd.select(key), Seq(key), "left_anti")
           .unionByName(upd)
-      replace(spark, table, v, touched.map(_.path).toSet, out,
+      replace(spark, table, base, touched.map(_.path).toSet, out,
         meta = Seq(s"#merge=$key;touched=${touched.size};carried=${carried.size}"))
     } finally upd.unpersist(blocking = false)
   }
@@ -455,15 +503,11 @@ object SnapshotTable {
   def deleteWhere(spark: SparkSession, table: String, column: String,
       lo: Long, hi: Long): Long = {
     import org.apache.spark.sql.functions.col
-    val v = currentVersion(table)
-    require(v > 0, s"no committed snapshot in $table")
-    val all = entries(table, v)
-    val touched = all.filter { e =>
-      e.stats.get(column).forall { case (mn, mx) => mx >= lo && mn <= hi }
-    }
-    if (touched.isEmpty) return v
-    replace(spark, table, v, touched.map(_.path).toSet,
-      readUnder(spark, schemaOf(table, v), touched.map(_.path))
+    val base = committed(table)
+    val touched = base.entries.filter(_.overlaps(column, lo, hi))
+    if (touched.isEmpty) return base.version
+    replace(spark, table, base, touched.map(_.path).toSet,
+      readUnder(spark, base.schema, touched.map(_.path))
         .filter(!(col(column) >= lo && col(column) <= hi)))
   }
 
@@ -488,11 +532,14 @@ object SnapshotTable {
     * set-equal rows. Like every commit it carries the base's `#` lines,
     * so consumer stamps and batch markers survive maintenance. */
   def compactPlanned(spark: SparkSession, table: String, column: String,
-      groups: Int = 8): Long = {
-    val v = currentVersion(table)
-    require(v > 0, s"no committed snapshot in $table")
-    val all = entries(table, v)
-    if (all.size < 2) return v
+      groups: Int = 8): Long =
+    compactPlannedFrom(spark, table, committed(table), column, groups)
+
+  /** [[compactPlanned]] from `base`, a manifest the caller already read. */
+  private[graft] def compactPlannedFrom(spark: SparkSession, table: String,
+      base: Manifest, column: String, groups: Int): Long = {
+    val all = base.entries
+    if (all.size < 2) return base.version
     val ordered = all.sortBy(e =>
       (e.stats.get(column).map(_._1).getOrElse(Long.MaxValue), e.path))
     val total = math.max(ordered.map(_.rows).sum, 1L)
@@ -505,17 +552,16 @@ object SnapshotTable {
     }
     val plan = tagged.groupBy(_._1).toSeq.sortBy(_._1).map(_._2.map(_._2))
     val (multi, single) = plan.partition(_.size > 1)
-    if (multi.isEmpty) return v // every group already one file: no-op
-    val schema = schemaOf(table, v)
+    if (multi.isEmpty) return base.version // every group already one file: no-op
     val dataDir = newDataDir(table)
     // one staged single-file write per group — NOT a union of
     // coalesce(1) frames, which the planner is free to collapse back
     // into one partition (observed: one output file for the whole plan)
     multi.foreach { g =>
-      readUnder(spark, schema, g.map(_.path)).coalesce(1)
+      readUnder(spark, base.schema, g.map(_.path)).coalesce(1)
         .write.mode("append").parquet(dataDir.toString)
     }
-    publish(spark, table, v, schema, single.flatten, dataDir,
+    publish(spark, table, base, base.schema, single.flatten, dataDir,
       meta = Seq(s"#compacted=planned($column,groups=${plan.size})"))
   }
 
@@ -534,17 +580,15 @@ object SnapshotTable {
       colA: String, colB: String, bits: Int = 8,
       targetRows: Long = 1000000L): Long = {
     import org.apache.spark.sql.functions.{col, expr, lit, max, min}
-    val v = currentVersion(table)
-    require(v > 0, s"no committed snapshot in $table")
-    val all = entries(table, v)
-    val df0 = readUnder(spark, schemaOf(table, v), all.map(_.path))
+    val base = committed(table)
+    val df0 = base.read(spark)
     val mm = df0.agg(
       min(col(colA).cast("long")).as("a_lo"), max(col(colA).cast("long")).as("a_hi"),
       min(col(colB).cast("long")).as("b_lo"), max(col(colB).cast("long")).as("b_hi"))
       .head()
     // empty snapshot or all-NULL cluster column ⇒ min/max are NULL:
     // nothing to cluster, keep the current layout (no-op, not an NPE)
-    if ((0 to 3).exists(mm.isNullAt)) return v
+    if ((0 to 3).exists(mm.isNullAt)) return base.version
     val (aLo, aHi, bLo, bHi) =
       (mm.getLong(0), mm.getLong(1), mm.getLong(2), mm.getLong(3))
     val nb = (1 << bits) - 1
@@ -553,9 +597,9 @@ object SnapshotTable {
       else expr(s"cast(((cast($c as bigint) - ${lo}L) * $nb) div ${hi - lo}L as int)")
     val z = Formats.zInterleaveCol(
       bucket(colA, aLo, aHi), bucket(colB, bLo, bHi), bits)
-    val rows = all.map(_.rows).sum
+    val rows = base.entries.map(_.rows).sum
     val nOut = math.max(1L, math.ceil(rows.toDouble / targetRows).toLong).toInt
-    replace(spark, table, v, all.map(_.path).toSet,
+    replace(spark, table, base, base.paths.toSet,
       df0.withColumn("__z", z)
         .repartitionByRange(nOut, col("__z"))
         .sortWithinPartitions("__z")
@@ -563,32 +607,18 @@ object SnapshotTable {
       meta = Seq(s"#optimized=zorder($colA,$colB,bits=$bits)"))
   }
 
-  /** Metadata (`#`-prefixed) lines of `version`'s manifest — batch
-    * markers, pinned schema, consumer bookmarks like
-    * [[MaterializedView]]'s `#basedon`. */
-  def manifestMeta(table: String, version: Long): Seq[String] =
-    manifestLines(table, version).filter(_.startsWith("#"))
-
   /** Read the current snapshot (resolves the current version once). */
   def read(spark: SparkSession, table: String): DataFrame =
     readVersion(spark, table, currentVersion(table))
 
-  /** The schema `version`'s manifest pins. Every commit writes one; a
-    * manifest without it is not this table's and fails here, loudly. */
-  def schemaOf(table: String, version: Long): StructType =
-    manifestMeta(table, version).collectFirst {
-      case l if l.startsWith("#schema=") =>
-        DataType.fromJson(l.stripPrefix("#schema=")).asInstanceOf[StructType]
-    }.getOrElse(throw new IllegalStateException(
-      f"manifest-$version%05d of $table pins no #schema= line"))
-
   /** Time travel: read snapshot `version` as of its commit, under the
     * schema that version pinned — files older than a column read it as
     * null, and a version committed BEFORE a column was added never
-    * shows it (schema time travel rides along with data time travel). */
+    * shows it (schema time travel rides along with data time travel).
+    * One manifest read ([[Manifest.read]]). */
   def readVersion(spark: SparkSession, table: String, version: Long): DataFrame = {
     require(version > 0, s"no committed snapshot in $table")
-    readUnder(spark, schemaOf(table, version), entries(table, version).map(_.path))
+    manifest(table, version).read(spark)
   }
 
   /** Read data files under a pinned schema. No paths reads as an empty
@@ -601,16 +631,12 @@ object SnapshotTable {
 
   /** Data files in `to`'s manifest but not `from`'s — pure manifest
     * math, no data read. */
-  def addedFiles(table: String, from: Long, to: Long): Seq[String] = {
-    val before = entries(table, from).map(_.path).toSet
-    entries(table, to).map(_.path).filterNot(before)
-  }
+  def addedFiles(table: String, from: Long, to: Long): Seq[String] =
+    manifest(table, to).pathsNotIn(manifest(table, from))
 
   /** Data files in `from`'s manifest but not `to`'s. */
-  def removedFiles(table: String, from: Long, to: Long): Seq[String] = {
-    val after = entries(table, to).map(_.path).toSet
-    entries(table, from).map(_.path).filterNot(after)
-  }
+  def removedFiles(table: String, from: Long, to: Long): Seq[String] =
+    manifest(table, from).pathsNotIn(manifest(table, to))
 
   /** Change-data feed for an APPEND-ONLY version range: every row
     * committed after `from` up to `to`, tagged `_change_type='insert'`.
@@ -622,7 +648,8 @@ object SnapshotTable {
   def changesBetween(spark: SparkSession, table: String,
       from: Long, to: Long): DataFrame = {
     require(from >= 1 && to >= from, s"bad version range $from..$to")
-    val removed = removedFiles(table, from, to)
+    val (a, b) = (manifest(table, from), manifest(table, to))
+    val removed = a.pathsNotIn(b)
     require(removed.isEmpty,
       s"versions $from..$to removed ${removed.size} file(s) " +
         "(overwrite/merge in range) — file adds are not row inserts; " +
@@ -630,7 +657,7 @@ object SnapshotTable {
     import org.apache.spark.sql.functions.lit
     // read under `to`'s pinned schema so a feed spanning a schema
     // change is uniformly shaped
-    readUnder(spark, schemaOf(table, to), addedFiles(table, from, to))
+    readUnder(spark, b.schema, b.pathsNotIn(a))
       .withColumn("_change_type", lit("insert"))
   }
 
@@ -655,9 +682,9 @@ object SnapshotTable {
     import org.apache.spark.sql.functions.lit
     // both sides read under `to`'s pinned schema: pre-evolution files
     // surface added columns as null, keeping the bag-diff well-typed
-    val schema = schemaOf(table, to)
-    val before = readUnder(spark, schema, removedFiles(table, from, to))
-    val after = readUnder(spark, schema, addedFiles(table, from, to))
+    val (a, b) = (manifest(table, from), manifest(table, to))
+    val before = readUnder(spark, b.schema, a.pathsNotIn(b))
+    val after = readUnder(spark, b.schema, b.pathsNotIn(a))
     val changedAfter = after.exceptAll(before)   // new or modified rows
     val changedBefore = before.exceptAll(after)  // deleted rows + pre-images
     val beforeKeys = before.select(key)
@@ -679,9 +706,7 @@ object SnapshotTable {
     * kept. Exposed so tests can assert the skip actually happens. */
   def filesForRange(table: String, version: Long, column: String,
       lo: Long, hi: Long): Seq[String] =
-    entries(table, version).filter { e =>
-      e.stats.get(column).forall { case (mn, mx) => mx >= lo && mn <= hi }
-    }.map(_.path)
+    entries(table, version).filter(_.overlaps(column, lo, hi)).map(_.path)
 
   /** Data files of `version` whose manifest string stats on `column`
     * can hold `value` — the [[filesForRange]] of a string column, such as
@@ -689,11 +714,7 @@ object SnapshotTable {
     * column are conservatively kept. */
   def filesForValue(table: String, version: Long, column: String,
       value: String): Seq[String] =
-    entries(table, version).filter { e =>
-      // string stats are ASCII only, where String order is parquet's
-      // unsigned-byte order for any probe value
-      e.strings.get(column).forall { case (mn, mx) => mn <= value && value <= mx }
-    }.map(_.path)
+    entries(table, version).filter(_.mayHold(column, value)).map(_.path)
 
   /** Range read with MANIFEST-LEVEL pruning: files whose [min, max] on
     * `column` cannot contain the range are never handed to the reader —
@@ -706,8 +727,8 @@ object SnapshotTable {
   def readRange(spark: SparkSession, table: String, version: Long,
       column: String, lo: Long, hi: Long): DataFrame = {
     import org.apache.spark.sql.functions.col
-    readUnder(spark, schemaOf(table, version),
-      filesForRange(table, version, column, lo, hi))
+    val m = manifest(table, version)
+    readUnder(spark, m.schema, m.entries.filter(_.overlaps(column, lo, hi)).map(_.path))
       .filter(col(column) >= lo && col(column) <= hi)
   }
 }

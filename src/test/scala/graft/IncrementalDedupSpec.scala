@@ -63,7 +63,7 @@ class IncrementalDedupSpec extends SparkSpec {
     // cross-format guard reads the NEWEST manifest, so the stamp must
     // ride every commit, not just the first
     for (v <- SnapshotTable.versions(idx))
-      assert(SnapshotTable.manifestMeta(idx, v)
+      assert(SnapshotTable.manifest(idx, v).meta
         .contains(s"#band_index_format=${IncrementalDedup.IndexFormat}"), s"v$v unstamped")
   }
 
@@ -117,7 +117,7 @@ class IncrementalDedupSpec extends SparkSpec {
     // groups=1 packs every accreted file into exactly one
     assert(SnapshotTable.entries(idx, vComp).size == 1)
     // the stamp survived the maintenance commit
-    assert(SnapshotTable.manifestMeta(idx, vComp)
+    assert(SnapshotTable.manifest(idx, vComp).meta
       .contains(s"#band_index_format=${IncrementalDedup.IndexFormat}"),
       "compaction dropped the format stamp")
     val kept3 = IncrementalDedup.processBatch(spark, idx,

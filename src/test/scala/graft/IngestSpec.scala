@@ -252,7 +252,7 @@ class IngestSpec extends SparkSpec {
       "c2,1,100,200,1024",       // good
       "c3,1,5",                  // wrong_arity
       ",1,0,100,512",            // empty_chunk_id
-      "c4,x,0,100,512",          // bad_dataset_id
+      "c4,,0,100,512",           // bad_dataset_id
       "c5,1,zero,100,512",       // bad_block_range
       "c6,1,0,100,big",          // bad_size
       "c7,1,200,100,512",        // inverted_range
@@ -265,13 +265,13 @@ class IngestSpec extends SparkSpec {
     assert(goodIds == Seq("c1", "c2"))
     // typed columns survive the lane intact
     val g = good.collect().map(r => r.getString(0) ->
-      (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-    assert(g("c1") == ((1L, 0L, 100L, 512L)))
+      (r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
+    assert(g("c1") == (("1", 0L, 100L, 512L)))
     val reasons = bad.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(reasons.size == lines.size - 2) // nothing dropped silently
     assert(reasons("c3,1,5") == "wrong_arity")
     assert(reasons(",1,0,100,512") == "empty_chunk_id")
-    assert(reasons("c4,x,0,100,512") == "bad_dataset_id")
+    assert(reasons("c4,,0,100,512") == "bad_dataset_id")
     assert(reasons("c5,1,zero,100,512") == "bad_block_range")
     assert(reasons("c6,1,0,100,big") == "bad_size")
     assert(reasons("c7,1,200,100,512") == "inverted_range")
@@ -279,6 +279,21 @@ class IngestSpec extends SparkSpec {
     assert(reasons("c9,x,y,z") == "wrong_arity")
     assert(reasons("c10,1,0,100,512,extra") == "wrong_arity")
     batch.release() // cache ownership: caller frees after both lanes read
+  }
+
+  test("a decoded batch ingests, and its dataset ids come back exactly as sent") {
+    val path = tmpCatalog()
+    val decoded = Ingest.decodeWithQuarantine(
+      Seq("c1,010,0,100,5", "c2,10,0,100,7", "c3,,0,100,9").toDF("line"))
+    assert(decoded.quarantined.collect().map(_.getString(1)).toSeq == Seq("bad_dataset_id"))
+    assert(Ingest.ingest(spark, path, decoded.good) == Ingest.IngestResult(2, 0, None))
+    decoded.release()
+    // "010" is its own id, not "10": the lane must not read it as a number
+    val found = Ingest.findChunk(spark, path, "010", 50).collect()
+      .map(r => (r.getAs[String]("chunk_id"), r.getAs[String]("dataset_id")))
+    assert(found.toSeq == Seq(("c1", "010")))
+    assert(ids(Ingest.findChunk(spark, path, "10", 50)) == Set("c2"))
+    Seq("010", "10").foreach(d => assertFindMatchesScan(spark, path, d, 50))
   }
 }
 

@@ -3,7 +3,7 @@ package graft
 import java.net.URI
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.hadoop.fs.{FileStatus, FileUtil, Path => HPath, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FileUtil, Path => HPath, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import graft.sources.{Ingest, SnapshotTable}
 
@@ -20,6 +20,11 @@ import graft.sources.{Ingest, SnapshotTable}
 class MockObjectStoreFs extends RawLocalFileSystem {
   override def getScheme: String = "mock"
   override def getUri: URI = URI.create("mock:///")
+  override def open(f: HPath, bufferSize: Int): FSDataInputStream = {
+    MockObjectStoreFs.opens.computeIfAbsent(f.toUri.getPath, _ => new AtomicInteger)
+      .incrementAndGet()
+    super.open(f, bufferSize)
+  }
   override def rename(src: HPath, dst: HPath): Boolean = {
     MockObjectStoreFs.renames.incrementAndGet()
     if (!exists(src)) false
@@ -40,6 +45,11 @@ class MockObjectStoreFs extends RawLocalFileSystem {
 
 object MockObjectStoreFs {
   val renames = new AtomicInteger(0)
+  /** `open` calls per file, by path without the scheme. */
+  val opens = new java.util.concurrent.ConcurrentHashMap[String, AtomicInteger]()
+
+  def opened(path: String): Int =
+    Option(opens.get(new HPath(path).toUri.getPath)).fold(0)(_.get)
 }
 
 class ObjectStoreFsSpec extends SparkSpec {
@@ -70,6 +80,39 @@ class ObjectStoreFsSpec extends SparkSpec {
     // non-atomic rename path, or this test proves nothing
     assert(MockObjectStoreFs.renames.get() > before,
       "no rename crossed the object-store filesystem")
+  }
+
+  /** The manifests of `table` that `op` opened, by version, with how
+    * often. */
+  private def manifestOpens(table: String)(op: => Any): Map[Long, Int] = {
+    def counts = (1L to SnapshotTable.currentVersion(table) + 1).map(v =>
+      v -> MockObjectStoreFs.opened(f"$table/manifests/manifest-$v%05d")).toMap
+    val before = counts
+    op
+    counts.map { case (v, n) => v -> (n - before.getOrElse(v, 0)) }.filter(_._2 > 0)
+  }
+
+  test("a commit, merge, deleteWhere and readVersion each open one manifest once") {
+    val t = mockPath()
+    SnapshotTable.commit(spark, t, Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
+    val opened = Seq(
+      manifestOpens(t)(SnapshotTable.commit(spark, t, Seq((3L, "c")).toDF("k", "v"))),
+      manifestOpens(t)(SnapshotTable.merge(spark, t, Seq((2L, "B")).toDF("k", "v"), "k")),
+      manifestOpens(t)(SnapshotTable.deleteWhere(spark, t, "k", 1L, 1L)),
+      manifestOpens(t)(SnapshotTable.readVersion(spark, t, 4L)))
+    // each write opens only its base (versions 1, 2, 3), the read only its version
+    assert(opened == Seq(Map(1L -> 1), Map(2L -> 1), Map(3L -> 1), Map(4L -> 1)))
+    assert(SnapshotTable.read(spark, t).as[(Long, String)].collect().toSet ==
+      Set((2L, "B"), (3L, "c")))
+  }
+
+  test("an ingest on a warm index opens only the new manifest, once") {
+    val path = mockPath()
+    // the first ingest's reload leaves the index warm at version 1
+    Ingest.ingest(spark, path, batch(("c1", "D1", 0, 100, 1)))
+    assert(manifestOpens(path)(Ingest.ingest(spark, path, batch(("c2", "D1", 100, 200, 1))))
+      == Map(2L -> 1))
+    assert(Ingest.findChunk(spark, path, "D1", 150).count() == 1)
   }
 
   test("find + delete work over the object store") {

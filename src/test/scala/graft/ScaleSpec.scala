@@ -233,7 +233,7 @@ class ScaleSpec extends SparkSpec {
     assert(SnapshotTable.entries(path, v).size == 3)
     val files = SnapshotTable.filesForValue(path, v, "dataset_id", "D2")
     assert(files.size == 1, files)
-    val kept = spark.read.schema(SnapshotTable.schemaOf(path, v)).parquet(files: _*)
+    val kept = spark.read.schema(SnapshotTable.manifest(path, v).schema).parquet(files: _*)
     assert(kept.inputFiles.length == 1)
     assert(kept.select("dataset_id").distinct().as[String].collect().toSeq == Seq("D2"))
     val q = kept.filter(col("dataset_id") === "D2")

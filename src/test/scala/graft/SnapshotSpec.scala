@@ -60,7 +60,7 @@ class SnapshotSpec extends SparkSpec {
     assert(prunedFrac(vAfter, "y") <= 0.5, s"y frac=${prunedFrac(vAfter, "y")}")
     // the optimize is recorded in the manifest, and history still serves
     // the pre-optimize layout (time travel unaffected)
-    assert(SnapshotTable.manifestMeta(t, vAfter)
+    assert(SnapshotTable.manifest(t, vAfter).meta
       .exists(_.contains("optimized=zorder(x,y")))
     assert(SnapshotTable.readVersion(spark, t, vBefore).count() == before.size)
   }
@@ -471,7 +471,7 @@ class SnapshotSpec extends SparkSpec {
     SnapshotTable.commitBatch(spark, t, (1 to 5).toDF("n").coalesce(1), 0L)
     // three merges whose records differ: a new key, a matched key, a new key
     Seq(6, 1, 7).foreach(k => SnapshotTable.merge(spark, t, Seq(k).toDF("n"), "n"))
-    val meta = SnapshotTable.manifestMeta(t, SnapshotTable.currentVersion(t))
+    val meta = SnapshotTable.manifest(t, SnapshotTable.currentVersion(t)).meta
     assert(meta.count(_.startsWith("#merge=")) == 1, meta)
     assert(meta.contains("#batch=0"), meta)
   }
