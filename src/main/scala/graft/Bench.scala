@@ -1,6 +1,7 @@
 package graft
 import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
+import Meta.{cpuJiffies, loadavg}
 object Bench {
   /** Shuffle-partition count scaled to the corpus, not pinned to the
     * core count: a FIXED 32 put several sf10 joins into spill onset
@@ -54,8 +55,8 @@ object Bench {
     * footprint favors zstd 2–4× wherever spill exists, and at the top
     * scale zstd is the difference between finishing and ENOSPC — on a
     * cluster, per-node scratch is exactly the resource a 100 TB
-    * shuffle exhausts first. Both mains record the choice in their
-    * artifact; SPARK_GRAFT_CONF overrides it in Probe.
+    * shuffle exhausts first. Bench and Probe record the choice in
+    * their artifacts.
     *
     * PRICED EXCEPTION (r16, same box): `sql_recursive` pays +49%
     * under zstd at sf10 (7.1 s lz4 vs 10.6 s, bench_r16_sf10_lz4.json
@@ -70,54 +71,20 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shufflePartitions = scaledShufflePartitions(sfDir, cpus.toInt)
-    val codec = scaledCodec(sfDir)
-    // optional bounded scratch, same env var as Probe: without it Spark
-    // spills to /tmp on the system volume, where a big-SF sweep's dead
-    // shuffle files are neither attributable nor safely deletable (the
-    // r14 sf100 ENOSPC lesson). Only applied when set, so default-run
-    // artifacts stay comparable with every earlier round's.
-    val localDir = sys.env.get("SPARK_GRAFT_LOCAL_DIR")
-    localDir.foreach(d =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
-    val spark = localDir.foldLeft(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", shufflePartitions)
-        .config("spark.io.compression.codec", codec)
-        .config("spark.ui.enabled", "false")) { (b, d) =>
-        b.config("spark.local.dir", d)
-      }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(sfDir, Session.cpus)
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
+    val codec = spark.conf.get("spark.io.compression.codec")
+    // bounded scratch from SPARK_GRAFT_LOCAL_DIR, recorded when set:
+    // without it Spark spills to /tmp on the system volume, where a
+    // big-SF sweep's dead shuffle files are neither attributable nor
+    // safely deletable (the r14 sf100 ENOSPC lesson)
+    val localDir = spark.conf.getOption("spark.local.dir")
     // noop sink: the full physical plan executes (sorts, projections,
     // final exchange) with zero write cost — `.count()` would let
     // Catalyst eliminate sorts and prune every projected column, timing
     // a scan-and-count instead of the declared query
     def run(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
-    // 1-minute loadavg, recorded into the artifact at sweep boundaries:
-    // r7 (+45 s) and r8 (+110 s) both shipped phantom regressions on
-    // byte-identical code because ambient machine load was invisible in
-    // the bench JSON — a number without its load context is unreadable
-    def loadavg(): Double =
-      try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
-        .split("\\s+")(0).toDouble
-      catch { case scala.util.control.NonFatal(_) => -1.0 }
-    // (steal, total) jiffies from /proc/stat: on a shared VM the
-    // hypervisor can throttle this guest with loadavg reading IDLE —
-    // observed as 145 s → 194 s on identical code at ambient load 0.8.
-    // The steal fraction over the run is the signal loadavg cannot see.
-    def cpuJiffies(): (Long, Long) =
-      try {
-        val n = java.nio.file.Files.readAllLines(
-            java.nio.file.Paths.get("/proc/stat")).get(0)
-          .split("\\s+").drop(1).map(_.toLong)
-        // total = user..steal only (first 8 fields): the kernel already
-        // folds guest/guest_nice into user/nice, so summing all 10
-        // double-counts guest time and understates steal_pct
-        (if (n.length > 7) n(7) else 0L, n.take(8).sum)
-      } catch { case scala.util.control.NonFatal(_) => (0L, 0L) }
     // uncounted warm-up: session init, parquet footers, codegen JIT —
     // steady-state throughput is what scales, not first-query setup
     try {
@@ -132,12 +99,7 @@ object Bench {
       graft.operators.VectorOps.ensurePqLayout(spark, sfDir)
       graft.operators.GraphOps.ensureClusterLayout(spark, sfDir)
       graft.sources.Formats.ensureZLayout(spark, sfDir)
-      // BLOCKING: an async drop lets one query's pinned blocks (an
-      // iterative build's checkpoints can run to GBs at sf10) overlap
-      // the next query's peak — the r12 sf10 sweep OOM'd the skew demo
-      // on exactly that overlap (fine in isolation, 27.7 s)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      Meta.unpersistAll(spark)
     } catch {
       // a failed warm-up (e.g. the trained-layout pre-build) must be
       // VISIBLE: llm_ann_trained would then pay full training inside its
@@ -159,12 +121,7 @@ object Bench {
       // iterative queries (connected components, k-means) leave
       // localCheckpoint blocks behind; dropping them between queries
       // keeps one query's state from stealing memory from the next
-      // BLOCKING: an async drop lets one query's pinned blocks (an
-      // iterative build's checkpoints can run to GBs at sf10) overlap
-      // the next query's peak — the r12 sf10 sweep OOM'd the skew demo
-      // on exactly that overlap (fine in isolation, 27.7 s)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      Meta.unpersistAll(spark)
       (elapsed, graft.operators.GraphOps.ccObservationMisses.get() - miss0)
     }
     // TWO FULL SWEEPS, per-query min. The r5–r7 protocol (best-of-2
@@ -223,7 +180,7 @@ object Bench {
       System.err.println(f"[bench] cool-down gate NOT met after $cooldownWaited%.0f s " +
         f"(load ${loadavg()}%.2f >= $cooldownTarget%.1f) — sweeping anyway, artifact records it")
     val loadBefore = loadavg()
-    val (steal0, jif0) = cpuJiffies()
+    val jiffies0 = cpuJiffies()
     val sweep1 = names.map { case (n, fn) => n -> once(n, fn) }
     val loadMid = loadavg()
     val sweep2 = names.map { case (n, fn) => n -> once(n, fn) }
@@ -253,10 +210,7 @@ object Bench {
     // load/steal window closes AFTER the outlier re-measures (results is
     // strict), so every timed run sits inside the recorded context
     val loadAfter = loadavg()
-    val (steal1, jif1) = cpuJiffies()
-    val stealPct =
-      if (jif1 > jif0) math.round(10000.0 * (steal1 - steal0) / (jif1 - jif0)) / 100.0
-      else -1.0
+    val stealPct = Meta.stealPct(jiffies0, cpuJiffies())
     def toJson(rs: Seq[(String, Double)]): String =
       rs.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + v }
         .mkString("{", ",", "}")

@@ -1,14 +1,17 @@
 package graft
 
-/** Shared artifact-provenance helper for the measurement mains (Bench,
-  * Probe, LayoutBuildProbe, IncDedupProbe). The
-  * `_meta` block — git sha, tracked-tree dirtiness with the dirty
-  * paths, UTC stamp — was copy-pasted per main and had already drifted
-  * (r18 advisor: misindented block in Probe; the "ASELINE.md" offset
-  * parse bug had to be fixed in four places). One implementation, one
-  * fix site.
+import org.apache.spark.sql.SparkSession
+
+/** Shared artifact helpers for the measurement mains (Bench and Probe's
+  * modes): the `_meta` provenance block — git sha, tracked-tree
+  * dirtiness with the dirty paths, UTC stamp — and the ambient gauges
+  * that bracket a measurement window (load, steal, scratch-disk
+  * headroom, disk I/O, effective CPU speed). Each had been copied per
+  * main and had drifted (r18 advisor: misindented block in Probe; the
+  * "ASELINE.md" offset parse bug had to be fixed in four places). One
+  * implementation, one fix site.
   *
-  * Provenance rules carried over from the four originals:
+  * Provenance rules carried over from the originals:
   *  - stderr drained SEPARATELY, never into the captured value:
   *    container git prints ownership warnings on zero-exit commands,
   *    and merging streams corrupted git_sha/tree fields (r17 advisor);
@@ -99,6 +102,50 @@ object Meta {
         math.round(r * 512 / 1e4) / 100.0, math.round(w * 512 / 1e4) / 100.0)
     }
   }
+
+  /** 1-minute loadavg, -1 when unreadable: r7 (+45 s) and r8 (+110 s)
+    * both shipped phantom regressions on byte-identical code because
+    * ambient machine load was invisible in the artifact. */
+  def loadavg(): Double =
+    try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
+      .split("\\s+")(0).toDouble
+    catch { case scala.util.control.NonFatal(_) => -1.0 }
+
+  /** (steal, total) jiffies from /proc/stat: on a shared VM the
+    * hypervisor can throttle this guest with loadavg reading IDLE —
+    * observed as 145 s → 194 s on identical code at ambient load 0.8.
+    * Total sums user..steal only (the first 8 fields): the kernel
+    * already folds guest/guest_nice into user/nice, so summing all 10
+    * double-counts guest time and understates the steal share. */
+  def cpuJiffies(): (Long, Long) =
+    try {
+      val n = java.nio.file.Files.readAllLines(
+          java.nio.file.Paths.get("/proc/stat")).get(0)
+        .split("\\s+").drop(1).map(_.toLong)
+      (if (n.length > 7) n(7) else 0L, n.take(8).sum)
+    } catch { case scala.util.control.NonFatal(_) => (0L, 0L) }
+
+  /** Steal share in percent between two [[cpuJiffies]] readings, -1
+    * when no time passed or /proc/stat was unreadable. */
+  def stealPct(before: (Long, Long), after: (Long, Long)): Double =
+    if (after._2 > before._2)
+      math.round(10000.0 * (after._1 - before._1) / (after._2 - before._2)) / 100.0
+    else -1.0
+
+  /** Usable space under `dir` in GiB, one decimal: the headroom a
+    * big-SF spill has left (the r14 sf100 probe died on ENOSPC). */
+  def diskFreeGb(dir: String): Double =
+    math.round(new java.io.File(dir).getUsableSpace * 10.0 / (1L << 30)) / 10.0
+
+  /** Drop every pinned block, BLOCKING. Iterative and caching queries
+    * pin blocks (localCheckpoint, persist); an async drop lets one
+    * query's pinned blocks (an iterative build's checkpoints can run to
+    * GBs at sf10) overlap the next query's peak — the r12 sf10 sweep
+    * OOM'd the skew demo on exactly that overlap (fine in isolation,
+    * 27.7 s). */
+  def unpersistAll(spark: SparkSession): Unit =
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
 
   @volatile private var spinSink = 0L // defeats dead-code elimination
 

@@ -2,7 +2,6 @@ package graft
 
 import scala.util.control.NonFatal
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dumps `explain("formatted")` per query to individual files — the
   * optimization-round evidence format (`plans/r19/<q>_before.txt` /
@@ -11,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Run: `sbt "runMain graft.PlanDump <sfDir> <outDir> <suffix> [names…|all]"`
   *
-  * The session mirrors Bench's scaling knobs (shuffle partitions and
+  * The session is Bench's ([[Session.build]]: shuffle partitions and
   * codec derived from the corpus size, `local[SPARK_GRAFT_CPUS]`) so the
   * dumped plan is the one the bench actually executes, not a default-
   * config variant.
@@ -25,15 +24,7 @@ object PlanDump {
       case Seq() | Seq("all") => SparkEntry.queries.keys.toSeq.sorted
       case names => names
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        Bench.scaledShufflePartitions(sfDir, cpus.toInt))
-      .config("spark.io.compression.codec", Bench.scaledCodec(sfDir))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build(sfDir, Session.cpus)
     Files.createDirectories(Paths.get(outDir))
     // successes counted separately from picks (r19 advisor): an unknown
     // name or a throwing query must be visible in the summary line and

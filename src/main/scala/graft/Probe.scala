@@ -1,31 +1,62 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, max, min}
 
-/** Ad-hoc plan/timing probe (dev tool, not part of the driver contract).
+import graft.operators.{GraphOps, IncrementalDedup, VectorOps}
+import graft.sources.SnapshotTable
+import Meta.jstr
+
+/** Dev probe (a measurement tool, not a query surface): one session, one
+  * measurement window and one artifact writer shared by three modes.
   *
-  * Isolated per-query timing is the instrument for CROSS-ROUND per-query
-  * claims (r13 rule): an in-sweep number carries its predecessors'
-  * warm-state (the r13 skew_salted_join incident read +20.5 s in both
-  * sweeps from a board edit that never touched it), where a probe run
-  * times the query against a quiesced session. With
-  * `SPARK_GRAFT_PROBE_OUT=<path>` the probe commits a JSON artifact
-  * (per-query min-of-samples + every sample + load/steal window) so
-  * round claims can quote a diffable file instead of prose — the r13
-  * verdict's task 2. `SPARK_GRAFT_PROBE_SAMPLES` sets timed runs per
-  * query (default 2; 1 for expensive one-off growth probes).
+  * Usage: `runMain graft.Probe <sfDir> <mode>`, where mode is one of
   *
-  * `snapshot_*` write-path queries are probe-valid on current code
-  * (r17 re-adjudication of the r13 caveat): each invocation of
-  * snapshotMerge/snapshotTimetravel builds its OWN fresh temp table
-  * (Files.createTempDirectory) and deletes it before returning, and
-  * SnapshotTable keeps no cross-invocation JVM state — so the warm
-  * pass cannot grow any version chain the timed samples see; every
-  * sample times an identical fresh-table build. The r13 probe
-  * inflation that motivated the old "in-sweep only" rule is
-  * attributable to the accreted-pinned-blocks bug fixed in the same
-  * commit (the quiesce() below); probe_r17_sf10.json confirms
-  * isolated ≈ in-sweep for both queries on current code.
+  *  - `<query>…` (metric `probe_isolated`): isolated per-query timing,
+  *    one warm run and `SPARK_GRAFT_PROBE_SAMPLES` timed runs (default
+  *    2) per query. `sentinels` expands to the code-pinned basket below;
+  *    `logical:<q>` prints the optimized logical plan (what
+  *    ProjectionLintSpec sweeps) and `finalplan:<q>` runs the query once
+  *    and prints the final adaptive physical plan — the join strategies
+  *    AQE actually chose at this SF. With
+  *    `SPARK_GRAFT_PROBE_BASELINE=<earlier probe artifact>` the artifact
+  *    also ratios each query against that artifact's `queries` map.
+  *  - `build` (metric `layout_build_cold`): the COLD build of every
+  *    derived corpus layout — trained IVF at k=8 and at the corpus-scaled
+  *    semDedup k, PQ codebooks, the dedup-cluster table, the z-order
+  *    events layout. Each published dir is deleted, then its `ensure*`
+  *    call is timed once. Rebuilds are deterministic (content-fingerprinted
+  *    keys, decimal-exact centroid math), so every later query stays
+  *    byte-identical; the dirs live under `graft.build.root`, so run this
+  *    mode in a scratch checkout when the published layouts matter.
+  *  - `incdedup[:nBatches]` (metric `incdedup_growth`, default 16
+  *    batches): the [[IncrementalDedup]] band index under sequential
+  *    arrivals. The corpus arrives as `nBatches` contiguous doc_id
+  *    slices into a fresh index at `target/probe/inc_dedup_idx`; then
+  *    one [[IncrementalDedup.compactIndex]] pass, one more batch against
+  *    the compacted index, and the one-shot [[IncrementalDedup.dedupFull]]
+  *    baseline incremental processing replaces.
+  *
+  * The session is [[Session.build]]'s with `local[SPARK_GRAFT_CPUS]`
+  * (default 32) and spill under `SPARK_GRAFT_LOCAL_DIR` (default
+  * /tmp/graft-spill): the r14 sf100 probe filled the root disk
+  * mid-shuffle because Spark spilled to /tmp on the system volume, and a
+  * dedicated dir makes spill attributable, deletable and measurable.
+  *
+  * With `SPARK_GRAFT_PROBE_OUT=<path>` every mode writes a JSON artifact
+  * after EACH reading, `partial:true` until the last: the r14 sf100
+  * probe died on ENOSPC at query 7 of 10 and took all six completed
+  * readings with it, and the first sf100 build probe was killed by a
+  * harness timeout with zero output. The final line also goes to stdout.
+  *
+  * Isolated timing is the instrument for CROSS-ROUND per-query claims
+  * (r13 rule): an in-sweep number carries its predecessors' warm state
+  * (the r13 skew_salted_join incident read +20.5 s in both sweeps from a
+  * board edit that never touched it). `snapshot_*` queries are
+  * probe-valid: each invocation builds its own fresh temp table and
+  * deletes it, so the warm run cannot grow a version chain the timed
+  * samples see (probe_r17_sf10.json: isolated ≈ in-sweep).
   */
 object Probe {
   /** The fixed cross-round SENTINEL basket (r17 verdict task 1b): five
@@ -46,60 +77,112 @@ object Probe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    // bounded scratch for shuffle spill: the r14 sf100 probe filled the
-    // root disk mid-shuffle (ShuffleExternalSorter ENOSPC) because Spark
-    // defaulted spark.local.dir to /tmp on the system volume. A probe at
-    // big SF points it at a dedicated dir so spill files are attributable
-    // and deletable, and the artifact records headroom next to load/steal.
-    val localDir = sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/tmp/graft-spill")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(localDir))
-    def diskFreeGb(): Double =
-      math.round(new java.io.File(localDir).getUsableSpace * 10.0 / (1L << 30)) / 10.0
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      // same corpus-scaled count as Bench so probe timings reproduce it;
-      // SPARK_GRAFT_PARTS overrides for partition-count bisection
-      .config("spark.sql.shuffle.partitions",
-        sys.env.get("SPARK_GRAFT_PARTS").map(_.toInt)
-          .getOrElse(Bench.scaledShufflePartitions(sfDir, 32)))
-      .config("spark.local.dir", localDir)
-      // corpus-scaled codec, same rule as Bench (zstd at ≥1 GiB input —
-      // measured faster AND ~4× less spill on the sf10 heavy rows, and
-      // required to fit sf100's biggest shuffles on one disk); set
-      // before the SPARK_GRAFT_CONF fold so an explicit entry overrides
-      .config("spark.io.compression.codec", Bench.scaledCodec(sfDir))
-      .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_CONF="k=v;k=v" — extra session confs for one-off
-    // probes, e.g. spark.io.compression.codec=zstd when a query's live
-    // shuffle exceeds the single-box disk under lz4 (skew_salted_join
-    // at sf100 spills >50 GiB against ~51 GiB sandbox headroom; zstd is
-    // a measurement-environment lever, the query is untouched). Any
-    // override is recorded in the artifact so the reading carries its
-    // provenance. ';' is the entry separator and cannot appear inside a
-    // value; malformed entries FAIL FAST (r15 advisor: a '=v' entry
-    // used to set an empty-key conf that only errored at session start,
-    // and a bad entry silently dropped is a probe run with the wrong
-    // config whose artifact looks clean).
-    val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).filter(_.trim.nonEmpty)
-      .map { kv =>
-        require(kv.contains("=") && kv.split("=", 2)(0).trim.nonEmpty,
-          s"SPARK_GRAFT_CONF entry '$kv' is not k=v with a non-empty key " +
-            "(';' separates entries and cannot appear inside a value)")
-        val Array(k, v) = kv.split("=", 2); (k.trim, v.trim)
+    val spark = Session.build(sfDir, Session.cpus, spill = Some("/tmp/graft-spill"))
+    args.drop(1).toSeq match {
+      case Seq("build") => layoutBuild(spark, sfDir)
+      case Seq(m) if m == "incdedup" || m.startsWith("incdedup:") =>
+        incDedup(spark, sfDir,
+          Some(m.stripPrefix("incdedup").stripPrefix(":")).filter(_.nonEmpty)
+            .map(_.toInt).getOrElse(16))
+      case names => isolated(spark, sfDir, names)
+    }
+    spark.stop()
+  }
+
+  /** Between readings: drop pinned blocks (a multi-query probe otherwise
+    * accretes earlier queries' cached state into later ones' memory —
+    * llm_bigrams read 36 s in an 8-query chain vs ~22 s in the Bench
+    * sweep, r13), then nudge the ContextCleaner: shuffle files of
+    * dereferenced plans are only deleted once the JVM GCs the shuffle
+    * handles, and at sf100 a 10-query chain otherwise accreted tens of
+    * GB of dead spill between queries (r14 ENOSPC crash). */
+  private def quiesce(spark: SparkSession): Unit = {
+    Meta.unpersistAll(spark)
+    System.gc()
+  }
+
+  /** Full-plan execution with zero write cost, the same sink as Bench. */
+  private def drain(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  private def time[A](f: => A): (Double, A) = {
+    val t0 = System.nanoTime()
+    val a = f
+    ((System.nanoTime() - t0) / 1e9, a)
+  }
+
+  private def num3(x: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
+
+  private def obj(fields: Iterable[(String, String)]): String =
+    fields.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+
+  private def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
+    f.delete(); ()
+  }
+
+  private def files(f: java.io.File): Seq[java.io.File] =
+    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).toSeq.flatMap(files)
+    else Seq(f)
+
+  /** The window a mode measures in, opened at construction, and its
+    * artifact writer. `_meta` resolves once, before any timed region.
+    * Every artifact carries load and steal; `disk` adds the spill dir's
+    * headroom and `cpu` the effective-CPU-speed bracket (r19): a
+    * fixed-work spin at open and at the final write, since in a VM host
+    * frequency/SMT degradation under co-tenant load shows in no kernel
+    * counter, only in how fast fixed work runs. */
+  private final class Window(spark: SparkSession, sfDir: String, metric: String,
+      disk: Boolean, cpu: Boolean) {
+    private val meta = Meta.metaJson()
+    private val localDir = spark.conf.get("spark.local.dir")
+    private val loadBefore = Meta.loadavg()
+    private val diskBefore = Meta.diskFreeGb(localDir)
+    private val jiffies0 = Meta.cpuJiffies()
+    private val cpuBefore = if (cpu) Meta.cpuSpeedJson() else ""
+    if (cpu) System.err.println(s"[probe] cpu speed before: $cpuBefore")
+
+    /** One artifact line: the shared header and bracket, then `fields`
+      * (name → JSON value) in order, then `sf`. */
+    def write(fields: Seq[(String, String)], partial: Boolean): Unit = {
+      val heapGb = math.round(Runtime.getRuntime.maxMemory * 10.0 / (1L << 30)) / 10.0
+      val stealPct = Meta.stealPct(jiffies0, Meta.cpuJiffies())
+      val line = obj(
+        Seq("metric" -> jstr(metric), "unit" -> jstr("sec"), "_meta" -> meta) ++
+        (if (partial) Seq("partial" -> "true") else Nil) ++
+        Seq(
+          "shuffle_partitions" -> spark.conf.get("spark.sql.shuffle.partitions"),
+          "codec" -> jstr(spark.conf.get("spark.io.compression.codec")),
+          "heap_gib" -> heapGb.toString,
+          "load" -> s"""{"before":$loadBefore,"after":${Meta.loadavg()},"steal_pct":$stealPct}""") ++
+        (if (disk) Seq("disk_free_gib" -> (s"""{"before":$diskBefore,""" +
+          s""""after":${Meta.diskFreeGb(localDir)},"dir":${jstr(localDir)}}""")) else Nil) ++
+        // the "after" spin only on the final write: it costs ~2 s, and a
+        // partial snapshot only needs the window's entry state
+        (if (cpu) Seq("cpu" -> s"""{"before":$cpuBefore${
+          if (partial) "" else s""","after":${Meta.cpuSpeedJson()}"""}}""") else Nil) ++
+        fields :+ ("sf" -> jstr(sfDir)))
+      val out = sys.env.get("SPARK_GRAFT_PROBE_OUT")
+      out.foreach(p => java.nio.file.Files.write(java.nio.file.Paths.get(p),
+        line.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+      if (!partial) {
+        out.foreach(p => System.err.println(s"[probe] artifact -> $p"))
+        println(line)
       }
-    val spark = extraConf.foldLeft(builder) { case (b, (k, v)) =>
-      b.config(k, v) }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val artifactPath = sys.env.get("SPARK_GRAFT_PROBE_OUT")
+    }
+  }
+
+  /** Query mode: per-query min of samples, every sample, and per sample
+    * the busiest device's (busy_pct, MB read, MB written) — bracketing
+    * EACH timed run, because a window-average gauge hides the burst that
+    * inflated one sample (the steal lesson, r18/r19). */
+  private def isolated(spark: SparkSession, sfDir: String, args: Seq[String]): Unit = {
     val nSamples = sys.env.get("SPARK_GRAFT_PROBE_SAMPLES").map(_.toInt).getOrElse(2)
-    // fail fast on misconfiguration: 0/negative would only surface as
-    // ss.min throwing AFTER every warm run had executed (r14 advisor)
-    require(nSamples >= 1,
-      s"SPARK_GRAFT_PROBE_SAMPLES must be >= 1, got $nSamples")
-    // optional committed baseline artifact (another probe run's JSON)
-    // for the cross-round ratio block below; parsed ONCE at startup so
-    // a bad path fails before any measurement has been paid for
+    // fail fast: 0/negative would only surface as ss.min throwing AFTER
+    // every warm run had executed (r14 advisor)
+    require(nSamples >= 1, s"SPARK_GRAFT_PROBE_SAMPLES must be >= 1, got $nSamples")
+    // parsed ONCE at startup so a bad path fails before any measurement
     val baseline: Option[(String, Map[String, Double])] =
       sys.env.get("SPARK_GRAFT_PROBE_BASELINE").map { p =>
         val node = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -109,177 +192,179 @@ object Probe {
         import scala.jdk.CollectionConverters._
         (p, q.fieldNames().asScala.map(n => n -> q.get(n).asDouble()).toMap)
       }
-    def loadavg(): Double =
-      try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
-        .split("\\s+")(0).toDouble
-      catch { case scala.util.control.NonFatal(_) => -1.0 }
-    def cpuJiffies(): (Long, Long) =
-      try {
-        val n = java.nio.file.Files.readAllLines(
-            java.nio.file.Paths.get("/proc/stat")).get(0)
-          .split("\\s+").drop(1).map(_.toLong)
-        (if (n.length > 7) n(7) else 0L, n.take(8).sum)
-      } catch { case scala.util.control.NonFatal(_) => (0L, 0L) }
-    // drop pinned blocks between runs — same discipline as Bench; a
-    // multi-query probe otherwise accretes earlier queries' cached
-    // state into later ones' memory budget (llm_bigrams read 36 s in
-    // an 8-query probe chain vs ~22 s in the Bench sweep, r13)
-    def quiesce(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      // nudge the ContextCleaner: shuffle files of dereferenced plans
-      // are only deleted once the JVM GCs the shuffle handles — at
-      // sf100 a 10-query chain otherwise accretes tens of GB of dead
-      // spill in spark.local.dir between queries (r14 ENOSPC crash)
-      System.gc()
-    }
-    // warm (uncounted) + nSamples timed runs; returns every sample's
-    // (seconds, device busy_pct, MB read, MB written) — the io triple
-    // brackets EACH timed run, because a window-average gauge hides the
-    // burst that inflated one sample (the steal lesson, r18/r19)
     def run(name: String): Seq[(Double, Double, Double, Double)] = {
       val fn = SparkEntry.queries(name)
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      quiesce()
+      drain(fn(spark, sfDir))
+      quiesce(spark)
       (1 to nSamples).map { _ =>
         val io0 = Meta.diskStats()
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val t = (System.nanoTime() - t0) / 1e9
+        val (t, _) = time(drain(fn(spark, sfDir)))
         val (dev, busy, rdMb, wrMb) = Meta.ioDelta(io0, Meta.diskStats(), t * 1000.0)
-        quiesce()
+        quiesce(spark)
         println(f"[probe] $name $t%.2f s (warm; io $dev busy $busy%.1f%% " +
           f"rd $rdMb%.0f MB wr $wrMb%.0f MB)")
         (t, busy, rdMb, wrMb)
       }
     }
-    val loadBefore = loadavg()
-    val diskBefore = diskFreeGb()
-    val (steal0, jif0) = cpuJiffies()
-    // effective-CPU-speed bracket (r19): fixed-work spin before the
-    // first query and after the last — in a VM, host frequency/SMT
-    // degradation under co-tenant load shows up in NO kernel counter,
-    // only in how fast fixed work actually runs
-    val cpuBefore = Meta.cpuSpeedJson()
-    System.err.println(s"[probe] cpu speed before: $cpuBefore")
-    val done = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Seq[(Double, Double, Double, Double)])]
-    def writeArtifact(partial: Boolean): Unit = artifactPath.foreach { p =>
-      val loadAfter = loadavg()
-      val diskAfter = diskFreeGb()
-      val (steal1, jif1) = cpuJiffies()
-      val stealPct =
-        if (jif1 > jif0) math.round(10000.0 * (steal1 - steal0) / (jif1 - jif0)) / 100.0
-        else -1.0
-      val heapGb = math.round(Runtime.getRuntime.maxMemory * 10.0 / (1L << 30)) / 10.0
-      val sorted = done.map { case (n, ss) => (n, ss.map(_._1), ss) }
-        .sortBy(_._1)
-      val qj = sorted.map { case (n, ss, _) => s"\"$n\":${ss.min}" }
-        .mkString("{", ",", "}")
-      val sj = sorted.map { case (n, ss, _) =>
-        s"\"$n\":[" + ss.map(t =>
-          String.format(java.util.Locale.ROOT, "%.3f", Double.box(t)))
-          .mkString(",") + "]"
-      }.mkString("{", ",", "}")
-      // per-sample [busy_pct, MB read, MB written] of the busiest
-      // device, parallel to `samples` — the I/O-starvation discriminator
-      val ioJ = sorted.map { case (n, _, ss) =>
-        s"\"$n\":[" + ss.map { case (_, b, r, w) =>
-          s"[$b,$r,$w]" }.mkString(",") + "]"
-      }.mkString("{", ",", "}")
-      import Meta.jstr
-      val confJ = extraConf.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
-        .mkString("{", ",", "}")
-      // _meta provenance, same fields as Bench/check.py (r17): a probe
-      // reading is a cross-round instrument, so it names the exact tree
-      // it measured instead of leaving that to commit-adjacency.
-      // Shared helper (r18 advisor: the block had been copy-pasted into
-      // four mains and drifted) — see [[Meta.metaJson]] for the
-      // stderr-drain / untracked-files / porcelain-parse rules.
-      val metaJ = Meta.metaJson()
-      // cross-round comparison BY INSTRUMENT (r18 verdict task 1): with
-      // SPARK_GRAFT_PROBE_BASELINE=<earlier probe artifact> the current
-      // readings are ratioed against the committed baseline's `queries`
-      // map inside THIS artifact — "did the sentinels move" becomes a
-      // field a reader checks, not a python one-liner in round prose.
+    val window = new Window(spark, sfDir, "probe_isolated", disk = true, cpu = true)
+    val done = ArrayBuffer.empty[(String, Seq[(Double, Double, Double, Double)])]
+    def write(partial: Boolean): Unit = {
+      val sorted = done.sortBy(_._1)
+      def perQuery(f: Seq[(Double, Double, Double, Double)] => String): String =
+        obj(sorted.map { case (n, ss) => n -> f(ss) })
+      // cross-round comparison BY INSTRUMENT (r18 verdict task 1): "did
+      // the sentinels move" is a field a reader checks, not prose
       val baselineJ = baseline.map { case (path, base) =>
-        val ratios = sorted.flatMap { case (n, ss, _) =>
-          base.get(n).filter(_ > 0).map(b =>
-            s"${jstr(n)}:${String.format(java.util.Locale.ROOT, "%.3f",
-              Double.box(ss.min / b))}")
-        }.mkString("{", ",", "}")
-        s""""baseline":{"path":${jstr(path)},"rule":"ratio = cur_min / baseline_min","ratios":$ratios},"""
-      }.getOrElse("")
-      val line = s"""{"metric":"probe_isolated","unit":"sec","samples_per_query":$nSamples,""" +
-        s""""_meta":$metaJ,""" +
-        (if (partial) s""""partial":true,""" else "") +
-        (if (extraConf.nonEmpty) s""""extra_conf":$confJ,""" else "") +
-        s""""shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
-        s""""codec":${jstr(spark.conf.get("spark.io.compression.codec"))},""" +
-        s""""heap_gib":$heapGb,""" +
-        s""""load":{"before":$loadBefore,"after":$loadAfter,"steal_pct":$stealPct},""" +
-        s""""disk_free_gib":{"before":$diskBefore,"after":$diskAfter,"dir":${jstr(localDir)}},""" +
-        baselineJ +
-        // "after" spin only on the final write — it costs ~2 s, and the
-        // per-query partial snapshots only need the window's entry state
-        s""""cpu":{"before":$cpuBefore${
-          if (partial) "" else s""","after":${Meta.cpuSpeedJson()}"""}},""" +
-        s""""queries":$qj,"samples":$sj,"io":$ioJ,"sf":${jstr(sfDir)}}"""
-      java.nio.file.Files.write(java.nio.file.Paths.get(p),
-        line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      if (!partial) { System.err.println(s"[probe] artifact -> $p"); println(line) }
+        val ratios = obj(sorted.flatMap { case (n, ss) =>
+          base.get(n).filter(_ > 0).map(b => n -> num3(ss.map(_._1).min / b)) })
+        "baseline" -> (s"""{"path":${jstr(path)},"rule":"ratio = cur_min / baseline_min",""" +
+          s""""ratios":$ratios}""")
+      }
+      window.write(Seq("samples_per_query" -> nSamples.toString) ++ baselineJ ++ Seq(
+        "queries" -> perQuery(_.map(_._1).min.toString),
+        "samples" -> perQuery(_.map(s => num3(s._1)).mkString("[", ",", "]")),
+        "io" -> perQuery(_.map { case (_, b, r, w) => s"[$b,$r,$w]" }
+          .mkString("[", ",", "]"))), partial)
     }
-    // a repeated query name would emit a duplicate key into the
-    // artifact's queries/samples objects, which JSON parsers resolve
-    // inconsistently (r15 advisor) — de-duplicate order-preservingly
-    // and say so, rather than time the same query twice
-    // "sentinels" expands to the code-pinned cross-round basket above
-    val expanded = args.drop(1)
-      .flatMap(a => if (a == "sentinels") sentinels else Seq(a))
-    val argQueries = expanded.distinct
-    if (argQueries.size < expanded.size)
+    // a repeated name would emit a duplicate key into the artifact's
+    // objects, which JSON parsers resolve inconsistently (r15 advisor):
+    // de-duplicate order-preservingly and say so
+    val expanded = args.flatMap(a => if (a == "sentinels") sentinels else Seq(a))
+    val names = expanded.distinct
+    if (names.size < expanded.size)
       System.err.println("[probe] duplicate query names in args de-duplicated: " +
-        expanded.diff(argQueries).mkString(", "))
-    // "logical:<name>" prints the optimized logical plan (what
-    // ProjectionLintSpec sweeps) instead of timing + physical plan
-    val timed = argQueries.flatMap {
+        expanded.diff(names).mkString(", "))
+    names.foreach {
       case n if n.startsWith("logical:") =>
-        val name = n.stripPrefix("logical:")
-        println(SparkEntry.queries(name)(spark, sfDir)
+        println(SparkEntry.queries(n.stripPrefix("logical:"))(spark, sfDir)
           .queryExecution.optimizedPlan.treeString)
-        None
-      // "finalplan:<name>" executes the query ONCE through its own
-      // QueryExecution (foreachPartition, not a noop write — the write
-      // would attach the adaptive plan to a separate execution) and
-      // prints the FINAL adaptive physical plan: the join strategies
-      // AQE actually chose at this SF, not the static planner guess.
-      // The instrument for broadcast-threshold adjudications (r14
-      // verdict task 2: which perplexity_held join grew at sf100).
+      // executed through its own QueryExecution (foreachPartition, not a
+      // noop write, which would attach the adaptive plan to a separate
+      // execution), so the printed plan is the FINAL adaptive one
       case n if n.startsWith("finalplan:") =>
-        val name = n.stripPrefix("finalplan:")
-        val df = SparkEntry.queries(name)(spark, sfDir)
+        val df = SparkEntry.queries(n.stripPrefix("finalplan:"))(spark, sfDir)
         df.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ())
         println(df.queryExecution.executedPlan.treeString)
-        quiesce()
-        None
+        quiesce(spark)
       case name =>
-        val samples = run(name)
-        // plan dump is probe-console material, not artifact material —
-        // suppress it on artifact runs so a 10-query probe's stdout
-        // stays readable
-        if (artifactPath.isEmpty)
+        done += (name -> run(name))
+        // the plan dump is console material: an artifact run's stdout
+        // stays readable without it
+        if (sys.env.get("SPARK_GRAFT_PROBE_OUT").isEmpty)
           SparkEntry.queries(name)(spark, sfDir).explain("formatted")
-        // write the artifact AFTER EVERY query, not once at the end: the
-        // r14 sf100 probe died on ENOSPC at query 7 of 10 and took all
-        // six completed readings with it — a crash must only lose the
-        // in-flight query. partial:true marks an in-progress snapshot;
-        // the final write (below, after the loop) clears it.
-        done += (name -> samples)
-        writeArtifact(partial = true)
-        Some(name -> samples)
+        write(partial = true)
     }
-    assert(timed.sizeIs == done.size) // every timed query reached the artifact
-    writeArtifact(partial = false)
-    spark.stop()
+    write(partial = false)
+  }
+
+  /** Build mode: seconds, published GiB and file count per layout. The
+    * file count (r18 verdict task 2) guards the small-files defect this
+    * probe caught in r18 — a partitionBy without prior co-location wrote
+    * task×cell files, 19,626 for 65 MB at sf10 — which no correctness
+    * board sees, since values are layout-independent: expect ≈ cell or
+    * shard count plus bookkeeping. */
+  private def layoutBuild(spark: SparkSession, sfDir: String): Unit = {
+    // computed BEFORE the window (one metadata-cheap count) and recorded:
+    // the artifact must say which k it priced
+    val kSem = VectorOps.semDedupK(spark, sfDir)
+    val builds: Seq[(String, String, () => String)] = Seq(
+      ("ivf_trained_k8", VectorOps.trainedLayoutDirFor(sfDir, 8),
+        () => VectorOps.ensureTrainedLayout(spark, sfDir)),
+      ("ivf_trained_semdedup_k" + kSem, VectorOps.trainedLayoutDirFor(sfDir, kSem),
+        () => VectorOps.ensureSemDedupLayout(spark, sfDir)),
+      ("pq", VectorOps.pqLayoutDir(sfDir),
+        () => VectorOps.ensurePqLayout(spark, sfDir)),
+      ("dedup_clusters", GraphOps.clusterLayoutDir(sfDir),
+        () => GraphOps.ensureClusterLayout(spark, sfDir)),
+      ("zorder", graft.sources.Formats.zLayoutDir(sfDir),
+        () => graft.sources.Formats.ensureZLayout(spark, sfDir)))
+      // at small SF the corpus-scaled k degenerates to 8 and the two IVF
+      // entries would race on ONE dir: the k8 row already is that build
+      .filterNot { case (n, _, _) => n.startsWith("ivf_trained_semdedup") && kSem == 8 }
+    val window = new Window(spark, sfDir, "layout_build_cold", disk = true, cpu = false)
+    val done = ArrayBuffer.empty[(String, Double, Double, Int)]
+    def write(partial: Boolean): Unit = window.write(Seq(
+      "semdedup_k" -> kSem.toString,
+      "builds" -> obj(done.map { case (n, s, _, _) => n -> num3(s) }),
+      "published_gib" -> obj(done.map { case (n, _, g, _) => n -> g.toString }),
+      "files" -> obj(done.map { case (n, _, _, fc) => n -> fc.toString })), partial)
+    builds.foreach { case (name, dir, build) =>
+      rmTree(new java.io.File(dir))
+      quiesce(spark)
+      val (sec, out) = time(build())
+      val published = files(new java.io.File(out))
+      val gb = math.round(published.map(_.length).sum * 1000.0 / (1L << 30)) / 1000.0
+      println(f"[probe] build $name $sec%.2f s, $gb%.3f GiB published, ${published.size} files")
+      quiesce(spark)
+      done += ((name, sec, gb, published.size))
+      write(partial = true)
+    }
+    write(partial = false)
+  }
+
+  /** Incdedup mode. Per batch: wall seconds, index file count at the
+    * current version (the O(batches) accretion term every join's file
+    * listing pays), cumulative index rows (the O(corpus) join-side term —
+    * 8 fixed-width rows per banded doc) and manifest KiB. */
+  private def incDedup(spark: SparkSession, sfDir: String, nBatches: Int): Unit = {
+    // the post-compaction reading needs its own reserved slice, and a
+    // 1-batch "incremental" run prices nothing incremental
+    require(nBatches >= 2, s"nBatches must be >= 2, got $nBatches")
+    val table = "target/probe/inc_dedup_idx"
+    rmTree(new java.io.File(table)) // cold growth: a fresh index per run
+    // a plain scan, not a localCheckpoint: quiesce drops every pinned
+    // block, and a checkpointed corpus was gone by the second batch
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val mm = docs.agg(min("doc_id"), max("doc_id")).head()
+    val (idLo, idHi) = (mm.getLong(0), mm.getLong(1))
+    // nBatches timed slices + one reserved for the post-compaction read;
+    // contiguous ascending ranges — arrival order IS id order
+    val nSlices = nBatches + 1
+    def slice(i: Int): DataFrame = {
+      val lo = idLo + (idHi - idLo + 1) * i / nSlices
+      val hi = idLo + (idHi - idLo + 1) * (i + 1) / nSlices
+      docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
+    }
+    val window = new Window(spark, sfDir, "incdedup_growth", disk = false, cpu = false)
+    val batchSec = ArrayBuffer.empty[Double]
+    val idxFiles = ArrayBuffer.empty[Int]
+    val idxRows = ArrayBuffer.empty[Long]
+    val manifestKb = ArrayBuffer.empty[Double]
+    val tail = ArrayBuffer.empty[(String, String)] // post-loop readings
+    def write(partial: Boolean): Unit = window.write(Seq(
+      "n_batches" -> nBatches.toString,
+      "batch_sec" -> batchSec.map(num3).mkString("[", ",", "]"),
+      "index_files" -> idxFiles.mkString("[", ",", "]"),
+      "index_rows" -> idxRows.mkString("[", ",", "]"),
+      "manifest_kb" -> manifestKb.map(num3).mkString("[", ",", "]")) ++
+      tail.sortBy(_._1), partial)
+    (0 until nBatches).foreach { i =>
+      val (sec, _) = time(drain(IncrementalDedup.processBatch(spark, table, slice(i))))
+      val v = SnapshotTable.currentVersion(table)
+      val es = SnapshotTable.entries(table, v)
+      batchSec += sec
+      idxFiles += es.size
+      idxRows += es.map(e => math.max(e.rows, 0L)).sum
+      manifestKb += math.round(java.nio.file.Files.size(
+        java.nio.file.Paths.get(table, "manifests", f"manifest-$v%05d")) / 102.4) / 10.0
+      println(f"[probe] incdedup batch ${i + 1}%2d: $sec%.2f s, " +
+        f"index files=${es.size}, rows=${idxRows.last}")
+      quiesce(spark)
+      write(partial = true)
+    }
+    // maintenance: one planned compaction through the format-preserving
+    // wrapper, then the reserved batch against the compacted index
+    val (compactSec, vComp) = time(IncrementalDedup.compactIndex(spark, table))
+    val filesAfter = SnapshotTable.entries(table, vComp).size
+    quiesce(spark)
+    val (postSec, _) = time(drain(IncrementalDedup.processBatch(spark, table, slice(nBatches))))
+    println(f"[probe] incdedup compact $compactSec%.2f s " +
+      f"(${idxFiles.last} -> $filesAfter files), next batch $postSec%.2f s")
+    quiesce(spark)
+    val (fullSec, _) = time(drain(IncrementalDedup.dedupFull(docs)))
+    println(f"[probe] incdedup one-shot dedupFull $fullSec%.2f s")
+    tail ++= Seq("compact_sec" -> num3(compactSec), "files_after_compact" -> filesAfter.toString,
+      "post_compact_batch_sec" -> num3(postSec), "dedup_full_sec" -> num3(fullSec))
+    write(partial = false)
   }
 }

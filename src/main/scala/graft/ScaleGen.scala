@@ -27,13 +27,7 @@ import org.apache.spark.sql.functions._
 object ScaleGen {
   def main(args: Array[String]): Unit = {
     val Array(src, out, factorS) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(src, Session.cpus)
     generate(spark, src, out, factorS.toInt)
     // main OWNS its session; generate() never stops a caller's (the
     // spec drives it inside the shared test session)

@@ -43,15 +43,15 @@ object TouchedQueries {
 
   /** Changed files whose edits cannot change any query's RESULT: tests,
     * tools, docs, and the dev/bench harness mains (Bench times queries,
-    * it does not define them; ScaleGen/Probe generate dev corpora).
-    * Build config (build.sbt, project/) is NOT here — a dependency bump
-    * can change every query's result, so it classifies as ALL. */
+    * it does not define them; ScaleGen generates dev corpora, Probe
+    * measures). Build config (build.sbt, project/) is NOT here — a
+    * dependency bump can change every query's result, so it classifies
+    * as ALL — and neither is graft/Session.scala: a session conf can
+    * change every result too. */
   private[graft] val inert = Seq(
     "src/test/", "tools/", ".md",
     "graft/Bench.scala", "graft/Verify.scala", "graft/ScaleGen.scala",
-    "graft/Probe.scala", "graft/LayoutBuildProbe.scala",
-    "graft/IncDedupProbe.scala", "graft/Meta.scala",
-    "graft/TouchedQueries.scala")
+    "graft/Probe.scala", "graft/Meta.scala", "graft/TouchedQueries.scala")
 
   /** Pure classification: `NONE` (nothing query-bearing changed),
     * `ALL` (shared infra / build config — full board), or the sorted

@@ -1,6 +1,5 @@
 package graft
 import scala.util.control.NonFatal
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,14 +12,7 @@ object Verify {
     // by tools/verify_touched.sh with a git-diff-derived list.
     val only = args.drop(2).headOption
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(sfDir, Session.cpus)
     new java.io.File(outDir).mkdirs()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -46,12 +38,7 @@ object Verify {
         }
       // iterative/caching queries pin blocks (localCheckpoint, persist);
       // release them so 100+ sequential queries don't accrete memory
-      // BLOCKING: an async drop lets one query's pinned blocks (an
-      // iterative build's checkpoints can run to GBs at sf10) overlap
-      // the next query's peak — the r12 sf10 sweep OOM'd the skew demo
-      // on exactly that overlap (fine in isolation, 27.7 s)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      Meta.unpersistAll(spark)
       failed
     }
     // a query that threw leaves no result dir; tools/check.py counts

@@ -26,22 +26,21 @@ object SimplifyVectorIdentities extends Rule[LogicalPlan] {
 }
 
 /** SparkSessionExtensions wiring (SURVEY.md §2 custom-operator tier (c),
-  * spark_guide registration pattern): installs the engine's native
-  * functions into every session built with
-  * `.withExtensions(new GraftExtensions)` — or via config
-  * `spark.sql.extensions=graft.functions.GraftExtensions` — so SQL text
-  * can call `cosine_sim` / `hamming_dist` without per-session
-  * registration calls. */
+  * spark_guide registration pattern) and the ONLY path by which the
+  * engine's native functions, optimizer rule and planner strategy reach
+  * a session: [[graft.Session.build]] installs it on every session, and
+  * a deployment can name it in `spark.sql.extensions`. SQL text can then
+  * call `cosine_sim`, `hamming_dist`, `dot_product` and `normalize_text`,
+  * and no query function registers anything at run time. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[NativeExpressions.CosineSim].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => NativeExpressions.CosineSim(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("hamming_dist"),
-      new ExpressionInfo(classOf[NativeExpressions.HammingDist].getName, "hamming_dist"),
-      (exprs: Seq[Expression]) => NativeExpressions.HammingDist(exprs(0), exprs(1))))
+    def function(name: String, cls: Class[_], build: Seq[Expression] => Expression): Unit =
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    import NativeExpressions._
+    function("cosine_sim", classOf[CosineSim], es => CosineSim(es(0), es(1)))
+    function("hamming_dist", classOf[HammingDist], es => HammingDist(es(0), es(1)))
+    function("dot_product", classOf[DotProduct], es => DotProduct(es(0), es(1)))
+    function("normalize_text", classOf[NormalizeText], es => NormalizeText(es(0)))
     e.injectOptimizerRule(_ => SimplifyVectorIdentities)
     // tier (c) complete: the whole-operator CosineTopK plan node gets a
     // physical strategy in every extended session

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -278,16 +278,4 @@ object NativeExpressions {
   def dot_product(a: Column, b: Column): Column =
     GraftColumnBridge.toColumn(DotProduct(
       GraftColumnBridge.toExpression(a), GraftColumnBridge.toExpression(b)))
-
-  /** SQL registration (B48 surface): `SELECT cosine_sim(a, b)`. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hamming_dist", exprs => HammingDist(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "normalize_text", exprs => NormalizeText(exprs(0)), "built-in")
-  }
 }

@@ -7,7 +7,6 @@ import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
 /** Theta sketch (Dasgupta, Lang, Rhodes, "A Framework for Estimating
@@ -78,8 +77,6 @@ case class ThetaEstimate(child: Expression)
   override protected def withNewChildInternal(newChild: Expression): ThetaEstimate =
     copy(child = newChild)
   override def prettyName: String = "theta_estimate"
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    throw new IllegalStateException("CodegenFallback handles codegen")
 }
 
 /** |A ∩ B| estimate from two serialized theta sketches — the operation
@@ -97,8 +94,6 @@ case class ThetaIntersectEstimate(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): ThetaIntersectEstimate =
     copy(left = newLeft, right = newRight)
   override def prettyName: String = "theta_intersect_estimate"
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    throw new IllegalStateException("CodegenFallback handles codegen")
 }
 
 /** |A \ B| estimate (AnotB) — with union and intersection this closes
@@ -116,8 +111,6 @@ case class ThetaDiffEstimate(left: Expression, right: Expression)
       newLeft: Expression, newRight: Expression): ThetaDiffEstimate =
     copy(left = newLeft, right = newRight)
   override def prettyName: String = "theta_diff_estimate"
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    throw new IllegalStateException("CodegenFallback handles codegen")
 }
 
 object ThetaSketchAgg {

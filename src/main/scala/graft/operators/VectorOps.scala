@@ -164,7 +164,7 @@ object VectorOps {
   /** Publish dir of the trained-IVF layout for any `k`, WITHOUT
     * building — single source of truth for [[ensureTrainedLayout]]'s
     * dir selection, and what the cold-build probe
-    * ([[graft.LayoutBuildProbe]]) deletes to time a from-scratch fit.
+    * ([[graft.Probe]]'s `build` mode) deletes to time a from-scratch fit.
     * k=8 keeps the historical unversioned name (the ANN oracles replay
     * that k verbatim); flat (kf=1) and two-level fits are distinct
     * model artifacts and carry distinct keys. */
@@ -226,7 +226,7 @@ object VectorOps {
     *
     * MEASURED COLD-BUILD COST (r18, probe_r18_build_sf10.json and the
     * clean-tree probe_r18b_build_sf100.json re-take;
-    * graft.LayoutBuildProbe deletes the published dir and times this
+    * `graft.Probe <sfDir> build` deletes the published dir and times this
     * method from scratch): fixed-k (k=8) 15.1 s sf10 → 77.0 s sf100
     * (5.1× on 10× data — sublinear, the fit is 3 bounded Lloyd rounds
     * plus one corpus write); corpus-scaled k ([[semDedupK]]: k=781 →
@@ -1025,17 +1025,14 @@ object VectorOps {
     * ([[graft.plans.CosineTopK]] → `CosineTopKExec`): per-query bounded
     * heaps inside the corpus scan, so the shuffle carries at most
     * #partitions × q × k candidate rows instead of every scored pair —
-    * the partial/final aggregate shape applied to top-k. Strategy is
-    * injected by `GraftExtensions`; sessions built without extensions
-    * get it via `experimental.extraStrategies` here (idempotent). The
-    * 3 query vectors are collected driver-side — broadcast-side model
+    * the partial/final aggregate shape applied to top-k. The strategy
+    * that plans it is injected by `GraftExtensions`, which every
+    * [[graft.Session]] installs; this function changes no session
+    * state. The 3 query vectors are collected driver-side — broadcast-side model
     * state, the same class as IVF probe cells. Bit-identical to
     * [[simSearch]] (VectorOpsSpec pins it), so the SAME oracle family
     * hash-checks a custom SparkPlan against DuckDB. */
   def simSearchExec(s: SparkSession, d: String): DataFrame = {
-    if (!s.experimental.extraStrategies.contains(graft.plans.CosineTopKStrategy))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ graft.plans.CosineTopKStrategy
     val emb = Tables.embeddings(s, d)
     val queries = emb.filter(col("vec_id") < 3)
       .select(col("vec_id"), col("embedding")).collect()

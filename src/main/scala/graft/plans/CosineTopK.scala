@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 /** Whole-operator custom plan (SURVEY.md §2 custom-operator tier (c),
   * completing the ladder next to the tier-(b) native expressions):
   * brute-force cosine top-k as a LogicalPlan + SparkStrategy +
-  * SparkPlan, registered via `GraftExtensions`/`extraStrategies`.
+  * SparkPlan, registered via `GraftExtensions`.
   *
   * Why an operator instead of the declarative window form
   * ([[graft.operators.VectorOps.simSearch]]): the window plan scores

@@ -94,7 +94,7 @@ object Ingest {
     * longer the one it was loaded at. Writes call it once more after they
     * commit, so the next call finds the index current. */
   private def index(spark: SparkSession, catalogPath: String): CatalogIndex = {
-    val root = Listing.fsFor(spark, catalogPath)._2.toString
+    val root = Listing.fsFor(spark.sparkContext.hadoopConfiguration, catalogPath)._2.toString
     val head = SnapshotTable.head(root)
     indexes.compute(root, (_, cur) =>
       if (cur != null && cur.head == head) cur else load(spark, root, head))
@@ -107,7 +107,7 @@ object Ingest {
     if (head._1 == 0)
       CatalogIndex(head, SnapshotTable.Manifest.empty, EmptySchema, Vector.empty, Vector.empty)
     else {
-      val fs = Listing.fsFor(spark, table)._1
+      val fs = Listing.fsFor(spark.sparkContext.hadoopConfiguration, table)._1
       val base = SnapshotTable.manifest(table, head._1)
       val entry = base.entries.map(e => fs.makeQualified(new Path(e.path)) -> e.path).toMap
       val df = base.read(spark)

@@ -1,7 +1,7 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.SparkSession
 
 /** Content signature of a parquet table on any Hadoop filesystem: the
   * (path, length, mtime) of every data file under it. The schema memo in
@@ -43,14 +43,14 @@ private[graft] object Listing {
 
   /** Hadoop FileSystem for `path`, by URI scheme (`file:`, `mock:` in
     * tests, `s3a:`/`hdfs:` on a cluster), and the path qualified on it. */
-  def fsFor(spark: SparkSession, path: String): (FileSystem, Path) = {
+  def fsFor(conf: Configuration, path: String): (FileSystem, Path) = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(conf)
     (fs, fs.makeQualified(p))
   }
 
   /** [[signature]] of the table at `path`, resolved through `conf`. */
-  def signature(path: String, conf: org.apache.hadoop.conf.Configuration): Signature = {
+  def signature(path: String, conf: Configuration): Signature = {
     val p = new Path(path)
     signature(parquetFiles(p.getFileSystem(conf), p))
   }

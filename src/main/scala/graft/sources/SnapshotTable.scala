@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import java.util.UUID
 import scala.jdk.CollectionConverters._
 import scala.util.Using
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -118,9 +119,17 @@ object SnapshotTable {
   /** A column name or string stat that cannot break a manifest line. */
   private def delimiterSafe(s: String): Boolean = !s.exists("|;=:\n\r".contains(_))
 
-  /** `<table>/<sub>` qualified on the table's filesystem. */
+  /** Hadoop configuration when no session exists: the calls that take
+    * no session ([[versions]], [[manifest]], [[expireSnapshots]], …)
+    * then still resolve `file:` and the default filesystems. */
+  private lazy val plainConf = new Configuration()
+
+  /** `<table>/<sub>` qualified on the table's filesystem, resolved through
+    * the active or default session's Hadoop configuration, or
+    * [[plainConf]] before any session exists. */
   private def under(table: String, sub: String): (FileSystem, Path) =
-    Listing.fsFor(SparkSession.active, s"$table/$sub")
+    Listing.fsFor(SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .fold(plainConf)(_.sparkContext.hadoopConfiguration), s"$table/$sub")
 
   private def manifestPath(table: String, version: Long): (FileSystem, Path) =
     under(table, f"manifests/manifest-$version%05d")

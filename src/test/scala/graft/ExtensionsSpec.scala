@@ -43,9 +43,8 @@ class ExtensionsSpec extends SparkSpec {
         .withExtensions(new graft.functions.GraftExtensions)
         .getOrCreate()
       import s2.implicits._
-      // deliberately NOT simSearchExec (which self-registers via
-      // extraStrategies): build the plan node directly — only the
-      // extension-injected strategy can plan it here
+      // build the plan node directly — only the extension-injected
+      // strategy can plan it here
       val corpus = Seq((3L, Seq(1.0f, 0.0f)), (4L, Seq(0.6f, 0.8f)),
         (5L, Seq(0.0f, 1.0f))).toDF("vec_id", "embedding")
       val df = org.apache.spark.sql.GraftColumnBridge.ofRows(s2,

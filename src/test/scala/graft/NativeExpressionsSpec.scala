@@ -66,7 +66,6 @@ class NativeExpressionsSpec extends SparkSpec {
   }
 
   test("SQL registration: cosine_sim/hamming_dist callable from spark.sql") {
-    NativeExpressions.register(spark)
     emb.createOrReplaceTempView("emb_native_test")
     val n = spark.sql(
       """SELECT a.vec_id, cosine_sim(a.embedding, b.embedding) AS s

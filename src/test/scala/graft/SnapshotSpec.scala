@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import java.util.ConcurrentModificationException
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sources.SnapshotTable
 
@@ -73,6 +74,21 @@ class SnapshotSpec extends SparkSpec {
     assert(SnapshotTable.read(spark, t).count() == 150)
     assert(SnapshotTable.readVersion(spark, t, 1).count() == 100)
     assert(SnapshotTable.versions(t) == Seq(1L, 2L))
+  }
+
+  test("versions and manifest resolve the filesystem without any session") {
+    val t = tmp()
+    SnapshotTable.commit(spark, t, (1 to 10).toDF("n"))
+    val shared = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      assert(SnapshotTable.versions(t) == Seq(1L))
+      assert(SnapshotTable.manifest(t, 1L).entries.map(_.rows).sum == 10L)
+    } finally {
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+    }
   }
 
   test("overwrite commit replaces the listing; replaced data stays readable at old versions") {

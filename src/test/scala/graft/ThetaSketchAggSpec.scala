@@ -59,6 +59,30 @@ class ThetaSketchAggSpec extends SparkSpec {
     assert(math.abs(diff - 39999) <= 4000, s"diff=$diff")
   }
 
+  test("the estimates compile: CODEGEN_ONLY gives the default mode's values") {
+    // A = 1..3000, B = 2000..5000: below k, so every value is exact
+    val a = (1 to 3000).map(i => ("a", s"u$i"))
+    val b = (2000 to 5000).map(i => ("b", s"u$i"))
+    def estimates(): Seq[Double] = {
+      val r = (a ++ b).toDF("g", "x").repartition(4)
+        .groupBy("g").agg(theta_sketch(col("x")).as("sk"))
+        .agg(first(when(col("g") === "a", col("sk")), ignoreNulls = true).as("ska"),
+          first(when(col("g") === "b", col("sk")), ignoreNulls = true).as("skb"))
+        .select(theta_estimate(col("ska")),
+          theta_intersect_estimate(col("ska"), col("skb")),
+          theta_diff_estimate(col("ska"), col("skb")))
+        .head()
+      Seq(r.getDouble(0), r.getDouble(1), r.getDouble(2))
+    }
+    val default = estimates()
+    assert(default == Seq(3000.0, 1001.0, 1999.0))
+    val factoryMode = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
+    try {
+      spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+      assert(estimates() == default)
+    } finally spark.conf.set("spark.sql.codegen.factoryMode", factoryMode)
+  }
+
   test("serialized partials round-trip: merge of deserialized halves is consistent") {
     import org.apache.datasketches.memory.Memory
     import org.apache.datasketches.theta.SetOperation

@@ -26,6 +26,10 @@ class TouchedQueriesSpec extends AnyFunSuite {
     TouchedQueries.modules.keys.foreach { k =>
       assert(new java.io.File(s"src/main/scala/graft/$k").exists(), k)
     }
+    // and an inert entry for a deleted main cannot linger
+    TouchedQueries.inert.filter(_.startsWith("graft/")).foreach { k =>
+      assert(new java.io.File(s"src/main/scala/$k").exists(), k)
+    }
   }
 
   test("unknown main-source files force the full board") {
@@ -33,6 +37,8 @@ class TouchedQueriesSpec extends AnyFunSuite {
       Seq("src/main/scala/graft/operators/BrandNew.scala")) == "ALL")
     assert(TouchedQueries.classify(
       Seq("src/main/scala/graft/Tables.scala")) == "ALL")
+    assert(TouchedQueries.classify(
+      Seq("src/main/scala/graft/Session.scala")) == "ALL")
   }
 
   test("the ALL/NONE sentinels stay out of the query-name namespace") {
